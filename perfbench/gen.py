@@ -124,16 +124,19 @@ class QuerySpec:
 
 #: round-robin order of the query_cold mix
 COLD_KINDS = (
-    "term_common", "term_rare", "and", "or_flat", "or_wand",
+    "term_common", "term_rare", "and", "or_flat",
     "phrase", "prefix", "fuzzy", "smart",
 )
+#: a flat OR of head terms whose summed df crosses the WAND bar
+WAND_KIND = "or_wand"
 
 
-def cold_queries(seed: int, corpus: ZipfCorpus):
+def cold_queries(seed: int, corpus: ZipfCorpus, kinds: tuple = COLD_KINDS):
     """Endless stream of distinct queries over ``corpus`` (never repeats, so
     every query misses the compiled-query cache). Kinds cycle through
-    :data:`COLD_KINDS`; each kind draws its terms from the seeded stream."""
-    rng = _rng(seed, "queries")
+    ``kinds``; each kind draws its terms from the seeded stream of that
+    kind list."""
+    rng = _rng(seed, "queries:" + ",".join(kinds))
     words, df = corpus.words, corpus.df
     ranked = np.argsort(-df, kind="stable")  # ranks ordered by actual df
     common = [int(r) for r in ranked[:300]]
@@ -166,11 +169,14 @@ def cold_queries(seed: int, corpus: ZipfCorpus):
             terms = sorted({words[pick(mid)] for _ in range(3)})
             return QuerySpec(kind, tuple(terms))
         if kind == "or_wand":
-            # shuffled head terms until the summed df crosses the WAND bar
-            order = rng.permutation(len(head))
+            # the head terms, most frequent first, until the summed df
+            # crosses the WAND bar (~60 terms), minus one seeded term to
+            # keep each query of the stream distinct
+            skip = int(rng.integers(len(head) // 4))
             terms, total = [], 0
-            for j in order:
-                r = head[int(j)]
+            for j, r in enumerate(head):
+                if j == skip:
+                    continue
                 terms.append(words[r])
                 total += int(df[r])
                 if total >= WAND_MIN_TOTAL_DF:
@@ -192,7 +198,7 @@ def cold_queries(seed: int, corpus: ZipfCorpus):
             return QuerySpec(kind, (f"{words[a]} {words[b][:4]}",), (words[a],))
         raise ValueError(kind)
 
-    for kind in itertools.cycle(COLD_KINDS):
+    for kind in itertools.cycle(kinds):
         while True:
             spec = make(kind)
             if spec not in seen:

@@ -35,8 +35,11 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 STATE = ROOT / ".perfbench"
 #: Spark session size: this benchmark's reference host has 4 cores and 15 GB
-#: shared with other tenants; the sf0.1 and Zipf indexes are a few MB
-CORES = 4
+#: shared with other tenants; the sf0.1 and Zipf indexes are a few MB. Two
+#: task slots leave the driver, the JVM's own threads and the host headroom,
+#: so a stolen vCPU delays a task less
+CORES = 2
+SHUFFLE_PARTITIONS = 4
 DRIVER_MEMORY = "2g"
 
 
@@ -107,8 +110,9 @@ def _start_spark(work: Path):
         SparkSession.builder.master(f"local[{cores}]")
         .appName("perfbench")
         .config("spark.driver.memory", DRIVER_MEMORY)
-        # bench.py's session settings, minus its 32g driver heap
-        .config("spark.sql.shuffle.partitions", "8")
+        # bench.py's session settings, minus its 32g driver heap and with
+        # half its 8 shuffle partitions: fewer tasks per query stage
+        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -19,6 +19,7 @@ from __future__ import annotations
 import hashlib
 import itertools
 import json
+import math
 import os
 import statistics
 import sys
@@ -40,6 +41,10 @@ from tracing import dir_bytes
 SUITE_CHECKSUM = "4d20e9338c1b61f6"
 #: bench suite queries ingest ranks before and after every merge
 INGEST_GATES = ("term", "term2", "bool_or", "phrase", "prefix", "smart")
+#: untimed distinct queries (the first half round of the mix) query_cold
+#: runs before its window: the JVM's first round runs ~1.6x slower than
+#: later ones
+WARMUP_QUERIES = 4
 #: timed reloads query_cold makes after its query window; reload_ms is
 #: their median
 RELOADS = 3
@@ -174,11 +179,6 @@ def _ingest_cycle(env, run, src, cycle, n_docs, text_bytes) -> None:
         ix.add_dataframe(src)
     _record_bytes(run, ix, text_bytes)
     gates = dict(suite(ix))
-    with op("reload"), run.timed("reload_ms"):
-        ix.reload()
-        ix.search(gates["term"], limit=10)
-    run.check(ix.snapshot.next_doc_id == n_docs,
-              f"build: {ix.snapshot.next_doc_id} docs, want {n_docs}")
 
     appended = gen.append_docs(env.seed, cycle)
     extra = spark.createDataFrame(
@@ -197,8 +197,9 @@ def _ingest_cycle(env, run, src, cycle, n_docs, text_bytes) -> None:
     with op("reload"), run.timed("reload_ms"):
         ix.reload()
         check_marker(0)
+    # the build's n_docs plus the appended segment's
     run.check(ix.snapshot.next_doc_id == total,
-              f"append: {ix.snapshot.next_doc_id} docs, want {total}")
+              f"build + append: {ix.snapshot.next_doc_id} docs, want {total}")
     before = {}
     for name in INGEST_GATES:
         with op("query"), run.timed("cold_query_ms"):
@@ -244,21 +245,30 @@ def query_cold(env: Env, run: Run, t_process: float) -> None:
     record = json.loads(record_path.read_text()) if record_path.exists() else {}
     doc_words = [None] * n  # lazily built token sets for the membership check
     digest = hashlib.sha256()
-    run.start(t_process)
-    for i, spec in enumerate(gen.cold_queries(env.seed, corpus)):
-        # whole rounds of the kind mix only, so every run's p50 weighs the
-        # kinds alike
-        if i and i % len(gen.COLD_KINDS) == 0 and run.expired():
-            break
-        hits = run.guarded(lambda: _cold_query(run, ix, spec))
+
+    def query(key, spec, measured=True):
+        hits = run.guarded(lambda: _cold_query(run, ix, spec, measured))
         if hits is None:
-            continue
+            return
         _check_cold(run, corpus, doc_words, spec, hits)
-        line = f"{i}:{spec.kind}:{'|'.join(spec.args)}:{','.join(hits)}"
+        line = f"{key}:{spec.kind}:{'|'.join(spec.args)}:{','.join(hits)}"
         h = hashlib.sha256(line.encode()).hexdigest()[:16]
-        run.check(record.setdefault(str(i), h) == h,
-                  f"query {i} ({spec.kind}) results differ from an earlier run")
+        run.check(record.setdefault(key, h) == h,
+                  f"query {key} ({spec.kind}) results differ from an earlier run")
         digest.update(line.encode())
+
+    n_kinds = len(gen.COLD_KINDS)
+    for i, spec in enumerate(gen.cold_queries(env.seed, corpus)):
+        if i == WARMUP_QUERIES:
+            run.start(t_process)
+        # whole rounds (any n_kinds consecutive queries hold each kind once)
+        # only, so every run weighs the kinds alike
+        elif i > WARMUP_QUERIES and (i - WARMUP_QUERIES) % n_kinds == 0 and run.expired():
+            break
+        query(str(i), spec, measured=i >= WARMUP_QUERIES)
+    # one WAND-path OR per run, outside the rounds: it costs as much as a
+    # third of a round, so one per round would leave fewer samples
+    query("wand", next(gen.cold_queries(env.seed, corpus, (gen.WAND_KIND,))))
     run.info["results_sha"] = digest.hexdigest()[:16]
     # after the window, so the samples see the same warmed-up query path
     # on every run
@@ -271,10 +281,12 @@ def query_cold(env: Env, run: Run, t_process: float) -> None:
     tmp.replace(record_path)
 
 
-def _cold_query(run, ix, spec) -> list:
-    with run.op("query"):
+def _cold_query(run, ix, spec, measured: bool) -> list:
+    with run.op("query", measured):
         with run.tracer.span("plan.build"):
             q = gen.build_query(ix, spec)
+        if not measured:
+            return ix.search(q, limit=10)
         with run.timed("cold_query_ms"):
             return ix.search(q, limit=10)
 
@@ -399,6 +411,14 @@ def summarize(run: Run) -> dict:
     for kind in ("cold", "warm"):
         key = f"{kind}_query_ms"
         med(key, f"{kind}_query_p50_ms", "ms")
+        if s.get(key):
+            # every query of a run weighs alike, the slowest kinds no more
+            # than the fastest; the p50 of a run's 9-12 queries of 6-9
+            # kinds jumps between kinds from seed to seed
+            out[f"{kind}_query_geomean_ms"] = {
+                "value": math.exp(statistics.fmean(math.log(v) for v in s[key])),
+                "unit": "ms", "samples": len(s[key]),
+            }
         tail = percentile_tail(s.get(key, []))
         if tail:
             out[f"{kind}_query_tail_ms"] = {
