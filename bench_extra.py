@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 from bench import build_schema, corpus  # noqa: E402  (frozen bench's own corpus)
 from tantiny_spark.build import build_segment  # noqa: E402
 from tantiny_spark.index import Index  # noqa: E402
-from tantiny_spark.storage import IndexStorage  # noqa: E402
+from tantiny_spark.storage import IndexStorage, dict_table  # noqa: E402
 
 
 def main():
@@ -91,29 +91,17 @@ def main():
         )
         mark("postings_write", t0)
 
-        sc.setJobDescription("build: blocks derive")
-        t0 = time.time()
-        stored = spark.read.parquet(os.path.join(seg_dir, "postings"))
-        tables["blocks"](stored).write.mode("overwrite").parquet(
-            os.path.join(seg_dir, "blocks")
-        )
-        mark("blocks_write", t0)
-
         sc.setJobDescription("build: dict derive")
         t0 = time.time()
-        dict_src = (
-            spark.read.parquet(os.path.join(seg_dir, "blocks"))
-            if getattr(tables["dict"], "input_table", "postings") == "blocks"
-            else stored
-        )
-        tables["dict"](dict_src).write.mode("overwrite").parquet(
+        stored = spark.read.parquet(os.path.join(seg_dir, "postings"))
+        dict_table(stored).write.mode("overwrite").parquet(
             os.path.join(seg_dir, "dict")
         )
         mark("dict_write", t0)
 
         sc.setJobDescription("build: stats write")
         t0 = time.time()
-        stats_df = tables["stats"]() if callable(tables["stats"]) else tables["stats"]
+        stats_df = tables["stats"]()
         stats_df.write.mode("overwrite").parquet(os.path.join(seg_dir, "stats"))
         mark("stats_write", t0)
 

@@ -9,7 +9,7 @@ recorded, so phrases work within a leaf); integers / doubles / booleans
 become single typed terms. Queries compile onto the EXISTING plan algebra —
 a json term query is a plain :class:`~tantiny_spark.plan.Term` on the
 encoded term, a json phrase a plain Phrase, path-exists a Prefix — so the
-executor, WAND, the sorted (field, term, doc_id) postings layout and the
+executor, the sorted (field, term, doc_id) postings layout and the
 Parquet min/max pruning all apply unchanged.
 
 Like Tantivy, the fieldnorm of a json field is per (doc, field) — ONE value

@@ -10,7 +10,8 @@ tokenize, and build the four index tables for one *segment*:
                 (field, term, doc_id) so Parquet row-group min/max stats prune
                 term lookups — the columnar stand-in for Tantivy's posting
                 lists + fieldnorm file
-- ``dict``      (field, term, df) — the term dictionary
+- ``dict``      (field, term, df) — the term dictionary, derived by the
+                storage layer from the written postings
 - ``stats``     (field, num_docs, total_tokens, avgdl) — BM25 global stats
 
 Scale notes (the 100 TB story):
@@ -20,10 +21,7 @@ Scale notes (the 100 TB story):
   break resume + rank identity).
 - the tf/positions aggregation keys on (field, term, doc_id) — high
   cardinality, so Zipfian head terms do NOT concentrate on one reducer; the
-  dictionary count uses map-side partial aggregation. The only per-term
-  grouping (block encoding, wand.py) buckets by doc_id span, which bounds any
-  group at SPAN docs regardless of term frequency — skew-proof by
-  construction.
+  dictionary count uses map-side partial aggregation.
 - all per-row work is Arrow-batched pandas UDFs; everything else is built-in
   JVM expressions inside whole-stage codegen.
 """
@@ -50,6 +48,37 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("norm_id", T.IntegerType(), True),
     ]
 )
+
+
+STATS_SCHEMA = "field string, num_docs long, total_tokens long, avgdl double"
+
+
+def stats_table(
+    spark: SparkSession, schema: IndexSchema, docs: DataFrame
+) -> tuple:
+    """BM25 global stats rows (field, num_docs, total_tokens, avgdl) of a
+    set of per-doc rows carrying each text/json field's ``<field>__len``:
+    ONE aggregation job for the doc count and every field's token total.
+    String and facet fields count one token per doc. Returns
+    ``(stats DataFrame, num_docs)``."""
+    agg_cols = [F.count("*").alias("__n")]
+    for f in schema.text_fields + schema.json_fields:
+        agg_cols.append(F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}"))
+    agg_row = docs.agg(*agg_cols).collect()[0]
+    n_docs = int(agg_row["__n"])
+    rows = []
+    for f in schema.text_fields + schema.json_fields:
+        total = int(agg_row[f"__tot_{f}"] or 0)
+        rows.append((f, n_docs, total, (total / n_docs) if n_docs else 0.0))
+    for f in schema.string_fields + schema.facet_fields:
+        rows.append((f, n_docs, n_docs, 1.0))
+    # via pandas → Arrow LocalRelation: a plain Python list would go
+    # through the RDD path and spawn defaultParallelism Python workers
+    # for 2 rows
+    pdf = pd.DataFrame(
+        rows, columns=["field", "num_docs", "total_tokens", "avgdl"]
+    ).astype({"num_docs": "int64", "total_tokens": "int64", "avgdl": "float64"})
+    return spark.createDataFrame(pdf, schema=STATS_SCHEMA), n_docs
 
 
 def assign_doc_ids(
@@ -430,10 +459,9 @@ def build_segment(
     columnar files back (column-pruned, JVM-only). Without it the analyzed
     rows are memory-persisted instead; at scale (and in the benchmarks) the
     staging path wins: no giant nested-struct InMemoryRelation churning the
-    heap, and the tokenizer runs exactly once either way. ``dict`` and
-    ``blocks`` are returned as CALLABLES over the stored postings table —
-    the storage layer writes postings first and derives both from the
-    written files (see storage.write_segment)."""
+    heap, and the tokenizer runs exactly once either way. The ``dict`` is
+    not built here: the storage layer derives it from the written postings
+    files (see storage.write_segment)."""
     sid = schema.id_field
     cols = [F.col(sid).cast("string").alias("id")]
     for f in schema.string_fields:
@@ -570,8 +598,8 @@ def build_segment(
             n_post_parts, (staged_bytes // POSTINGS_BYTES_PER_PARTITION) + 1
         )
         # small-input ceiling: don't range-shuffle a few MB of postings into
-        # a partition per core — each downstream phase (block encode, dict,
-        # stored reads) pays per-partition overhead
+        # a partition per core — each downstream phase (dict, stored
+        # reads) pays per-partition overhead
         n_post_parts = max(
             2,
             min(n_post_parts, (staged_bytes // POSTINGS_MIN_BYTES_PER_PARTITION) + 1),
@@ -580,64 +608,15 @@ def build_segment(
         n_post_parts, "field", "term", "doc_id"
     ).sortWithinPartitions("field", "term", "doc_id")
 
-    # --- dictionary + blocks: derived from the STORED postings files -------
-    # (callables over the written table; storage.write_segment invokes them
-    # after the postings write so neither re-runs the build lineage)
-    def derive_dict(stored_blocks: DataFrame) -> DataFrame:
-        # df per (field, term) = Σ block n — every posting row lands in
-        # exactly one block, so summing block sizes over the (much smaller:
-        # 1 row per ≤128 postings) stored blocks table gives the same df as
-        # counting the postings rows, for ~1% of the scan bytes. At 100 TB
-        # the dictionary derive reads the block metadata, not the posting
-        # lists.
-        return stored_blocks.groupBy("field", "term").agg(
-            F.sum("n").cast("long").alias("df")
-        )
-
-    derive_dict.input_table = "blocks"
-
-    def derive_blocks(stored: DataFrame) -> DataFrame:
-        from tantiny_spark.wand import build_blocks
-
-        return build_blocks(stored)
-
     # stats: one aggregation job for every field's token totals + the doc
     # count — DEFERRED (0-arg callable) so storage.write_segment runs it
     # concurrently with the docs/postings writes instead of as a serial
     # barrier between staging and the table writes. The doc count itself is
     # n_input (the analyzer emits exactly one doc row per input row), so the
     # commit path never waits on this job.
-    def make_stats() -> DataFrame:
-        agg_cols = [F.count("*").alias("__n")]
-        for f in schema.text_fields + schema.json_fields:
-            agg_cols.append(F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}"))
-        agg_row = doc_rows.agg(*agg_cols).collect()[0]
-        n_docs = int(agg_row["__n"])
-        stats_rows = []
-        for f in schema.text_fields + schema.json_fields:
-            total = int(agg_row[f"__tot_{f}"] or 0)
-            stats_rows.append(
-                (f, n_docs, total, (total / n_docs) if n_docs else 0.0)
-            )
-        for f in schema.string_fields + schema.facet_fields:
-            stats_rows.append((f, n_docs, n_docs, 1.0))
-        # via pandas → Arrow LocalRelation: a plain Python list would go
-        # through the RDD path and spawn defaultParallelism Python workers
-        # for 2 rows
-        return spark.createDataFrame(
-            pd.DataFrame(
-                stats_rows, columns=["field", "num_docs", "total_tokens", "avgdl"]
-            ).astype({"num_docs": "int64", "total_tokens": "int64", "avgdl": "float64"}),
-            schema="field string, num_docs long, total_tokens long, avgdl double",
-        )
-
-    make_stats.input_table = None  # independent of any stored table
-
     return {
         "docs": docs,
         "postings": postings,
-        "dict": derive_dict,  # callable(stored blocks) -> DataFrame
-        "stats": make_stats,  # 0-arg callable -> DataFrame
-        "blocks": derive_blocks,  # callable(stored postings) -> DataFrame
+        "stats": lambda: stats_table(spark, schema, doc_rows)[0],
         "n_docs": n_input,  # one doc row per input row, counted up front
     }

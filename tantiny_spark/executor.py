@@ -66,11 +66,6 @@ class SearchContext:
     postings: DataFrame
     dictionary: DataFrame
     stats: DataFrame
-    blocks: DataFrame | None = None  # compressed block postings (wand.py)
-    # doc_ids tombstoned since the last merge (small); WAND anti-joins its
-    # decoded docs against this so deleted docs baked in the blocks can't
-    # score or distort τ
-    dead_docs: DataFrame | None = None
     # slim persisted (doc_id, id) projection: the only per-query hot join.
     # The full docs table is NOT cached — at web scale it can't be, and
     # range/negation scans want Parquet fast-field pushdown instead.
@@ -93,7 +88,7 @@ class SearchContext:
         """Unpersist the cached hot tables (ids/dictionary/stats). Called by
         Index.reload() so long-running readers don't accumulate one cached
         relation set per snapshot generation."""
-        for df in (self.ids, self.dictionary, self.stats, self.dead_docs):
+        for df in (self.ids, self.dictionary, self.stats):
             if df is None:
                 continue
             try:
@@ -209,7 +204,7 @@ def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
     if isinstance(node, P.Empty):
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
     if isinstance(node, P.Term):
-        return _term(node, ctx)
+        return _term_or(node.field, {node.term: 1.0}, ctx)
     if isinstance(node, P.Phrase):
         return _phrase(node, ctx)
     if isinstance(node, P.PhrasePrefix):
@@ -289,11 +284,7 @@ def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
             )
         return out
     if isinstance(node, P.Disjunction):
-        children = [compile_plan(c, ctx) for c in node.children]
-        unioned = children[0]
-        for child in children[1:]:
-            unioned = unioned.unionByName(child)
-        return unioned.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        return _disjunction(node, ctx)
     if isinstance(node, P.Negation):
         matched = compile_plan(node.child, ctx)
         return ctx.docs.join(matched, "doc_id", "left_anti").select(
@@ -404,20 +395,64 @@ def _boolean_occur(node: P.BooleanOccur, ctx: SearchContext) -> DataFrame:
     return base
 
 
-def _term(node: P.Term, ctx: SearchContext) -> DataFrame:
-    n, avgdl = ctx.field_stats(node.field)
-    df = ctx.term_dfs(node.field, [node.term])[node.term]
-    p = ctx.postings.where(
-        (F.col("field") == node.field) & (F.col("term") == node.term)
-    ).select("doc_id", "norm_id")
-    # tf = 1: reference term queries read postings without freqs (Basic)
-    return p.select(
-        "doc_id",
-        _bm25_expr(
-            F.lit(1.0), _decode_norm(F.col("norm_id")),
-            F.lit(float(avgdl)), F.lit(float(df)), F.lit(float(n)),
-        ).alias("score"),
+def _disjunction(node: P.Disjunction, ctx: SearchContext) -> DataFrame:
+    """Sum of the matching children's scores: one union + partial-
+    aggregatable sum groupBy. The (possibly boosted) Term children are
+    gathered by field first; each field compiles to ONE pruned postings
+    scan (_term_or) instead of a scan per term, so an N-term OR reads and
+    shuffles its postings once. Every other child compiles on its own."""
+    by_field: dict = {}  # field -> [(term, boost factor)]
+    others = []
+    for child in node.children:
+        inner, factor = child, 1.0
+        while isinstance(inner, P.Boost):
+            factor *= inner.factor
+            inner = inner.child
+        if isinstance(inner, P.Term):
+            by_field.setdefault(inner.field, []).append((inner.term, factor))
+        else:
+            others.append(child)
+    parts = [compile_plan(c, ctx) for c in others]
+    for field, terms in by_field.items():
+        weights: dict = {}
+        for term, factor in terms:
+            weights[term] = weights.get(term, 0.0) + factor
+        parts.append(_term_or(field, weights, ctx))
+    unioned = parts[0]
+    for part in parts[1:]:
+        unioned = unioned.unionByName(part)
+    return unioned.groupBy("doc_id").agg(F.sum("score").alias("score"))
+
+
+def _term_or(field: str, weights: dict, ctx: SearchContext) -> DataFrame:
+    """One ``field = f AND term IN (...)`` postings scan; a single term is a
+    plain term query (Spark plans a one-element IN as ``EqualTo``). Each row
+    scores with tf = 1 (reference term queries read postings without freqs)
+    and its term's df, times the term's weight: the sum of its boosts over
+    its occurrences in the OR, so a duplicated term adds up exactly as
+    separate children do."""
+    n, avgdl = ctx.field_stats(field)
+    terms = sorted(weights)
+    dfs = ctx.term_dfs(field, terms)
+    keys = [F.lit(t) for t in terms]
+
+    def per_term(values: dict):
+        if len(terms) == 1:
+            return F.lit(float(values[terms[0]]))
+        pairs = [
+            c for t, key in zip(terms, keys) for c in (key, F.lit(float(values[t])))
+        ]
+        return F.element_at(F.create_map(*pairs), F.col("term"))
+
+    score = _bm25_expr(
+        F.lit(1.0), _decode_norm(F.col("norm_id")),
+        F.lit(float(avgdl)), per_term(dfs), F.lit(float(n)),
     )
+    if any(w != 1.0 for w in weights.values()):
+        score = score * per_term(weights)
+    return ctx.postings.where(
+        (F.col("field") == field) & F.col("term").isin(*keys)
+    ).select("doc_id", score.alias("score"))
 
 
 def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
@@ -776,57 +811,6 @@ def _facet(node: P.Facet, ctx: SearchContext) -> DataFrame:
     return p.select("doc_id", F.lit(scoring.idf(df, n)).alias("score"))
 
 
-def try_wand_topk(
-    node: P.Query, ctx: SearchContext, k: int, min_total_df: int = 100_000
-) -> DataFrame | None:
-    """Block-max fast path: if the plan is a (possibly boosted) term query or
-    a disjunction of term queries over ONE field, and the snapshot has a
-    tombstone-free block table, answer it via wand.wand_topk — metadata-
-    pruned bucket decode instead of a full postings scan. Returns None when
-    not applicable (caller falls back to the naive compiled plan, which is
-    also the correctness oracle in tests)."""
-    factor = 1.0
-    while isinstance(node, P.Boost):
-        factor *= node.factor
-        node = node.child
-    if isinstance(node, P.Term):
-        terms = [node]
-    elif isinstance(node, P.Disjunction) and all(
-        isinstance(c, P.Term) for c in node.children
-    ):
-        terms = list(node.children)
-        if len({c.term for c in terms}) != len(terms):
-            return None  # duplicate terms: naive path sums per occurrence
-    else:
-        return None
-    fields = {t.field for t in terms}
-    if len(fields) != 1 or ctx.blocks is None:
-        return None
-    field = fields.pop()
-
-    n, avgdl = ctx.field_stats(field)
-    if n == 0:
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    names = sorted({t.term for t in terms})
-    dfs = ctx.term_dfs(field, names)
-    weights = {
-        t: scoring.idf(dfs[t], n) * factor for t in names if dfs[t] > 0
-    }
-    if not weights:
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    if sum(dfs.values()) < min_total_df:
-        # short posting lists: the pruned flat scan is already cheap and the
-        # naive plan runs in one job vs WAND's champion+survivor passes
-        return None
-
-    from tantiny_spark.wand import wand_topk
-
-    return wand_topk(
-        ctx.blocks, [(field, t) for t in sorted(weights)], weights, float(avgdl), k,
-        dead_docs=ctx.dead_docs,
-    )
-
-
 def top_k(
     result: DataFrame, ctx: SearchContext, limit: int = 10, offset: int = 0
 ) -> DataFrame:
@@ -855,8 +839,7 @@ BATCH_SCHEMA = T.StructType(
 
 def batch_rank_prune(tagged: DataFrame, k: int) -> DataFrame:
     """Per-partition, per-query top-(k+ties) pre-filter for the batched
-    search path — the same shuffle-free prune WAND's final rank uses
-    (wand._local_rank_prune), keyed by query tag.
+    search path: a shuffle-free prune keyed by query tag.
 
     A row whose own partition already holds >=k strictly-greater scores
     FOR ITS QUERY has global per-query rank >k, so dropping it cannot

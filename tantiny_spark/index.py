@@ -23,15 +23,23 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from tantiny_spark import plan as P
-from tantiny_spark.build import build_segment
+from tantiny_spark.build import build_segment, stats_table
 from tantiny_spark.errors import (
     IndexWriterBusyError, UnexpectedNone, UnsupportedField,
 )
-from tantiny_spark.executor import compile_plan, prime_stats, top_k, try_wand_topk
+from tantiny_spark.executor import compile_plan, prime_stats, top_k
 from tantiny_spark.schema import IndexSchema
 from tantiny_spark.storage import IndexStorage, Snapshot
 
 DEFAULT_LIMIT = 10  # index.rb:7
+
+
+def try_wand_topk(*_args, **_kwargs):
+    """Retired top-k path: always None ("not taken"), and nothing in the
+    library calls it. Term ORs score in one postings scan instead
+    (executor._term_or). The name stays only because perfbench/tracing.py
+    wraps it for ``--trace 1``; delete it together with that wrapper."""
+    return None
 
 
 class Index:
@@ -478,12 +486,11 @@ class Index:
     # --- segment merge / compaction ------------------------------------------
     def merge_segments(self) -> int:
         """Compact all live segments into one: tombstones are physically
-        applied, dict/stats/blocks rebuilt from the surviving postings — the
-        background-merge analog of Tantivy's segment merging (surfaced via
-        commit/reload, src/index.rs:229-242). After a merge, deleted docs no
-        longer affect BM25 stats and WAND drops its dead-doc anti-join
-        (between merges the fast path stays on, filtering tombstoned docs
-        post-decode — see wand.wand_topk)."""
+        applied, dict/stats rebuilt from the surviving docs and postings —
+        the background-merge analog of Tantivy's segment merging (surfaced
+        via commit/reload, src/index.rs:229-242). After a merge, deleted
+        docs no longer affect BM25 stats, and queries stop paying the
+        per-segment tombstone anti-joins."""
         # a merge rewrites the whole manifest, so it is a WRITE: take the
         # writer lock (like transaction()) — a merge racing another writer
         # would silently drop that writer's commit from the new manifest
@@ -491,8 +498,6 @@ class Index:
             return self._merge_segments_locked()
 
     def _merge_segments_locked(self) -> int:
-        from tantiny_spark.wand import build_blocks
-
         # merge the LATEST COMMITTED version, never the reader snapshot:
         # a writer that committed since the last reload() (e.g. the
         # streaming foreachBatch upsert path) must not have its segments
@@ -500,42 +505,12 @@ class Index:
         ctx = Snapshot(
             self.spark, self.storage, self.storage.current_version()
         ).context()
-        docs = ctx.docs
-        postings = ctx.postings.persist()
-        dictionary = postings.groupBy("field", "term").agg(
-            F.count("*").cast("long").alias("df")
-        )
         # exact per-field totals from the stored per-doc lengths
-        import pandas as pd
-
-        # ONE aggregation job for the doc count and every field's token
-        # total (this used to be one full docs scan per text/json field)
-        agg_cols = [F.count("*").alias("__n")]
-        for f in self.schema.text_fields + self.schema.json_fields:
-            agg_cols.append(F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}"))
-        agg_row = docs.agg(*agg_cols).collect()[0]
-        n_docs = int(agg_row["__n"])
-        stats_rows = []
-        for f in self.schema.text_fields + self.schema.json_fields:
-            total = int(agg_row[f"__tot_{f}"] or 0)
-            stats_rows.append((f, n_docs, total, (total / n_docs) if n_docs else 0.0))
-        for f in self.schema.string_fields + self.schema.facet_fields:
-            stats_rows.append((f, n_docs, n_docs, 1.0))
-        stats = self.spark.createDataFrame(
-            pd.DataFrame(
-                stats_rows, columns=["field", "num_docs", "total_tokens", "avgdl"]
-            ),
-            schema="field string, num_docs long, total_tokens long, avgdl double",
-        )
-        tables = {
-            "docs": docs,
-            "postings": postings,
-            "dict": dictionary,
-            "stats": stats,
-            "blocks": build_blocks(postings),
-        }
+        stats, n_docs = stats_table(self.spark, self.schema, ctx.docs)
+        tables = {"docs": ctx.docs, "postings": ctx.postings, "stats": stats}
         manifest = self.storage.read_manifest(self.storage.current_version())
         entry = self.storage.write_segment(tables, tombstones=[])
+        ctx.release()
         version = self.storage.commit(
             {
                 "segments": [entry],
@@ -543,7 +518,6 @@ class Index:
                 "schema": self.schema.to_json(),
             }
         )
-        postings.unpersist()
         # merge-cost telemetry: what the compaction actually rewrote —
         # lets merge-policy read-amplification claims carry numbers
         # (streaming tests assert on this) instead of adjectives
@@ -677,9 +651,10 @@ class Index:
         field's own tokenizer, keep terms with seed tf >= min_term_freq and
         dictionary df >= min_doc_freq, score tf * idf with the engine's BM25
         idf, and take the top ``max_query_terms`` by (score desc, term asc).
-        The result is a pure term disjunction, so search() rides the
-        block-max WAND top-k fast path; dictionary dfs come from ONE batched
-        pruned lookup per field (no per-term driver jobs)."""
+        The result is a pure term disjunction, so each field's terms
+        compile to ONE pruned postings scan (executor._term_or); dictionary
+        dfs come from ONE batched pruned lookup per field (no per-term
+        driver jobs)."""
         import math
         from collections import Counter
 
@@ -737,6 +712,11 @@ class Index:
         self, query, limit: int = DEFAULT_LIMIT, offset: int = 0,
         search_after: tuple | None = None, **smart_opts,
     ) -> DataFrame:
+        """Top ``limit`` hits of ``query`` as DataFrame[id, score], ordered
+        score desc, id asc. ``offset`` pages inside the same
+        TakeOrderedAndProject (a partial top-(offset+limit), never a global
+        sort); ``search_after`` is a cursor filter ahead of the same top-k.
+        Compiled plans are cached per (plan, limit, offset, cursor)."""
         if offset < 0:
             raise ValueError("offset must be >= 0")
         plan = self._as_plan(query, smart_opts)
@@ -784,16 +764,6 @@ class Index:
                 .select("id", "score")
             )
             return self._cache_query(cache_key, out)
-        # block-max WAND fast path for pure term disjunctions; doc_id order is
-        # id order by construction, so tie-breaks agree with the naive path.
-        # Pagination rides the SAME top-k machinery at k = offset+limit (the
-        # candidate set any rank-m..m+n page needs), then the final ordered
-        # limit skips the first offset rows — never a global sort.
-        fast = try_wand_topk(plan, self.ctx, limit + offset)
-        if fast is not None:
-            return self._cache_query(
-                cache_key, top_k(fast, self.ctx, limit, offset)
-            )
         return self._cache_query(
             cache_key, top_k(compile_plan(plan, self.ctx), self.ctx, limit, offset)
         )
@@ -889,9 +859,8 @@ class Index:
         ``limit`` as ``(id, score)``.
 
         Scale shape — the expensive query never sees the corpus: phase 1
-        rides the normal top-k machinery (WAND-eligible, partial top-k per
-        partition), so the candidate set is ≤ window_size rows; phase 2
-        LEFT-joins the rescorer's compiled doc-set against that bounded
+        rides the normal top-k machinery (partial top-k per partition), so
+        the candidate set is ≤ window_size rows; phase 2 LEFT-joins the rescorer's compiled doc-set against that bounded
         frame, which AQE plans as a broadcast of the candidates — the
         rescore query's postings scan is semi-join-pruned to the window.
         This is exactly why ES rescore exists: proximity/phrase scoring
@@ -902,10 +871,8 @@ class Index:
             raise ValueError("limit cannot exceed window_size")
         plan = self._as_plan(query, smart_opts)
         prime_stats(plan, self.ctx)
-        fast = try_wand_topk(plan, self.ctx, window_size)
-        primary = fast if fast is not None else compile_plan(plan, self.ctx)
         window = (
-            primary.join(self.ctx.id_map, "doc_id")
+            compile_plan(plan, self.ctx).join(self.ctx.id_map, "doc_id")
             .orderBy(F.col("score").desc(), F.col("id").asc())
             .limit(window_size)
         )

@@ -619,7 +619,7 @@ def boolean_query(
 ) -> Query:
     """Lucene/Tantivy BooleanQuery constructor. Degenerate occur mixes
     simplify to the plain algebra (keeping e.g. the pure-term-disjunction
-    WAND fast path): only-must → conjunction, only-should → disjunction,
+    one-scan plan): only-must → conjunction, only-should → disjunction,
     only-must_not → negation of their disjunction.
 
     ``minimum_should_match`` follows Lucene's defaults when None: 0 with
@@ -660,7 +660,7 @@ def dis_max_query(queries, tie_breaker: float = 0.0,
                   boost: float = DEFAULT_BOOST) -> Query:
     """Tantivy DisjunctionMaxQuery constructor. ``tie_breaker`` must lie in
     [0, 1]; 1.0 degenerates to the plain score-summing Disjunction (kept as
-    that node so a pure-term dis_max(tie=1) still takes the WAND path)."""
+    that node so a pure-term dis_max(tie=1) still compiles to the one-scan term OR)."""
     children = tuple(_listify(queries))
     for q in children:
         _check(q)

@@ -36,8 +36,8 @@ Semantics (Lucene classic parser / Tantivy UserInputAst):
 
 Everything compiles onto the existing plan nodes — the parser adds zero
 execution machinery, so every query it emits inherits the compiled plans'
-scale story (WAND for pure term disjunctions, pushed-down postings scans,
-left-join optional scoring).
+scale story (one postings scan per field for term disjunctions, pushed-down
+postings scans, left-join optional scoring).
 """
 
 from __future__ import annotations

@@ -98,7 +98,7 @@ def snippets(
     per-chunk structs), still no window function: the frame is bounded by
     the top-``limit`` hit set.
 
-    Plan shape: search_df's top-k (WAND-prunable) → broadcast-size hit set
+    Plan shape: search_df's top-k → broadcast-size hit set
     joined against the source corpus (id pushdown on the scan) → word
     windows and the (n_hits desc, fragment asc) argmax as ONE
     partial-aggregatable min-struct groupBy over the exploded words of the

@@ -27,11 +27,20 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from tantiny_spark.build import POSTINGS_SCHEMA
+from tantiny_spark.build import POSTINGS_SCHEMA, STATS_SCHEMA
 from tantiny_spark.executor import SearchContext
 from tantiny_spark.schema import IndexSchema
 
-TABLES = ("docs", "postings", "dict", "stats", "blocks")
+TABLES = ("docs", "postings", "dict", "stats")
+
+
+def dict_table(postings: DataFrame) -> DataFrame:
+    """The term dictionary (field, term, df) of a postings table: one row
+    per posting, so df is the row count per (field, term), a map-side
+    partially aggregated groupBy."""
+    return postings.groupBy("field", "term").agg(
+        F.count("*").cast("long").alias("df")
+    )
 
 
 class IndexStorage:
@@ -99,66 +108,36 @@ class IndexStorage:
         commit — a crash here leaves an unreferenced directory, never a
         corrupt index (the resumability contract).
 
-        Materialize-then-derive: DataFrame values are written directly;
-        callable values are invoked with the freshly-written postings table
-        (dict/blocks derive from the stored files instead of re-running the
-        build lineage or holding giant in-memory caches)."""
+        ``tables`` holds ``docs``, ``postings`` and ``stats``, each a
+        DataFrame or a 0-arg callable returning one (the build defers its
+        stats aggregation that way). The three are independent reads of
+        the staged analyzer output, so they are submitted from a small
+        thread pool: the later jobs' tasks back-fill executors idling in
+        the earlier jobs' stragglers (one job alone rarely fills the
+        cluster, e.g. the postings range-sort runs at its data-sized
+        partition count). Spark runs concurrent actions FIFO, which is
+        exactly the back-fill wanted; failures propagate out of pool.map.
+        The ``dict`` is then derived from the freshly-written postings
+        files (dict_table), never by re-running the build lineage."""
+        from concurrent.futures import ThreadPoolExecutor
+
         name = name or f"seg-{uuid.uuid4().hex[:12]}"
         seg_dir = os.path.join(self.path, "segments", name)
-        deferred = []
-        direct = []
-        for tname in TABLES:
-            df = tables.get(tname)
-            if df is None:
-                continue
-            if callable(df) and getattr(df, "input_table", "postings") is not None:
-                deferred.append((tname, df))
-                continue
-            direct.append((tname, df))
-        # The direct tables (docs / postings, plus 0-arg callables like the
-        # stats aggregation, marked input_table=None) are independent reads
-        # of the staged analyzer output — submit them from a small thread
-        # pool so the later jobs' tasks back-fill executors idling in the
-        # earlier jobs' stragglers (one job alone rarely fills the cluster:
-        # e.g. the postings range-sort runs at its data-sized partition
-        # count). Spark's scheduler runs concurrent actions FIFO, which is
-        # exactly the back-fill behavior wanted; failures propagate out of
-        # pool.map.
-        def _write(item):
-            tname, df = item
+
+        def _write(tname):
+            df = tables[tname]
             if callable(df):
                 df = df()
             df.write.mode("overwrite").parquet(os.path.join(seg_dir, tname))
 
-        if len(direct) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(direct)) as pool:
-                for _ in pool.map(_write, direct):
-                    pass
-        else:
-            for item in direct:
-                _write(item)
-        if deferred:
-            spark = tables["postings"].sparkSession
-            stored_postings = spark.read.parquet(os.path.join(seg_dir, "postings"))
-            # callables may declare (via an ``input_table`` attribute) that
-            # they derive from another just-written table instead of the
-            # postings — e.g. the dictionary sums the block metadata rather
-            # than re-scanning every posting row. Postings-derived tables
-            # are written first so their outputs exist to be read.
-            deferred.sort(
-                key=lambda tf: getattr(tf[1], "input_table", "postings") != "postings"
-            )
-            for tname, fn in deferred:
-                src_table = getattr(fn, "input_table", "postings")
-                if src_table == "postings":
-                    src = stored_postings
-                else:
-                    src = spark.read.parquet(os.path.join(seg_dir, src_table))
-                fn(src).write.mode("overwrite").parquet(
-                    os.path.join(seg_dir, tname)
-                )
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            for _ in pool.map(_write, ("docs", "postings", "stats")):
+                pass
+        spark = tables["postings"].sparkSession
+        stored = spark.read.parquet(os.path.join(seg_dir, "postings"))
+        dict_table(stored).write.mode("overwrite").parquet(
+            os.path.join(seg_dir, "dict")
+        )
         if isinstance(tombstones, DataFrame):
             entry = {
                 "name": name, "tombstones": [],
@@ -202,9 +181,7 @@ class Snapshot:
         entries = self.manifest["segments"]
         if not entries:
             empty_docs = self.spark.createDataFrame([], "doc_id long, id string")
-            empty_stats = self.spark.createDataFrame(
-                [], "field string, num_docs long, total_tokens long, avgdl double"
-            )
+            empty_stats = self.spark.createDataFrame([], STATS_SCHEMA)
             empty_dict = self.spark.createDataFrame(
                 [], "field string, term string, df long"
             )
@@ -221,9 +198,6 @@ class Snapshot:
         ]
         # ids deleted by any LATER segment apply to this one
         docs_parts, post_parts, dict_parts, stats_parts = [], [], [], []
-        block_parts: list = []
-        dead_doc_parts: list = []
-        any_tombstoned = False
         for i, (entry, seg) in enumerate(zip(entries, loaded)):
             if seg is None:  # pure-delete commit: tombstones only
                 continue
@@ -235,7 +209,6 @@ class Snapshot:
                     dead_tables.append(later["tombstone_table"])
             docs, postings = seg["docs"], seg["postings"]
             if dead or dead_tables:
-                any_tombstoned = True
                 import pandas as pd
 
                 parts = []
@@ -269,13 +242,10 @@ class Snapshot:
                 if not dead_tables:
                     seg_dead_docs = F.broadcast(seg_dead_docs)
                 postings = postings.join(seg_dead_docs, "doc_id", "left_anti")
-                dead_doc_parts.append(seg_dead_docs)
             docs_parts.append(docs)
             post_parts.append(postings)
             dict_parts.append(seg["dict"])
             stats_parts.append(seg["stats"])
-            if seg.get("blocks") is not None:
-                block_parts.append(seg["blocks"])
 
         def union_all(parts):
             out = parts[0]
@@ -295,25 +265,12 @@ class Snapshot:
         # (every top-k joins it), the dictionary and the stats. The full docs
         # table is deliberately NOT cached — at web scale it cannot be, and
         # range/negation want Parquet scans with fast-field min/max pushdown
-        # rather than a full in-memory relation. postings/blocks likewise
-        # stay on Parquet: term lookups prune them.
+        # rather than a full in-memory relation. postings likewise stay on
+        # Parquet: term lookups prune them.
         return SearchContext(
             docs=docs,
             ids=docs.select("doc_id", "id").persist(),
             postings=postings,
             dictionary=union_all(dict_parts).persist(),
             stats=union_all(stats_parts).persist(),
-            # block-max fast path: deleted docs are baked inside the
-            # compressed blocks, so the decoder must drop them post-decode —
-            # dead_docs carries the (small) tombstoned doc_id set and keeps
-            # WAND usable between merges instead of disabling it outright
-            blocks=union_all(block_parts)
-            if block_parts and len(block_parts) == len(docs_parts)
-            else None,
-            # persisted: WAND evaluates the dead filter twice per query
-            # (champion + survivor decode) and the resolution scans the
-            # segment docs table — cache the tiny result, not the scan
-            dead_docs=union_all(dead_doc_parts).persist()
-            if dead_doc_parts
-            else None,
         )

@@ -84,7 +84,7 @@ def test_boolean_occur_must_not(ix):
 
 def test_boolean_degenerate_simplifies():
     """Pure occur lists simplify to the plain algebra (keeping e.g. the
-    pure-term-disjunction WAND fast path)."""
+    pure-term-disjunction one-scan plan)."""
     a, b = P.Term("text", "a"), P.Term("text", "b")
     assert isinstance(P.boolean_query(must=[a, b]), P.Conjunction)
     assert isinstance(P.boolean_query(should=[a, b]), P.Disjunction)

@@ -69,7 +69,7 @@ def test_dismax_tie_zero_is_pure_max(ix):
 
 def test_dismax_degenerate_forms():
     t1, t2 = P.Term("text", "a"), P.Term("text", "b")
-    # tie=1.0 is score-summing: stays a Disjunction (keeps the WAND path)
+    # tie=1.0 is score-summing: stays a Disjunction (one-scan term OR)
     assert isinstance(P.dis_max_query([t1, t2], 1.0), P.Disjunction)
     assert P.dis_max_query([t1]) is t1
     assert isinstance(P.dis_max_query([]), P.Empty)
@@ -243,7 +243,7 @@ def test_msm_with_must_prunes_and_keeps_must_score(ix):
 
 def test_msm_degenerate_and_validation():
     t = [P.Term("text", x) for x in "abc"]
-    # pure-should msm<=1 keeps the plain Disjunction (WAND path)
+    # pure-should msm<=1 keeps the plain Disjunction (one-scan term OR)
     assert isinstance(P.boolean_query(should=t, minimum_should_match=1),
                       P.Disjunction)
     assert isinstance(P.boolean_query(should=t, minimum_should_match=None),

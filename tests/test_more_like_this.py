@@ -3,8 +3,8 @@
 Term selection: tokenize the seed text with the field tokenizer, keep terms
 with seed tf >= min_term_freq and dictionary df >= min_doc_freq, rank by
 tf * idf (engine BM25 idf), take top max_query_terms by (score desc, term
-asc), OR the term queries. The result is a pure term disjunction (rides the
-WAND fast path)."""
+asc), OR the term queries. The result is a pure term disjunction (one
+postings scan per field)."""
 
 import math
 

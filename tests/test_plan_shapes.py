@@ -5,6 +5,7 @@ in docs/PLANS.md, asserted so a refactor can't silently lose them.
 import numpy as np
 import pytest
 
+from tantiny_spark import plan as P
 from tantiny_spark.executor import compile_plan, top_k
 from tantiny_spark.index import Index
 from tantiny_spark.schema import IndexSchema
@@ -96,6 +97,20 @@ def test_term_set_plan_shape(plan_index):
     assert "positions" not in plan
     assert "Python" not in plan
     assert "Window" not in plan
+
+
+def test_term_or_is_one_postings_scan(plan_index):
+    """A 20-term single-field OR = ONE pruned postings scan (the term IN
+    list reaches the Parquet reader) feeding one sum groupBy — no per-term
+    scan and no Union."""
+    ix = plan_index
+    q = P.disjunction(*[ix.term_query("t", f"w{i}") for i in range(20)])
+    plan = _physical(compile_plan(q, ix.ctx))
+    assert plan.count("FileScan") == 1
+    assert "Union" not in plan
+    assert "In(term" in plan
+    assert "positions" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_boolean_occur_plan_shape(plan_index):

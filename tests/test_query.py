@@ -424,21 +424,20 @@ def test_phrase_prefix(spark, tmp_path):
 
 def test_search_offset_pagination(spark, tmp_path):
     """Tantivy pagination (TopDocs::with_limit(n).and_offset(m)): every
-    page is exactly the corresponding slice of the full ranking, on both
-    the WAND fast path (pure term query) and the naive path (boolean),
-    and past-the-end pages are empty."""
+    page is exactly the corresponding slice of the full ranking, for a
+    pure term query and a boolean, and past-the-end pages are empty."""
     docs = [
         {"id": i, "text": "common " + "pad " * (i % 5), "integer": i * 3}
         for i in range(1, 21)
     ]
     idx = build(spark, tmp_path, docs)
-    q = idx.term_query("text", "common")  # WAND-eligible
+    q = idx.term_query("text", "common")
     full = idx.search_with_scores(q, limit=20)
     assert len(full) == 20
     for off, lim in ((0, 5), (5, 5), (18, 5), (25, 5)):
         assert idx.search_with_scores(q, limit=lim, offset=off) == \
             full[off:off + lim]
-    # naive path (conjunction disables WAND) pages identically
+    # a conjunction pages identically
     qb = idx.term_query("text", "common") & idx.term_query("text", "pad")
     fullb = idx.search_with_scores(qb, limit=20)
     assert idx.search_with_scores(qb, limit=4, offset=3) == fullb[3:7]

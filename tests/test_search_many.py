@@ -43,3 +43,49 @@ def test_search_many_uniform_scores_prune_keeps_ties(spark, tmp_path):
     batch = idx.search_many(queries, limit=7)
     for name, q in queries.items():
         assert batch[name] == idx.search(q, limit=7), name
+
+
+def test_batch_rank_prune_bounds_final_window_input(spark):
+    """With distinct, near-uniform scores the per-partition prune keeps
+    only each partition's local rank-≤k rows, so the final per-query
+    window sees ≤ partitions·k rows instead of the whole matched set, and
+    the exact global top-k is among them."""
+    from pyspark.sql import functions as F
+
+    from tantiny_spark.executor import batch_rank_prune
+
+    n, parts, k = 8000, 8, 10
+    df = (
+        spark.range(n)
+        .repartition(parts)
+        .select(
+            F.lit("q").alias("query"),
+            F.col("id").alias("doc_id"),
+            (F.lit(1.0) + F.col("id") * 1e-9).alias("score"),
+        )
+    )
+    pruned = batch_rank_prune(df, k)
+    cnt = pruned.count()
+    assert k <= cnt <= parts * k
+    top = {
+        r["doc_id"]
+        for r in pruned.orderBy(F.col("score").desc()).limit(k).collect()
+    }
+    assert top == set(range(n - k, n))
+
+
+def test_batch_rank_prune_keeps_boundary_ties(spark):
+    """Rows tied with a partition's k-th-largest score survive the prune,
+    so a cross-partition tie at the global k boundary still reaches the
+    (score desc, id asc) tie-break."""
+    from tantiny_spark.executor import batch_rank_prune
+
+    # one partition: scores [5, 4, 3, 3, 3, 1], k=3 → kth-largest = 3;
+    # ALL the 3s must survive, the 1 must not
+    df = spark.createDataFrame(
+        [("q", 0, 5.0), ("q", 1, 4.0), ("q", 2, 3.0), ("q", 3, 3.0),
+         ("q", 4, 3.0), ("q", 5, 1.0)],
+        "query string, doc_id long, score double",
+    ).coalesce(1)
+    got = sorted(r["doc_id"] for r in batch_rank_prune(df, 3).collect())
+    assert got == [0, 1, 2, 3, 4]
