@@ -29,6 +29,7 @@ Scale notes (the 100 TB story):
 from __future__ import annotations
 
 import os
+import re
 from typing import Optional
 
 import pandas as pd
@@ -36,6 +37,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from tantiny_spark.analysis.jsonpath import json_postings
+from tantiny_spark.errors import TantinyError
 from tantiny_spark.schema import IndexSchema
 
 POSTINGS_SCHEMA = T.StructType(
@@ -81,6 +83,21 @@ def stats_table(
     return spark.createDataFrame(pdf, schema=STATS_SCHEMA), n_docs
 
 
+_ROW_PICKING_NODE = re.compile(
+    r"^[\s:|+-]*(?:GlobalLimit|LocalLimit|Offset|Tail|Sample)\b", re.M
+)
+
+
+def _reads_alike_twice(df: DataFrame) -> bool:
+    """Whether two evaluations of ``df`` yield the same rows, as far as its
+    plan shows: no nondeterministic expression (uuid(), a nondeterministic
+    UDF, ...) and no limit/offset/tail/sample, which pick whichever rows
+    arrive first from an unordered input. Conservative: a False only
+    costs the broadcast fast path."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.deterministic() and not _ROW_PICKING_NODE.search(plan.toString())
+
+
 def assign_doc_ids(
     df: DataFrame, order_col: str = "id", doc_id_base: int = 0,
     num_partitions: Optional[int] = None, cleanup: Optional[list] = None,
@@ -112,7 +129,12 @@ def assign_doc_ids(
         # hash join inside the consumer's own pass).
         # Python str sort == Spark string asc sort (both are code-point
         # lexicographic; UTF-8 binary order preserves code-point order).
-        keys = [r[0] for r in df.select(order_col).collect()]
+        # the join below reads the input a second time, so the path needs
+        # an input that reads the same rows twice
+        keys = (
+            [r[0] for r in df.select(order_col).collect()]
+            if _reads_alike_twice(df) else None
+        )
         if keys and all(k is not None for k in keys) and len(set(keys)) == len(keys):
             if info is not None:
                 info["path"] = "broadcast"  # source partitioning preserved
@@ -137,7 +159,9 @@ def assign_doc_ids(
             )
         # duplicate or null keys: rank-by-key is ambiguous per row — take
         # the positional funnel (identical to the historical behavior:
-        # duplicates get distinct consecutive ids in sorted order)
+        # duplicates get distinct consecutive ids in sorted order); it reads
+        # the input once, so it also serves inputs that may not read alike
+        # twice
         if info is not None:
             info["path"] = "funnel"  # output lands on a single partition
         arranged = df.repartition(1).sortWithinPartitions(order_col)
@@ -614,9 +638,25 @@ def build_segment(
     # barrier between staging and the table writes. The doc count itself is
     # n_input (the analyzer emits exactly one doc row per input row), so the
     # commit path never waits on this job.
+    def stats():
+        # the job counts the stamped doc rows anyway, so checking them
+        # against n_input costs nothing: an input that reads differently
+        # twice in a way its plan does not show (a UDF declared
+        # deterministic that is not) makes the broadcast doc-id join drop
+        # rows, and the write must fail before the commit, not record
+        # n_input
+        table, n_stamped = stats_table(spark, schema, doc_rows)
+        if n_stamped != n_input:
+            raise TantinyError(
+                f"build stamped {n_stamped} documents for {n_input} input "
+                "rows: the id column must be deterministic (the doc-id "
+                "assignment reads the input more than once)"
+            )
+        return table
+
     return {
         "docs": docs,
         "postings": postings,
-        "stats": lambda: stats_table(spark, schema, doc_rows)[0],
+        "stats": stats,
         "n_docs": n_input,  # one doc row per input row, counted up front
     }

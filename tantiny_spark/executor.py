@@ -2,10 +2,10 @@
 
 The read-path equivalent of the reference's __search
 (/root/reference/src/index.rs:244-274): Query → Weight (global stats) →
-scorer over postings → top-k. Here the "weight" is a broadcast join against
-the (tiny) dictionary/stats rows the query needs, the "scorer" is a JVM-side
-BM25 expression over a term-pruned postings scan, and top-k compiles to
-TakeOrderedAndProject.
+scorer over postings → top-k. Here the "weight" is a set of driver-side
+lookups of the (tiny) dictionary/stats rows the query needs, baked into
+the plan as literals; the "scorer" is a JVM-side BM25 expression over a
+term-pruned postings scan, and top-k compiles to TakeOrderedAndProject.
 
 Score semantics per SURVEY.md §2.5: term/facet tf=1 (IndexRecordOption::Basic,
 src/query.rs:53,190), phrase scores with phrase frequency and the summed idf
@@ -16,15 +16,26 @@ multiplies.
 Every scan is pruned before it leaves Parquet: term lookups filter on
 (field, term) — pushed down onto the sorted postings layout — and only the
 columns a query type needs are read (no positions for term queries).
+
+Planning a cold query stays cheap: every driver-side lookup (field stats,
+term dfs, an expansion's dictionary head) is ONE Spark job with no shuffle —
+raw per-segment rows are collected and summed or deduplicated on the
+driver — and every literal list (a term IN list, a term → df or weight
+map) is ONE SQL expression, so one JVM call, not several per literal.
+Fuzzy expansion usually needs no Python worker: a JVM Levenshtein
+prefilter bounds the candidates and the exact OSA test runs on the driver
+over the collected head; the OSA pandas UDF runs only when the candidates
+overflow the expansion cap.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+import math
 import weakref
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from tantiny_spark import plan as P
 from tantiny_spark import scoring
@@ -57,6 +68,39 @@ def _decode_norm(col):
     return F.element_at(table, col.cast("int") + 1).cast("double")
 
 
+def _sql_str(s: str) -> str:
+    """A SQL expression that reads back as exactly the string ``s``. Plain
+    quoted text when ``s`` holds no quote, backslash, ``$`` (variable
+    substitution) or non-printable character, so the parsed literal does
+    not depend on spark.sql.parser.escapedStringLiterals; otherwise the
+    UTF-8 bytes in hex, which constant-fold to the same literal."""
+    if s.isprintable() and not any(c in "'\\$" for c in s):
+        return f"'{s}'"
+    return f"decode(unhex('{s.encode('utf-8').hex()}'), 'UTF-8')"
+
+
+def _sql_double(v) -> str:
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
+
+def _term_in(terms) -> Column:
+    """``term IN (...)`` over literal terms, built in ONE JVM call (an
+    ``isin`` of Python values costs a py4j round trip per literal). Spark
+    plans it exactly as ``isin``: an In (one term: EqualTo) over literals,
+    pushed down to the Parquet reader."""
+    return F.expr(f"term IN ({', '.join(_sql_str(t) for t in terms)})")
+
+
+def _by_term(values: dict) -> Column:
+    """The double ``values[term]`` of each row: ``element_at`` over one
+    literal term → value map, built in ONE JVM call."""
+    pairs = ", ".join(
+        f"{_sql_str(t)}, {_sql_double(v)}" for t, v in values.items()
+    )
+    return F.expr(f"element_at(map({pairs}), term)")
+
+
 @dataclass
 class SearchContext:
     """The live snapshot a query runs against: unioned segment tables with
@@ -66,6 +110,10 @@ class SearchContext:
     postings: DataFrame
     dictionary: DataFrame
     stats: DataFrame
+    # live segments unioned into ``dictionary``: a term has at most one
+    # dict row per segment, so the first k distinct terms of a slice lie
+    # within its first k × segments raw rows (_first_terms)
+    segments: int
     # slim persisted (doc_id, id) projection: the only per-query hot join.
     # The full docs table is NOT cached — at web scale it can't be, and
     # range/negation scans want Parquet fast-field pushdown instead.
@@ -101,40 +149,36 @@ class SearchContext:
         return self.ids if self.ids is not None else self.docs.select("doc_id", "id")
 
     def field_stats(self, field: str) -> tuple:
-        """(num_docs, avgdl) for a field across live segments."""
+        """(num_docs, avgdl) for a field across live segments: the field's
+        per-segment stats rows are collected (one job, no shuffle) and
+        summed on the driver."""
         hit = self._stats_cache.get(field)
         if hit is None:
             rows = (
                 self.stats.where(F.col("field") == field)
-                .groupBy("field")
-                .agg(
-                    F.sum("num_docs").alias("num_docs"),
-                    F.sum("total_tokens").alias("total_tokens"),
-                )
+                .select("num_docs", "total_tokens")
                 .collect()
             )
-            if rows:
-                n = int(rows[0]["num_docs"])
-                tot = int(rows[0]["total_tokens"])
-                hit = (n, (tot / n) if n else 1.0)
-            else:
-                hit = (0, 1.0)
+            n = sum(int(r["num_docs"]) for r in rows)
+            tot = sum(int(r["total_tokens"]) for r in rows)
+            hit = (n, (tot / n) if n else 1.0)
             self._stats_cache[field] = hit
         return hit
 
     def term_dfs(self, field: str, terms: list) -> dict:
-        """doc-freq per term (0 when absent), batched + memoized."""
+        """doc-freq per term (0 when absent), batched + memoized: the raw
+        per-segment (term, df) rows are collected (one job, no shuffle; at
+        most segments × terms rows) and summed on the driver."""
         missing = [t for t in terms if (field, t) not in self._df_cache]
         if missing:
             rows = (
-                self.dictionary.where(
-                    (F.col("field") == field) & (F.col("term").isin(missing))
-                )
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
+                self.dictionary.where((F.col("field") == field) & _term_in(missing))
+                .select("term", "df")
                 .collect()
             )
-            found = {r["term"]: int(r["df"]) for r in rows}
+            found: dict = {}
+            for r in rows:
+                found[r["term"]] = found.get(r["term"], 0) + int(r["df"])
             for t in missing:
                 self._df_cache[(field, t)] = found.get(t, 0)
         return {t: self._df_cache[(field, t)] for t in terms}
@@ -150,8 +194,9 @@ def _bm25_expr(tf_col, dl_col, avgdl_col, df_col, n_col):
 
 
 def prime_stats_many(nodes: list, ctx: SearchContext) -> None:
-    """Warm the stats/df caches for a whole query BATCH: one dictionary
-    lookup per distinct field across all plans (search_many pays the driver
+    """Warm the stats/df caches for a whole query BATCH: per distinct field
+    across all plans, one shuffle-free stats lookup and one shuffle-free
+    dictionary lookup of all its terms (search_many pays the driver
     round-trips once per batch, not once per query)."""
     per_field: dict = {}
     for node in nodes:
@@ -163,8 +208,10 @@ def prime_stats_many(nodes: list, ctx: SearchContext) -> None:
 
 
 def prime_stats(node: P.Query, ctx: SearchContext) -> None:
-    """Warm the stats/df memo caches for a whole plan in two batched lookups
-    per field (instead of one driver job per node during compilation)."""
+    """Warm the stats/df memo caches for a whole plan: per field, one
+    shuffle-free stats lookup and one shuffle-free dictionary lookup of all
+    its terms, each a single Spark job (instead of one driver job per node
+    during compilation)."""
     per_field: dict = {}
     _collect_stat_keys(node, per_field)
     for field, terms in per_field.items():
@@ -265,8 +312,7 @@ def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
         # distinct because several set members can hit the same doc
         return (
             ctx.postings.where(
-                (F.col("field") == node.field)
-                & F.col("term").isin(*node.terms)
+                (F.col("field") == node.field) & _term_in(node.terms)
             )
             .select("doc_id")
             .distinct()
@@ -434,15 +480,11 @@ def _term_or(field: str, weights: dict, ctx: SearchContext) -> DataFrame:
     n, avgdl = ctx.field_stats(field)
     terms = sorted(weights)
     dfs = ctx.term_dfs(field, terms)
-    keys = [F.lit(t) for t in terms]
 
     def per_term(values: dict):
         if len(terms) == 1:
             return F.lit(float(values[terms[0]]))
-        pairs = [
-            c for t, key in zip(terms, keys) for c in (key, F.lit(float(values[t])))
-        ]
-        return F.element_at(F.create_map(*pairs), F.col("term"))
+        return _by_term({t: values[t] for t in terms})
 
     score = _bm25_expr(
         F.lit(1.0), _decode_norm(F.col("norm_id")),
@@ -451,7 +493,7 @@ def _term_or(field: str, weights: dict, ctx: SearchContext) -> DataFrame:
     if any(w != 1.0 for w in weights.values()):
         score = score * per_term(weights)
     return ctx.postings.where(
-        (F.col("field") == field) & F.col("term").isin(*keys)
+        (F.col("field") == field) & _term_in(terms)
     ).select("doc_id", score.alias("score"))
 
 
@@ -569,24 +611,15 @@ def _regex_phrase(node: P.RegexPhrase, ctx: SearchContext) -> DataFrame:
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
     parts = []
     for i, pat in enumerate(node.patterns):
-        exp = [
-            r["term"]
-            for r in (
-                ctx.dictionary.where(
-                    (F.col("field") == node.field)
-                    & F.col("term").rlike("^(?:" + pat + ")$")
-                )
-                .select("term").distinct()
-                .orderBy("term").limit(node.max_expansions).collect()
-            )
-        ]
+        exp = _first_terms(
+            ctx, node.field, F.col("term").rlike("^(?:" + pat + ")$"),
+            node.max_expansions,
+        )
         if not exp:
             return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
         shift = 0 if node.slop else i
         parts.append(
-            ctx.postings.where(
-                (F.col("field") == node.field) & F.col("term").isin(exp)
-            )
+            ctx.postings.where((F.col("field") == node.field) & _term_in(exp))
             .select(
                 "doc_id",
                 F.transform(
@@ -621,17 +654,10 @@ def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
     corpus scan; per-doc expansion positions union via ONE flatten agg
     bounded by expansions-per-doc."""
     k = len(node.terms)
-    exp = [
-        r["term"]
-        for r in (
-            ctx.dictionary.where(
-                (F.col("field") == node.field)
-                & F.col("term").startswith(node.prefix)
-            )
-            .select("term").distinct()
-            .orderBy("term").limit(node.max_expansions).collect()
-        )
-    ]
+    exp = _first_terms(
+        ctx, node.field, F.col("term").startswith(node.prefix),
+        node.max_expansions,
+    )
     if not exp:
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
     parts = []
@@ -645,9 +671,7 @@ def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
             )
         )
     exp_part = (
-        ctx.postings.where(
-            (F.col("field") == node.field) & F.col("term").isin(exp)
-        )
+        ctx.postings.where((F.col("field") == node.field) & _term_in(exp))
         .select(
             "doc_id",
             F.transform(F.col("positions"), lambda x: x - F.lit(k)).alias("__pe"),
@@ -669,49 +693,101 @@ def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
 
 
 MAX_EXPANSION_LITERALS = 10_000
+#: cached expansion-head marker: more than MAX_EXPANSION_LITERALS matches
+_OVERFLOW = object()
+
+
+def _sorted_terms(ctx: SearchContext, field: str, term_predicate, n: int) -> list:
+    """The first ``n`` raw dictionary rows of ``field`` matching
+    ``term_predicate``, in term order (a term repeats once per segment
+    holding it): ONE TakeOrdered job (per-partition top rows, merged on the
+    driver), no distinct and no shuffle."""
+    rows = (
+        ctx.dictionary.where((F.col("field") == field) & term_predicate)
+        .select("term")
+        .orderBy("term")
+        .limit(n)
+        .collect()
+    )
+    return [r["term"] for r in rows]
+
+
+def _first_terms(ctx: SearchContext, field: str, term_predicate, k: int) -> list:
+    """The first ``k`` distinct dictionary terms of ``field`` matching
+    ``term_predicate``, in term order. A term has at most one dict row per
+    segment, so the first ``k × segments`` raw rows hold them; for the
+    small ``max_expansions`` heads of the phrase expansions only."""
+    rows = _sorted_terms(ctx, field, term_predicate, k * ctx.segments)
+    return list(dict.fromkeys(rows))[:k]
+
+
+def _capped_terms(ctx: SearchContext, field: str, term_predicate):
+    """The distinct matching terms, or _OVERFLOW when they may not fit:
+    at most MAX_EXPANSION_LITERALS + 1 raw rows reach the driver whatever
+    the segment count. A head that is not full holds every matching row,
+    so its dedupe is exact; a full head is treated as overflow."""
+    rows = _sorted_terms(ctx, field, term_predicate, MAX_EXPANSION_LITERALS + 1)
+    if len(rows) > MAX_EXPANSION_LITERALS:
+        return _OVERFLOW
+    return list(dict.fromkeys(rows))
 
 
 def _dict_expansion(
     ctx: SearchContext, field: str, term_predicate, cache_key=None,
+    refine=None,
 ) -> DataFrame:
     """Automaton-style queries (regex/prefix/fuzzy): enumerate matching
     dictionary terms, union their postings, constant score 1.0.
 
     Typical patterns match a tiny dictionary slice, which is collected and
-    re-injected as an isin() literal so the postings scan gets *term-level
+    re-injected as an IN literal list so the postings scan gets *term-level
     Parquet pushdown* — the fst-dictionary-first strategy of the reference
     (README.md:274) rather than a full field scan. A pathological pattern
     (`.*`, one-letter prefix on a web-scale dictionary) could match millions
-    of terms, so the collect is CAPPED: fetching MAX_EXPANSION_LITERALS+1
-    rows detects overflow, and the fallback is a semi-join of the postings
-    against the matched dictionary slice — fully distributed, no driver
-    materialization (AQE picks broadcast vs shuffle by actual size)."""
-    matched_df = (
-        ctx.dictionary.where(F.col("field") == field)
-        .where(term_predicate)
-        .select("term")
-        .distinct()
-    )
+    of terms, so the collect is CAPPED (_capped_terms): a head of
+    MAX_EXPANSION_LITERALS+1 raw rows detects overflow, and the fallback is
+    a semi-join of the postings against the matched dictionary slice —
+    fully distributed, no driver materialization (AQE picks broadcast vs
+    shuffle by actual size).
+
+    ``refine`` is ``(keep, column)`` when ``term_predicate`` only bounds a
+    superset of the matches: the same exact test as a Python predicate,
+    applied to the collected head on the driver, and as a 0-arg callable
+    returning a Column. The column runs only when the superset overflows:
+    first in a second capped head, so the literal path stays whenever the
+    exact matches fit, then inside the semi-join if they do not."""
+
+    def exact():
+        return term_predicate if refine is None else term_predicate & refine[1]()
+
     # memoize the capped head per plan node: the snapshot's dictionary is
     # immutable, so a repeated prefix/regex/fuzzy query must not re-run
     # the expansion job (the dominant fixed cost of a repeated smart query)
-    head = ctx._expansion_cache.get(cache_key) if cache_key is not None else None
-    if head is None:
-        head = matched_df.limit(MAX_EXPANSION_LITERALS + 1).collect()
-        if cache_key is not None:
-            ctx._expansion_cache[cache_key] = head
-    if not head:
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    if len(head) <= MAX_EXPANSION_LITERALS:
-        matched = [r["term"] for r in head]
-        return (
-            ctx.postings.where(
-                (F.col("field") == field) & F.col("term").isin(matched)
+    matched = ctx._expansion_cache.get(cache_key) if cache_key is not None else None
+    if matched is None:
+        matched = _capped_terms(ctx, field, term_predicate)
+        if refine is not None:
+            matched = (
+                _capped_terms(ctx, field, exact()) if matched is _OVERFLOW
+                else [t for t in matched if refine[0](t)]
             )
+        if cache_key is not None:
+            ctx._expansion_cache[cache_key] = matched
+    if matched is not _OVERFLOW:
+        if not matched:
+            return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        return (
+            ctx.postings.where((F.col("field") == field) & _term_in(matched))
             .select("doc_id")
             .distinct()
             .select("doc_id", F.lit(1.0).alias("score"))
         )
+    matched_df = (
+        ctx.dictionary.where(F.col("field") == field)
+        .where(exact())
+        .select("term")
+        .distinct()
+    )
     return (
         ctx.postings.where(F.col("field") == field)
         .join(matched_df, "term", "left_semi")
@@ -723,27 +799,54 @@ def _dict_expansion(
 
 def _fuzzy(node: P.FuzzyTerm, ctx: SearchContext) -> DataFrame:
     """Levenshtein-with-transpositions (OSA) within ``distance``, matching
-    FuzzyTermQuery::new(term, distance, true) (src/query.rs:58-77). Spark's
-    builtin levenshtein() lacks transpositions, so candidates are length-band
-    pruned JVM-side and the OSA distance runs as a vectorized pandas UDF over
-    the (small) surviving dictionary slice.
+    FuzzyTermQuery::new(term, distance, true) (src/query.rs:58-77), with no
+    Python worker on the usual path. Spark's builtin levenshtein() lacks
+    transpositions, but a transposition is two substitutions, so an OSA
+    distance of c is a Levenshtein distance of at most 2c: the candidates
+    are the length band AND ``levenshtein(term, q, 2d) >= 0`` (the
+    thresholded form, -1 beyond 2d), a JVM-side superset of the answer.
+    The exact OSA test then runs on the driver over the collected head
+    (_dict_expansion's ``refine``). Only when the candidates overflow the
+    cap (a loose bound: at distance 2 it admits Levenshtein 4) does the
+    OSA run as a vectorized pandas UDF, first in a capped head of the
+    exact matches, then inside the semi-join if those overflow too.
 
     ``node.prefix`` is Tantivy's FuzzyTermQuery::new_prefix: a dictionary
     term matches when ANY of its prefixes is within ``distance`` of the
     query (typo-tolerant search-as-you-type). The same DP computes it —
     row i of the OSA table is OSA(query, term[:i]), so min over the final
     column is the best prefix distance; the length band keeps only the
-    lower bound (a long term can still carry a close short prefix)."""
-    query = node.term
-    dist = node.distance
-    osa = _osa_udf(query, node.prefix)
-    band = F.length(F.col("term")) >= F.lit(len(query) - dist)
-    if not node.prefix:
-        band = band & (F.length(F.col("term")) <= F.lit(len(query) + dist))
+    lower bound (a long term can still carry a close short prefix), and
+    the prefilter ORs the Levenshtein test over the prefixes whose length
+    is within ``distance`` of the query's."""
+    exact = _osa_prefix if node.prefix else _osa
+    query, dist = node.term, node.distance
     return _dict_expansion(
-        ctx, node.field, band & (osa(F.col("term")) <= F.lit(dist)),
+        ctx, node.field, _fuzzy_candidates(query, dist, node.prefix),
         cache_key=node,
+        refine=(
+            lambda t: exact(query, t) <= dist,
+            lambda: _osa_udf(query, node.prefix)(F.col("term")) <= F.lit(dist),
+        ),
     )
+
+
+def _fuzzy_candidates(query: str, dist: int, prefix: bool = False) -> Column:
+    """JVM-side superset of the terms within OSA distance ``dist`` of
+    ``query`` (of a prefix of the term when ``prefix``): the length band
+    and a Levenshtein distance of at most ``2 * dist``, one SQL expression.
+    Spark's length/levenshtein and Python's str both count code points."""
+    q, low, high = _sql_str(query), len(query) - dist, len(query) + dist
+    if not prefix:
+        return F.expr(
+            f"length(term) BETWEEN {low} AND {high}"
+            f" AND levenshtein(term, {q}, {2 * dist}) >= 0"
+        )
+    tests = " OR ".join(
+        f"levenshtein(substring(term, 1, {j}), {q}, {2 * dist}) >= 0"
+        for j in range(max(low, 0), high + 1)
+    )
+    return F.expr(f"length(term) >= {low} AND ({tests})")
 
 
 def _osa_udf(query: str, prefix: bool = False):

@@ -728,7 +728,8 @@ class Index:
         if hit is not None:
             self._query_cache.move_to_end(cache_key)
             return hit
-        # resolve every global stat the plan needs in two batched lookups
+        # resolve every global stat the plan needs: per field, one
+        # shuffle-free stats lookup and one shuffle-free dictionary lookup
         prime_stats(plan, self.ctx)
         if search_after is not None:
             # ES-style cursor pagination: strictly after the (score, id)
@@ -1140,12 +1141,14 @@ class Index:
         itself is excluded. Returns DataFrame[term, distance, df],
         ``limit`` rows.
 
-        Plan shape: the candidate set is the (vocabulary-sized, corpus-
-        independent) dictionary slice for the field, length-band pruned
-        JVM-side before the vectorized OSA pandas UDF — the same automaton
-        surrogate the fuzzy query uses — then ONE TakeOrdered. No postings
-        scan at all: suggestions are a dictionary-only read."""
-        from tantiny_spark.executor import _osa_udf
+        Plan shape: the field's dictionary rows are filtered JVM-side by
+        the length band and ``levenshtein(term, q, 2 * distance) >= 0``
+        (an OSA distance of c is a Levenshtein distance of at most 2c —
+        the same prefilter the fuzzy query uses) BEFORE the per-term df
+        sum and the vectorized OSA pandas UDF, which then see only the
+        candidates; then ONE TakeOrdered. No postings scan at all:
+        suggestions are a dictionary-only read."""
+        from tantiny_spark.executor import _fuzzy_candidates, _osa_udf
 
         if field not in (
             list(self.schema.text_fields) + list(self.schema.string_fields)
@@ -1154,14 +1157,11 @@ class Index:
         if distance < 1:
             raise ValueError("distance must be >= 1")
         osa = _osa_udf(term)
-        band = (
-            F.length(F.col("term")) >= len(term) - distance
-        ) & (F.length(F.col("term")) <= len(term) + distance)
         return (
             self.ctx.dictionary.where(F.col("field") == field)
+            .where(_fuzzy_candidates(term, distance) & (F.col("term") != term))
             .groupBy("term")
             .agg(F.sum("df").cast("long").alias("df"))
-            .where(band & (F.col("term") != term))
             .withColumn("distance", osa(F.col("term")).cast("int"))
             .where(F.col("distance") <= distance)
             .orderBy(

@@ -348,10 +348,22 @@ def connected_components(
 
     def _label_sum(frame) -> object:
         # exact decimal sum — bigint would overflow at 10^12 nodes with
-        # 10^12-scale ids (sum up to ~10^24)
-        return frame.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
+        # 10^12-scale ids (sum up to ~10^24). A decimal(38,0) overflow is
+        # NULL with ANSI off, and None == None would declare a false
+        # convergence, so a NULL sum over labels fails loudly instead (an
+        # empty graph's sum is NULL too, and its fixpoint is immediate)
+        row = frame.agg(
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+        s = row["s"]
+        if s is None and row["n"]:
+            for cached in (edges_once, both, labels, frame):
+                cached.unpersist()
+            raise RuntimeError(
+                "connected_components: the label sum overflowed decimal(38,0)"
+            )
+        return s
 
     prev_sum = _label_sum(labels)  # also materializes the caches
     # ``both`` is cached now; the raw-edge cache has served its purpose
@@ -407,6 +419,7 @@ def connected_components(
         )
         if pending > 0:
             both.unpersist()
+            labels.unpersist()
             raise RuntimeError(
                 f"connected_components did not converge in {max_iterations} "
                 f"iterations ({pending} labels still changing); raise "

@@ -190,6 +190,7 @@ class Snapshot:
                 postings=self.spark.createDataFrame([], POSTINGS_SCHEMA),
                 dictionary=empty_dict,
                 stats=empty_stats,
+                segments=0,
             )
 
         loaded = [
@@ -273,4 +274,5 @@ class Snapshot:
             postings=postings,
             dictionary=union_all(dict_parts).persist(),
             stats=union_all(stats_parts).persist(),
+            segments=len(dict_parts),
         )

@@ -35,6 +35,36 @@ def test_connected_components_long_chain_converges(spark):
     assert len(got) == 13
 
 
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_connected_components_unconverged_releases_caches(spark):
+    """The non-convergence error leaves no persisted frame behind."""
+    import pytest
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(8)], "a long, b long")
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(edges, max_iterations=2)
+    assert _persisted(spark) == before
+
+
+def test_connected_components_null_label_sum_raises(spark, monkeypatch):
+    """A NULL label sum (a decimal overflow with ANSI off) must fail loudly,
+    not compare equal to the previous NULL and pass as convergence."""
+    import pytest
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    before = _persisted(spark)
+    monkeypatch.setattr(
+        dedup.F, "sum", lambda col: F.lit(None).cast("decimal(38,0)")
+    )
+    with pytest.raises(RuntimeError, match="label sum"):
+        dedup.connected_components(edges)
+    assert _persisted(spark) == before
+
+
 def test_duplicate_clusters_labels_every_doc(spark):
     df = spark.createDataFrame(
         [

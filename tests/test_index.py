@@ -344,6 +344,63 @@ def test_assign_doc_ids_broadcast_path_matches_funnel(spark):
     assert sorted(r["id"] for r in rows) == ["a", "a", "b"]
 
 
+def test_inputs_that_read_differently_twice_keep_every_doc(spark, tmp_path):
+    """The broadcast doc-id path reads the input twice (the keys, then the
+    join). A limit over shuffled rows, or a nondeterministic id, can read
+    different rows the second time, and the join silently dropped them
+    (a 0-doc segment that claimed 64 docs); such inputs take the funnel,
+    which reads them once."""
+    from pyspark.sql import functions as F
+
+    from tantiny_spark.build import assign_doc_ids
+
+    s = IndexSchema()
+    s.text("t")
+    shuffled = spark.range(400).select(
+        F.format_string("d%04d", "id").alias("id"), F.lit("alpha beta").alias("t")
+    ).repartition(4)
+    random_ids = spark.range(20).select(
+        F.expr("reflect('java.util.UUID', 'randomUUID')").alias("id"),
+        F.lit("alpha beta").alias("t"),
+    )
+    for name, src, n in (("limit", shuffled.limit(64), 64), ("uuid", random_ids, 20)):
+        info: dict = {}
+        assign_doc_ids(src, "id", 0, num_partitions=1, info=info)
+        assert info["path"] == "funnel"
+        idx = Index(spark, str(tmp_path / name), s)
+        idx.add_dataframe(src)
+        idx.reload()
+        assert idx.ctx.docs.count() == n == idx.snapshot.next_doc_id
+        assert len(idx.search("alpha", limit=100)) == n
+
+
+def test_unflagged_nondeterministic_ids_fail_before_commit(spark, tmp_path):
+    """A UDF declared deterministic that is not reads different ids on the
+    join's second read, which the plan cannot show. The build's stats job
+    counts the stamped docs, and a count short of the input rows fails the
+    write before anything is committed."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from tantiny_spark.errors import TantinyError
+
+    s = IndexSchema()
+    s.text("t")
+    idx = Index(spark, str(tmp_path / "idx"), s)
+    idx.add({"id": "keep", "t": "alpha"})
+    version = idx.storage.current_version()
+    fresh_id = F.udf(lambda _: uuid.uuid4().hex, "string")
+    src = spark.range(20).select(
+        fresh_id("id").alias("id"), F.lit("alpha beta").alias("t")
+    )
+    with pytest.raises(TantinyError, match="deterministic"):
+        idx.add_dataframe(src)
+    assert idx.storage.current_version() == version
+    idx.reload()
+    assert idx.search("alpha") == ["keep"]
+
+
 def test_dict_table_matches_postings_recount(spark, tmp_path):
     """The stored dictionary is derived from block metadata (sum of block
     sizes); it must equal a direct recount of the stored postings rows."""

@@ -50,6 +50,21 @@ def test_suggest_ranks_distance_then_df(six):
     assert got2.index("data") < got2.index("date")
 
 
+def test_suggest_transpositions_at_distance_two(six):
+    """Two transpositions (OSA 2, Levenshtein 3) and a transposition plus a
+    substitution: the Levenshtein prefilter must allow 2 × distance, and
+    the ranking stays (distance asc, df desc, term asc)."""
+    def got(term):
+        return [
+            (r["term"], r["distance"], r["df"])
+            for r in six.suggest("text", term, distance=2).collect()
+        ]
+
+    assert got("sapkr") == [("spark", 2, 4)]
+    assert got("dtaa") == [("data", 1, 10), ("date", 2, 1)]
+    assert got("sprak") == [("spark", 1, 4), ("spork", 2, 1)]
+
+
 def test_suggest_validation(six):
     with pytest.raises(UnsupportedField):
         six.suggest("nope", "spark")

@@ -169,3 +169,67 @@ def test_term_or_two_fields(one_segment):
     for doc, score in one_segment.search_with_scores(phrase, limit=ALL):
         expected[doc] = expected.get(doc, 0.0) + score
     _assert_top_k(one_segment, P.disjunction(phrase, *plan.children), expected, 10)
+
+
+# terms that must survive the trip into a SQL literal: a quote, a
+# backslash, a newline, a backtick, ``${`` (variable substitution) and
+# non-ASCII text up to an astral emoji
+_ODD = ["it's", "back\\slash", "new\nline", "tick`tock", "été", "日本語", "a😀b", "${HOME}"]
+
+
+@pytest.fixture(scope="module")
+def odd_strings(spark, tmp_path_factory):
+    schema = IndexSchema()
+    schema.string("tag")
+    schema.text("text")
+    idx = Index(spark, str(tmp_path_factory.mktemp("odd") / "idx"), schema)
+    rows = [(f"d{i:03d}", _ODD[i % len(_ODD)], f"w{i % 3}") for i in range(48)]
+    idx.add_dataframe(spark.createDataFrame(rows, "id string, tag string, text string"))
+    return idx.reload(), {t: {r[0] for r in rows if r[1] == t} for t in _ODD}
+
+
+@pytest.mark.parametrize("term", _ODD)
+def test_odd_string_terms_round_trip(odd_strings, term):
+    """term_query, a flat OR, term_set_query and a prefix on a string field
+    match exactly the docs carrying the term, and the OR scores as the sum
+    of its terms' own scores."""
+    idx, owners = odd_strings
+    other = _ODD[(_ODD.index(term) + 1) % len(_ODD)]
+    assert set(idx.search(idx.term_query("tag", term), limit=ALL)) == owners[term]
+    assert set(
+        idx.search(idx.term_set_query("tag", [term, "nosuch"]), limit=ALL)
+    ) == owners[term]
+    assert set(idx.search(idx.prefix_query("tag", term), limit=ALL)) == owners[term]
+    expected = _expected(idx, [(("tag", term), 1.0), (("tag", other), 1.0)])
+    assert set(expected) == owners[term] | owners[other]
+    _assert_top_k(idx, _or("tag", [term, other, "nosuch"]), expected, ALL)
+
+
+def test_lookups_sum_segments_with_tombstones(spark, tmp_path):
+    """term_dfs and field_stats sum a term's per-segment rows over 3
+    segments; tombstoned docs keep counting in the dict df and the stats
+    until a merge rewrites them (Tantivy's freshness tradeoff)."""
+    schema = IndexSchema()
+    schema.text("text")
+    idx = Index(spark, str(tmp_path / "idx"), schema)
+    for seg in range(3):
+        rows = [(f"s{seg}d{i}", f"common seg{seg} u{seg}x{i}") for i in range(10)]
+        idx.add_dataframe(spark.createDataFrame(rows, "id string, text string"))
+    with idx.transaction():
+        for doc in ("s0d1", "s0d2", "s1d3", "s2d4"):
+            idx.delete(doc)
+    idx = idx.reload()
+    assert idx.ctx.segments == 3  # the pure-delete commit carries no dict
+    assert idx.ctx.term_dfs("text", ["common", "seg1", "u2x4", "nosuch"]) == {
+        "common": 30, "seg1": 10, "u2x4": 1, "nosuch": 0,
+    }
+    assert idx.ctx.field_stats("text") == (30, 3.0)
+    assert len(idx.search(P.Term("text", "common"), limit=ALL)) == 26
+
+    idx.merge_segments()
+    idx = idx.reload()
+    assert idx.ctx.segments == 1
+    assert idx.ctx.term_dfs("text", ["common", "seg1", "u2x4"]) == {
+        "common": 26, "seg1": 9, "u2x4": 0,
+    }
+    assert idx.ctx.field_stats("text") == (26, 3.0)
