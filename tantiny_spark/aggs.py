@@ -252,24 +252,23 @@ def _top_hits_build(
     optionally skipping ``from`` hits and carrying extra
     ``docvalue_fields``.
 
-    Scale shape — per-bucket top-k WITHOUT ranking whole buckets:
-
-    1. the base relation is (doc_id, bucket key, sort + docvalue columns),
-       column-pruned and semi-joined to the matched set;
-    2. a streaming per-partition prune (mapInPandas, the
-       ``_local_rank_prune`` pattern keyed by bucket) keeps only the
-       ``from+size`` best rows PER BUCKET PER PARTITION under the strict
-       total order (sort value, id asc) — memory O(buckets·k) per task,
-       and exact: a row outside its own partition's per-bucket top-k
-       cannot be in the global per-bucket top-k;
-    3. the final row_number window ranks ≤ partitions·k survivors per
-       bucket — parallel across buckets, never a corpus-wide sort.
+    Scale shape — per-bucket top-k WITHOUT ranking whole buckets: the
+    base relation is (bucket key, id, sort + docvalue columns),
+    column-pruned and semi-joined to the matched set, and ONE row_number
+    window over (bucket; sort value, id asc) keeps ranks ``from+1 ..
+    from+size``. Spark plans the per-bucket prune itself: a Partial
+    WindowGroupLimit keeps each partition's ``from+size`` best rows per
+    bucket below the exchange on the bucket key, so the window ranks at
+    most partitions·(from+size) rows per bucket — parallel across
+    buckets, never a corpus-wide sort. Spark inserts it only while
+    ``from+size`` is at most
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000);
+    above that, each bucket is ranked whole.
 
     Output: (root_name, hit_rank, id, <sort field>, <docvalue fields...>),
     ordered by (bucket asc, hit_rank asc); hit_rank is the 1-based rank
     within the bucket (absolute, so ``from`` pages keep their rank).
     """
-    import pandas as pd
     from pyspark.sql import Window
 
     size = int(hits_params.get("size", 3))
@@ -330,29 +329,11 @@ def _top_hits_build(
     base = base.join(ix.ctx.id_map, "doc_id").drop("doc_id")
 
     keep_n = from_ + size
-    ascending = dirn == "asc"
-    cols = base.columns
-    schema = base.schema
-
-    def prune(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            cur = pdf if best is None else pd.concat((best, pdf))
-            cur = cur.sort_values(
-                [root_name, sort_field, "id"],
-                ascending=[True, ascending, True],
-                kind="mergesort",
-            )
-            best = cur.groupby(root_name, sort=False).head(keep_n)
-        if best is not None and len(best):
-            yield best[cols]
-
-    pruned = base.mapInPandas(prune, schema)
     order = (
-        F.col(sort_field).asc() if ascending else F.col(sort_field).desc()
+        F.col(sort_field).asc() if dirn == "asc" else F.col(sort_field).desc()
     )
     w = Window.partitionBy(root_name).orderBy(order, F.col("id").asc())
-    ranked = pruned.withColumn(
+    ranked = base.withColumn(
         "hit_rank", F.row_number().over(w).cast("long")
     ).where((F.col("hit_rank") > from_) & (F.col("hit_rank") <= keep_n))
     out_cols = [root_name, "hit_rank", "id", sort_field]
@@ -507,8 +488,6 @@ def aggregate(ix, request: dict, query=None, **smart_opts) -> DataFrame:
     """Compile one ES/Tantivy-style aggregation request (module docstring)
     against ``ix``'s live snapshot, optionally restricted to the docs
     matching ``query``."""
-    from tantiny_spark.executor import compile_plan, prime_stats
-
     if not isinstance(request, dict) or len(request) != 1:
         raise ValueError("request must contain exactly one root aggregation")
     (root_name, root_spec), = request.items()
@@ -547,15 +526,9 @@ def aggregate(ix, request: dict, query=None, **smart_opts) -> DataFrame:
                 "single-level terms request for the bucket top-N first, "
                 "then top_hits filtered to those buckets"
             )
-        if query is not None:
-            plan = ix._as_plan(query, smart_opts)
-            prime_stats(plan, ix.ctx)
-            matched = compile_plan(plan, ix.ctx).select("doc_id")
-        else:
-            matched = None
         return _top_hits_build(
             ix, root_name, root_kind, root_params, h_spec["top_hits"],
-            matched,
+            ix._matched(query, smart_opts),
         )
 
     # split sub-aggs into metrics and (at most one) nested bucket
@@ -583,16 +556,9 @@ def aggregate(ix, request: dict, query=None, **smart_opts) -> DataFrame:
                 "composite roots take metric sub-aggs only — the sources "
                 "list IS the (multi-)bucket key"
             )
-        if query is not None:
-            plan = ix._as_plan(query, smart_opts)
-            prime_stats(plan, ix.ctx)
-            matched = compile_plan(plan, ix.ctx).select("doc_id")
-        else:
-            # no query → no matched-set semi-join at all (the groupBy
-            # path's convention; _matched_docs would semi-join the whole
-            # docs table against itself)
-            matched = None
-        return _composite_build(ix, root_params, root_metrics, matched)
+        return _composite_build(
+            ix, root_params, root_metrics, ix._matched(query, smart_opts)
+        )
 
     if root_kind == "range":
         if nested:
@@ -645,13 +611,7 @@ def aggregate(ix, request: dict, query=None, **smart_opts) -> DataFrame:
     # doc_id + postings term columns + the docs-table columns the
     # keys/metrics read. The docs scan is column-pruned; a postings-only
     # request never touches the docs table.
-    if query is not None:
-        plan = ix._as_plan(query, smart_opts)
-        prime_stats(plan, ix.ctx)
-        matched = compile_plan(plan, ix.ctx).select("doc_id")
-    else:
-        matched = None
-    base = _build_base(ix, levels, metrics, matched)
+    base = _build_base(ix, levels, metrics, ix._matched(query, smart_opts))
     # declared level order (root key first)
     keys = [name for name, _, _ in levels]
 

@@ -10,9 +10,10 @@ Reference: /root/reference/src/tokenizer.rs:27-65 and
 - ``ngram``    = character n-grams min..max over the raw text, optionally
   prefix-only, NO lowercasing (tokenizer.rs:47-65).
 
-These are pure-Python functions. The executor-side vectorized wrappers live in
-``tantiny_spark.analysis.udfs``; queries use the same functions driver-side so
-query-time and index-time analysis are identical (tokenizer.rb:24-26).
+These are pure-Python functions. The build's Arrow-batched analyzer
+(``tantiny_spark.build._flat_analyzer``) calls them executor-side, and queries
+call the same functions driver-side, so query-time and index-time analysis
+are identical (tokenizer.rb:24-26).
 """
 
 from __future__ import annotations

@@ -4,8 +4,9 @@ The Spark-native equivalent of the reference's write pipeline
 (lib/tantiny/index.rb:67-79 → src/index.rs:123-188): coerce fields per schema,
 tokenize, and build the four index tables for one *segment*:
 
-- ``docs``      doc_id, id, fast-field columns, facet ancestor arrays, and a
-                1-byte quantized fieldnorm per text field
+- ``docs``      doc_id, id, fast-field and facet columns, json sources with
+                their token counts, and per text field a 1-byte quantized
+                fieldnorm plus the token count
 - ``postings``  (field, term, doc_id, tf, positions, norm_id), sorted by
                 (field, term, doc_id) so Parquet row-group min/max stats prune
                 term lookups — the columnar stand-in for Tantivy's posting
@@ -277,12 +278,11 @@ def _flat_analyzer(schema: IndexSchema):
     facet_fields = list(schema.facet_fields)
 
     def _facet_ancestors(value: str) -> list:
-        # must match _ANCESTORS_EXPR exactly (property-pinned by
-        # tests/test_index.py::test_facet_ancestors_python_matches_jvm):
-        # split on '/', drop empty parts, emit every '/'-prefixed prefix.
-        # Quirk parity: for a part-less value ('', '/', '//') the JVM
-        # sequence(1, 0) DESCENDS ([1, 0]), so the expr emits ['/', '/'] —
-        # reproduce that byte-for-byte rather than "fixing" it here.
+        # split on '/', drop empty parts, emit every '/'-prefixed prefix
+        # (pinned by tests/test_index.py::test_facet_postings_terms). A
+        # part-less value ('', '/', '//') emits ['/', '/'], as every index
+        # built so far does: the same term twice, so the root posting of
+        # such a doc is stored twice.
         parts = [p for p in value.split("/") if p]
         if not parts:
             return ["/", "/"]
@@ -460,32 +460,24 @@ def _flat_analyzer(schema: IndexSchema):
     return stream
 
 
-_ANCESTORS_EXPR = (
-    "transform(sequence(1, size(filter(split({col}, '/'), p -> p != ''))), "
-    "i -> concat('/', array_join(slice(filter(split({col}, '/'), p -> p != ''), 1, i), '/')))"
-)
-
-
 def build_segment(
     spark: SparkSession,
     source: DataFrame,
     schema: IndexSchema,
     doc_id_base: int = 0,
-    num_partitions: Optional[int] = None,
-    work_dir: Optional[str] = None,
+    *,
+    work_dir: str,
 ) -> dict:
     """Run the full build pipeline over ``source`` (one column per schema
     field, id column named per schema.id_field). Returns the segment tables.
     Pure transformation — the caller (storage layer) commits.
 
     ``work_dir``: staging directory for the materialize-then-derive pattern —
-    the analyzed rows land in Parquet once and every derived table reads the
-    columnar files back (column-pruned, JVM-only). Without it the analyzed
-    rows are memory-persisted instead; at scale (and in the benchmarks) the
-    staging path wins: no giant nested-struct InMemoryRelation churning the
-    heap, and the tokenizer runs exactly once either way. The ``dict`` is
-    not built here: the storage layer derives it from the written postings
-    files (see storage.write_segment)."""
+    the analyzed rows land in Parquet once (the tokenizer's single pass) and
+    every derived table reads the columnar files back (column-pruned,
+    JVM-only). The caller deletes it once the tables are written. The
+    ``dict`` is not built here: the storage layer derives it from the
+    written postings files (see storage.write_segment)."""
     sid = schema.id_field
     cols = [F.col(sid).cast("string").alias("id")]
     for f in schema.string_fields:
@@ -516,16 +508,15 @@ def build_segment(
     # 139s at 1.5M before this fix). One cheap count scan prices the doc-id
     # exchange; the postings exchange is priced from the staged file bytes.
     n_input = projected.count()
-    if num_partitions is None:
-        if n_input <= DOCS_PER_PARTITION:
-            # the whole input fits one doc-id-sort partition: take the
-            # fast path in assign_doc_ids (no sampling / counting jobs)
-            num_partitions = 1
-        else:
-            num_partitions = max(
-                spark.sparkContext.defaultParallelism,
-                (n_input // DOCS_PER_PARTITION) + 1,
-            )
+    if n_input <= DOCS_PER_PARTITION:
+        # the whole input fits one doc-id-sort partition: take the fast
+        # path in assign_doc_ids (no sampling / counting jobs)
+        num_partitions = 1
+    else:
+        num_partitions = max(
+            spark.sparkContext.defaultParallelism,
+            (n_input // DOCS_PER_PARTITION) + 1,
+        )
     # Guard against an under-partitioned source (one giant file, a narrow
     # explode, a fresh createDataFrame): the doc-id range exchange runs a
     # sampling pass AND a shuffle-map pass over the FULL input lineage, and
@@ -563,28 +554,23 @@ def build_segment(
         if id_info.get("path") != "broadcast" or n_src_parts < analyzer_parts:
             with_ids = with_ids.repartition(analyzer_parts)
     stream_df = with_ids.mapInPandas(_flat_analyzer(schema), _flat_stream_schema(schema))
-    if work_dir is not None:
-        staged_path = os.path.join(work_dir, "analyzed")
-        stream_df.write.mode("overwrite").parquet(staged_path)
-        staged = spark.read.parquet(staged_path)
-        # the staging write was the single pass over the tokenizer; the
-        # doc-id-ordered input cache has no further consumers — release it
-        for c in cached:
-            c.unpersist()
-    else:
-        staged = stream_df.persist()
+    staged_path = os.path.join(work_dir, "analyzed")
+    stream_df.write.mode("overwrite").parquet(staged_path)
+    staged = spark.read.parquet(staged_path)
+    # the staging write was the single pass over the tokenizer; the
+    # doc-id-ordered input cache has no further consumers — release it
+    for c in cached:
+        c.unpersist()
 
     doc_rows = staged.where(F.col("field") == DOC_SENTINEL)
 
     # --- docs table -------------------------------------------------------
     doc_cols = [F.col("doc_id"), F.col("id")]
-    for f in schema.string_fields + schema.integer_fields + schema.double_fields + schema.date_fields:
+    for f in (
+        schema.string_fields + schema.integer_fields + schema.double_fields
+        + schema.date_fields + schema.facet_fields
+    ):
         doc_cols.append(F.col(f))
-    for f in schema.facet_fields:
-        doc_cols.append(F.col(f))
-        doc_cols.append(
-            F.expr(_ANCESTORS_EXPR.format(col=f)).alias(f"{f}__ancestors")
-        )
     for f in schema.json_fields:
         doc_cols.append(F.col(f))
         doc_cols.append(F.col(f"{f}__len"))
@@ -608,26 +594,24 @@ def build_segment(
     # range key splits Zipfian head terms across partitions instead of
     # concentrating them (skew handling, SURVEY.md §4). The range sampler and
     # the real pass each re-scan the explode — a cheap column-pruned read of
-    # the staged analyzed Parquet (or of the persisted rows without staging).
-    # Partition count scales with the staged bytes so each partition's sort
-    # fits in memory at any corpus size.
-    n_post_parts = max(spark.sparkContext.defaultParallelism, 2)
-    if work_dir is not None:
-        staged_bytes = 0
-        for root, _, files in os.walk(staged_path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    staged_bytes += os.path.getsize(os.path.join(root, f))
-        n_post_parts = max(
-            n_post_parts, (staged_bytes // POSTINGS_BYTES_PER_PARTITION) + 1
-        )
-        # small-input ceiling: don't range-shuffle a few MB of postings into
-        # a partition per core — each downstream phase (dict, stored
-        # reads) pays per-partition overhead
-        n_post_parts = max(
-            2,
-            min(n_post_parts, (staged_bytes // POSTINGS_MIN_BYTES_PER_PARTITION) + 1),
-        )
+    # the staged analyzed Parquet. Partition count scales with the staged
+    # bytes so each partition's sort fits in memory at any corpus size.
+    staged_bytes = 0
+    for root, _, files in os.walk(staged_path):
+        for f in files:
+            if f.endswith(".parquet"):
+                staged_bytes += os.path.getsize(os.path.join(root, f))
+    n_post_parts = max(
+        spark.sparkContext.defaultParallelism, 2,
+        (staged_bytes // POSTINGS_BYTES_PER_PARTITION) + 1,
+    )
+    # small-input ceiling: don't range-shuffle a few MB of postings into a
+    # partition per core — each downstream phase (dict, stored reads) pays
+    # per-partition overhead
+    n_post_parts = max(
+        2,
+        min(n_post_parts, (staged_bytes // POSTINGS_MIN_BYTES_PER_PARTITION) + 1),
+    )
     postings = postings.repartitionByRange(
         n_post_parts, "field", "term", "doc_id"
     ).sortWithinPartitions("field", "term", "doc_id")

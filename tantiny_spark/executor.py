@@ -208,16 +208,8 @@ def prime_stats_many(nodes: list, ctx: SearchContext) -> None:
 
 
 def prime_stats(node: P.Query, ctx: SearchContext) -> None:
-    """Warm the stats/df memo caches for a whole plan: per field, one
-    shuffle-free stats lookup and one shuffle-free dictionary lookup of all
-    its terms, each a single Spark job (instead of one driver job per node
-    during compilation)."""
-    per_field: dict = {}
-    _collect_stat_keys(node, per_field)
-    for field, terms in per_field.items():
-        ctx.field_stats(field)
-        if terms:
-            ctx.term_dfs(field, sorted(terms))
+    """:func:`prime_stats_many` for one plan."""
+    prime_stats_many([node], ctx)
 
 
 def _collect_stat_keys(node: P.Query, per_field: dict) -> None:
@@ -915,62 +907,46 @@ def _facet(node: P.Facet, ctx: SearchContext) -> DataFrame:
 
 
 def top_k(
-    result: DataFrame, ctx: SearchContext, limit: int = 10, offset: int = 0
+    result: DataFrame, ctx: SearchContext, limit: int = 10, offset: int = 0,
+    search_after: tuple | None = None,
 ) -> DataFrame:
     """Deterministic top-k: score desc, then id asc (the reference's heap tie
     order is incidental; ours is pinned). Compiles to TakeOrderedAndProject —
     per-partition partial top-k, no global sort. A non-zero ``offset``
     (pagination) stays inside the same operator: Spark's ordered
     offset+limit folds into TakeOrderedAndProject(offset=...), so page 100
-    costs a partial top-(offset+limit), never a corpus sort."""
-    out = result.join(ctx.id_map, "doc_id").orderBy(
-        F.col("score").desc(), F.col("id").asc()
-    )
+    costs a partial top-(offset+limit), never a corpus sort.
+
+    ``search_after`` is ES-style cursor pagination: the previous page's
+    last hit (id, score), exactly as search_with_scores returns it; only
+    hits strictly after it in the (score desc, id asc) order are ranked.
+    Unlike ``offset``, page depth costs nothing extra — the cursor is a
+    plain filter ahead of the same top-k, so page 10^6 scans and ranks
+    exactly like page 1."""
+    out = result.join(ctx.id_map, "doc_id")
+    if search_after is not None:
+        if offset:
+            raise ValueError("search_after and offset are exclusive")
+        try:
+            after_id, after_score = search_after
+            after_score = float(after_score)
+            after_id = str(after_id)
+        except (TypeError, ValueError) as e:
+            raise ValueError(
+                "search_after must be an (id, score) cursor — the last hit "
+                "of the previous page as search_with_scores returns it"
+            ) from e
+        out = out.where(
+            (F.col("score") < F.lit(after_score))
+            | (
+                (F.col("score") == F.lit(after_score))
+                & (F.col("id") > F.lit(after_id))
+            )
+        )
+    out = out.orderBy(F.col("score").desc(), F.col("id").asc())
     if offset:
         out = out.offset(offset)
     return out.limit(limit).select("id", "score")
-
-
-BATCH_SCHEMA = T.StructType(
-    [
-        T.StructField("query", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
-
-
-def batch_rank_prune(tagged: DataFrame, k: int) -> DataFrame:
-    """Per-partition, per-query top-(k+ties) pre-filter for the batched
-    search path: a shuffle-free prune keyed by query tag.
-
-    A row whose own partition already holds >=k strictly-greater scores
-    FOR ITS QUERY has global per-query rank >k, so dropping it cannot
-    change the final row_number<=k set; rows tied with the local k-th
-    score survive, so the (score desc, id asc) tie-break still sees every
-    boundary candidate. Without this, the final Window.partitionBy(query)
-    ranks each query's ENTIRE matched doc-set in one task (a negation
-    matches ~the whole corpus); with it, each task forwards O(k) rows per
-    query."""
-
-    import numpy as np
-
-    def prune(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            cur = pdf if best is None else pd.concat((best, pdf))
-            kept = []
-            for _, g in cur.groupby("query", sort=False):
-                if len(g) > k:
-                    s = g["score"].to_numpy()
-                    kth = np.partition(s, len(s) - k)[len(s) - k]
-                    g = g[g["score"] >= kth]
-                kept.append(g)
-            best = pd.concat(kept) if kept else None
-        if best is not None and len(best):
-            yield best[["query", "doc_id", "score"]]
-
-    return tagged.mapInPandas(prune, BATCH_SCHEMA)
 
 
 def collapse_top_k(

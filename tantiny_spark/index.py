@@ -28,7 +28,7 @@ from tantiny_spark.errors import (
     IndexWriterBusyError, UnexpectedNone, UnsupportedField,
 )
 from tantiny_spark.executor import compile_plan, prime_stats, top_k
-from tantiny_spark.schema import IndexSchema
+from tantiny_spark.schema import SPARK_TYPES, IndexSchema
 from tantiny_spark.storage import IndexStorage, Snapshot
 
 DEFAULT_LIMIT = 10  # index.rb:7
@@ -76,8 +76,9 @@ class Index:
         self._ctx = None
         self._in_txn = False
         self._pending_ops: list = []  # ordered ('add', row) / ('del', id)
-        # compiled-query LRU (Lucene QueryCache analog): plan nodes are
-        # frozen dataclasses → (plan, limit, offset, cursor) keys; a cache
+        # compiled-query LRU (Lucene QueryCache analog): queries (frozen
+        # plan dataclasses or strings) → (query, smart options, limit,
+        # offset, cursor) keys; a cache
         # hit returns the SAME DataFrame object, so Spark reuses the
         # already-analyzed/codegen'd QueryExecution — repeat queries pay
         # only physical execution (~40 ms vs ~450 ms at sf0.1, measured).
@@ -334,9 +335,7 @@ class Index:
         driver. Returns the number of ids queued."""
         if max_deletes <= 0:
             raise ValueError("max_deletes must be positive")
-        plan = self._as_plan(query, smart_opts)
-        prime_stats(plan, self.ctx)
-        matched = compile_plan(plan, self.ctx).select("doc_id").distinct()
+        matched = self._matched(query, smart_opts).distinct()
         head = (
             matched.join(self.ctx.id_map, "doc_id")
             .select("id")
@@ -397,14 +396,8 @@ class Index:
             return None
         fields = [T.StructField("__order", T.IntegerType(), False)]
         sch = self.schema
-        spark_types = {
-            "id": T.StringType(), "text": T.StringType(), "string": T.StringType(),
-            "integer": T.LongType(), "double": T.DoubleType(),
-            "date": T.TimestampType(), "facet": T.StringType(),
-            "json": T.StringType(),
-        }
         for name, kind in sch.fields.items():
-            fields.append(T.StructField(name, spark_types[kind], True))
+            fields.append(T.StructField(name, SPARK_TYPES[kind], True))
         data = []
         for i, row in enumerate(rows):
             rec = [i] + [row.get(name) for name in sch.fields]
@@ -715,59 +708,27 @@ class Index:
         """Top ``limit`` hits of ``query`` as DataFrame[id, score], ordered
         score desc, id asc. ``offset`` pages inside the same
         TakeOrderedAndProject (a partial top-(offset+limit), never a global
-        sort); ``search_after`` is a cursor filter ahead of the same top-k.
-        Compiled plans are cached per (plan, limit, offset, cursor)."""
+        sort); ``search_after`` is a cursor filter ahead of the same top-k
+        (both in executor.top_k). Compiled plans are cached per (query,
+        smart options, limit, offset, cursor), looked up before the query
+        is planned, so a hit costs no planning at all."""
         if offset < 0:
             raise ValueError("offset must be >= 0")
-        plan = self._as_plan(query, smart_opts)
         try:
-            cache_key = (plan, limit, offset, search_after)
+            cache_key = (
+                query, tuple(sorted(smart_opts.items())), limit, offset,
+                search_after,
+            )
             hit = self._query_cache.get(cache_key)
-        except TypeError:  # unhashable plan payload — skip the cache
+        except TypeError:  # unhashable query payload — skip the cache
             cache_key, hit = None, None
         if hit is not None:
             self._query_cache.move_to_end(cache_key)
             return hit
-        # resolve every global stat the plan needs: per field, one
-        # shuffle-free stats lookup and one shuffle-free dictionary lookup
-        prime_stats(plan, self.ctx)
-        if search_after is not None:
-            # ES-style cursor pagination: strictly after the (score, id)
-            # cursor in the pinned (score desc, id asc) order. Unlike
-            # offset=N, page depth costs NOTHING extra — the cursor is a
-            # plain filter ahead of the same top-k, so page 10^6 of a
-            # web-scale result set scans and ranks exactly like page 1.
-            if offset:
-                raise ValueError("search_after and offset are exclusive")
-            try:
-                # the cursor is a previous-page hit EXACTLY as
-                # search_with_scores returns it: (id, score)
-                after_id, after_score = search_after
-                after_score = float(after_score)
-                after_id = str(after_id)
-            except (TypeError, ValueError) as e:
-                raise ValueError(
-                    "search_after must be an (id, score) cursor — the last "
-                    "hit of the previous page as search_with_scores "
-                    "returns it"
-                ) from e
-            ranked = compile_plan(plan, self.ctx).join(
-                self.ctx.id_map, "doc_id"
-            )
-            cursor = (F.col("score") < F.lit(after_score)) | (
-                (F.col("score") == F.lit(after_score))
-                & (F.col("id") > F.lit(after_id))
-            )
-            out = (
-                ranked.where(cursor)
-                .orderBy(F.col("score").desc(), F.col("id").asc())
-                .limit(limit)
-                .select("id", "score")
-            )
-            return self._cache_query(cache_key, out)
-        return self._cache_query(
-            cache_key, top_k(compile_plan(plan, self.ctx), self.ctx, limit, offset)
-        )
+        return self._cache_query(cache_key, top_k(
+            self._compile(query, smart_opts), self.ctx, limit, offset,
+            search_after,
+        ))
 
     #: compiled-query LRU capacity — enough for any realistic hot query set
     #: while bounding the DataFrame references a long-lived reader pins
@@ -801,9 +762,7 @@ class Index:
                 f"search_by_field needs an integer/double/date field, "
                 f"got {field!r}"
             )
-        plan = self._as_plan(query, smart_opts)
-        prime_stats(plan, self.ctx)
-        matched = compile_plan(plan, self.ctx).select("doc_id")
+        matched = self._matched(query, smart_opts)
         vals = self.ctx.docs.where(F.col(field).isNotNull()).select(
             "doc_id", F.col(field).alias("value")
         )
@@ -843,10 +802,8 @@ class Index:
             )
         if limit < 1:
             raise ValueError("limit must be >= 1")
-        plan = self._as_plan(query, smart_opts)
-        prime_stats(plan, self.ctx)
         return collapse_top_k(
-            compile_plan(plan, self.ctx), self.ctx, collapse, limit
+            self._compile(query, smart_opts), self.ctx, collapse, limit
         )
 
     def rescore(
@@ -870,16 +827,12 @@ class Index:
             raise ValueError("window_size must be >= 1")
         if limit > window_size:
             raise ValueError("limit cannot exceed window_size")
-        plan = self._as_plan(query, smart_opts)
-        prime_stats(plan, self.ctx)
         window = (
-            compile_plan(plan, self.ctx).join(self.ctx.id_map, "doc_id")
+            self._compile(query, smart_opts).join(self.ctx.id_map, "doc_id")
             .orderBy(F.col("score").desc(), F.col("id").asc())
             .limit(window_size)
         )
-        rplan = self._as_plan(rescore_query, {})
-        prime_stats(rplan, self.ctx)
-        second = compile_plan(rplan, self.ctx).select(
+        second = self._compile(rescore_query).select(
             "doc_id", F.col("score").alias("__rescore")
         )
         return (
@@ -929,9 +882,7 @@ class Index:
             raise ValueError("modifier must be none | log1p | sqrt")
         if boost_mode not in ("multiply", "sum"):
             raise ValueError("boost_mode must be multiply | sum")
-        plan = self._as_plan(query, smart_opts)
-        prime_stats(plan, self.ctx)
-        matched = compile_plan(plan, self.ctx)
+        matched = self._compile(query, smart_opts)
         val = (
             F.coalesce(F.col(field), F.lit(float(missing))).cast("double")
             * F.lit(float(factor))
@@ -993,11 +944,9 @@ class Index:
         the searcher-count companion to search(): no ranking, no top-k, so
         the plan is a pure matched-set count that Catalyst prunes down to
         the postings scan (score expressions are projected away)."""
-        plan = self._as_plan(
+        return self._compile(
             self.all_query() if query is None else query, smart_opts
-        )
-        prime_stats(plan, self.ctx)
-        return compile_plan(plan, self.ctx).count()
+        ).count()
 
     def stats_df(self, field: str, query=None, **smart_opts) -> DataFrame:
         """Numeric stats aggregation over the docs matching ``query`` (all
@@ -1011,12 +960,7 @@ class Index:
             self.schema.integer_fields + self.schema.double_fields
         ):
             raise UnsupportedField(field)
-        docs = self.ctx.docs
-        if query is not None:
-            plan = self._as_plan(query, smart_opts)
-            prime_stats(plan, self.ctx)
-            matched = compile_plan(plan, self.ctx).select("doc_id")
-            docs = docs.join(matched, "doc_id", "left_semi")
+        docs = self._matched_docs(query, smart_opts)
         col = F.col(field).cast("double")
         return docs.agg(
             F.count(col).alias("n_vals"),
@@ -1044,10 +988,8 @@ class Index:
         ):
             raise UnsupportedField(field)
         posts = self.ctx.postings.where(F.col("field") == field)
-        if query is not None:
-            plan = self._as_plan(query, smart_opts)
-            prime_stats(plan, self.ctx)
-            matched = compile_plan(plan, self.ctx).select("doc_id")
+        matched = self._matched(query, smart_opts)
+        if matched is not None:
             posts = posts.join(matched, "doc_id", "left_semi")
         return (
             posts.groupBy("term")
@@ -1090,16 +1032,11 @@ class Index:
             )
         if min_doc_count < 1:
             raise ValueError("min_doc_count must be >= 1")
-        plan = self._as_plan(query, smart_opts)
-        prime_stats(plan, self.ctx)
         # localCheckpoint: fg_n (a scalar the score expression needs as a
         # literal) forces one execution of the matched set; without it the
         # fg semi-join would re-run the whole query plan a second time
         # (the duplicate_clusters lineage-truncation precedent)
-        matched = (
-            compile_plan(plan, self.ctx).select("doc_id")
-            .localCheckpoint(eager=True)
-        )
+        matched = self._matched(query, smart_opts).localCheckpoint(eager=True)
         fg_n = matched.count()
         if fg_n == 0:
             return self.spark.createDataFrame(
@@ -1191,12 +1128,7 @@ class Index:
             self.schema.integer_fields + self.schema.double_fields
         ):
             raise UnsupportedField(field)
-        docs = self.ctx.docs
-        if query is not None:
-            plan = self._as_plan(query, smart_opts)
-            prime_stats(plan, self.ctx)
-            matched = compile_plan(plan, self.ctx).select("doc_id")
-            docs = docs.join(matched, "doc_id", "left_semi")
+        docs = self._matched_docs(query, smart_opts)
         # timestamp→long cast is epoch seconds; numeric stays double
         val = F.col(field).cast("long" if is_date else "double").cast("double")
         bucket = F.floor(val / F.lit(float(interval))) * F.lit(float(interval))
@@ -1213,10 +1145,8 @@ class Index:
         """Docs table, optionally semi-joined to a query's matched set —
         the shared front half of every aggregation."""
         docs = self.ctx.docs
-        if query is not None:
-            plan = self._as_plan(query, smart_opts)
-            prime_stats(plan, self.ctx)
-            matched = compile_plan(plan, self.ctx).select("doc_id")
+        matched = self._matched(query, smart_opts)
+        if matched is not None:
             docs = docs.join(matched, "doc_id", "left_semi")
         return docs
 
@@ -1326,10 +1256,8 @@ class Index:
         shuffle."""
         if field in self.schema.text_fields:
             vals = self.ctx.postings.where(F.col("field") == field)
-            if query is not None:
-                plan = self._as_plan(query, smart_opts)
-                prime_stats(plan, self.ctx)
-                matched = compile_plan(plan, self.ctx).select("doc_id")
+            matched = self._matched(query, smart_opts)
+            if matched is not None:
                 vals = vals.join(matched, "doc_id", "left_semi")
             col = F.col("term")
         elif field in self.schema.fields:
@@ -1448,61 +1376,52 @@ class Index:
 
         if field not in self.schema.facet_fields:
             raise UnsupportedField(field)
-        matched = None
-        if query is not None:
-            plan = self._as_plan(query, smart_opts)
-            prime_stats(plan, self.ctx)
-            matched = compile_plan(plan, self.ctx)
-        return _fc(self.ctx, field, prefix, matched, limit)
+        return _fc(
+            self.ctx, field, prefix, self._matched(query, smart_opts), limit
+        )
 
     def search_many(self, queries: dict, limit: int = DEFAULT_LIMIT) -> dict:
         """Execute a batch of queries as ONE Spark job: each plan compiles to
-        a tagged doc-set, the union is ranked per query with a single window.
-        This is how query *throughput* scales on a cluster — per-query job
-        overhead is paid once per batch, not once per query. Returns
-        {name: [ids...]} with the same deterministic ordering as search()."""
-        from pyspark.sql import Window, functions as F
+        a tagged doc-set, and the union is joined to the external ids and
+        ranked per query by one ``row_number`` window over (query; score
+        desc, id asc) <= ``limit`` — the same join-then-rank shape as
+        search()'s top_k, so the ordering is identical. This is how query
+        *throughput* scales on a cluster: per-query job overhead is paid
+        once per batch, not once per query. Returns {name: [ids...]}.
 
-        from tantiny_spark.executor import prime_stats_many
+        Spark plans the per-query top-k itself: a Partial WindowGroupLimit
+        keeps each partition's top-``limit`` rows per query below the
+        exchange on query, so the window never ranks a query's whole
+        matched set in one task. Spark inserts it only while ``limit`` is
+        at most ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+        1000); above that, each query's matched set is ranked whole."""
+        from pyspark.sql import Window
 
-        plans = {name: self._as_plan(q, {}) for name, q in queries.items()}
         # the whole batch plan rides the compiled-query LRU (same staleness
         # semantics as search_df's cache — cleared on reload()): a repeated
         # batch pays py4j plan construction once, execution every call
         try:
-            cache_key = (
-                "__batch__", tuple(sorted(plans.items())), limit,
-            )
+            cache_key = ("__batch__", tuple(sorted(queries.items())), limit)
             ranked = self._query_cache.get(cache_key)
-        except TypeError:  # unhashable plan payload — skip the cache
+        except TypeError:  # unhashable query payload — skip the cache
             cache_key, ranked = None, None
         if ranked is not None:
             self._query_cache.move_to_end(cache_key)
         else:
-            # one batched dictionary/stats lookup per field for the batch
-            prime_stats_many(list(plans.values()), self.ctx)
-            tagged = []
-            for name, plan in plans.items():
-                tagged.append(
-                    compile_plan(plan, self.ctx).select(
-                        F.lit(name).alias("query"), "doc_id", "score"
-                    )
+            tagged = [
+                df.select(F.lit(name).alias("query"), "doc_id", "score")
+                for name, df in zip(
+                    queries, self._compile_many(list(queries.values()))
                 )
+            ]
             unioned = tagged[0]
             for t in tagged[1:]:
                 unioned = unioned.unionByName(t)
-            # per-partition per-query top-(k+ties) BEFORE the global window:
-            # the window's partitionBy(query) otherwise ranks each query's
-            # whole matched set in one task (batch_rank_prune docstring)
-            from tantiny_spark.executor import batch_rank_prune
-
-            unioned = batch_rank_prune(unioned, limit)
-            ids = self.ctx.id_map
             w = Window.partitionBy("query").orderBy(
                 F.col("score").desc(), F.col("id").asc()
             )
             ranked = (
-                unioned.join(ids, "doc_id")
+                unioned.join(self.ctx.id_map, "doc_id")
                 .withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= limit)
                 .select("query", "id", "rank")
@@ -1513,6 +1432,33 @@ class Index:
         for r in sorted(rows, key=lambda r: (r["query"], r["rank"])):
             out[r["query"]].append(r["id"])
         return out
+
+    # --- the compile step of every read --------------------------------------
+    def _compile(self, query, smart_opts: dict | None = None) -> DataFrame:
+        """The one compile step of every Index read: ``query`` (a plan, or
+        a string for a smart query over the text fields) → its plan → the
+        global stats it needs, primed in one lookup per field → DataFrame
+        [doc_id, score]. Priming memoizes on the snapshot context, so a
+        plan whose stats are already primed starts no job here."""
+        plan = self._as_plan(query, smart_opts or {})
+        prime_stats(plan, self.ctx)
+        return compile_plan(plan, self.ctx)
+
+    def _compile_many(self, queries: list) -> list:
+        """:meth:`_compile` for a batch: the stats of every plan are primed
+        together, one lookup per field for the whole batch."""
+        from tantiny_spark.executor import prime_stats_many
+
+        plans = [self._as_plan(q, {}) for q in queries]
+        prime_stats_many(plans, self.ctx)
+        return [compile_plan(plan, self.ctx) for plan in plans]
+
+    def _matched(self, query, smart_opts: dict | None = None):
+        """The matched ``doc_id`` set of ``query`` (:meth:`_compile` with
+        the scores projected away), or None when there is no query."""
+        if query is None:
+            return None
+        return self._compile(query, smart_opts).select("doc_id")
 
     def _as_plan(self, query, smart_opts) -> P.Query:
         if isinstance(query, P.Query):

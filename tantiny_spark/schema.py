@@ -26,7 +26,8 @@ from tantiny_spark.errors import UnknownField
 
 FIELD_KINDS = ("id", "text", "string", "integer", "double", "date", "facet", "json")
 
-_SPARK_TYPES = {
+#: Spark column type of each field kind (pending-document rows)
+SPARK_TYPES = {
     "id": T.StringType(),
     "text": T.StringType(),
     "string": T.StringType(),
@@ -163,34 +164,6 @@ class IndexSchema:
             return datetime.fromisoformat(str(value).replace("Z", "+00:00"))
         raise UnknownField(field)
 
-    # --- docs-table layout -------------------------------------------------
-    def docs_struct(self) -> T.StructType:
-        """Schema of the ``docs`` index table: doc_id, id, fast-field columns,
-        facet-ancestors arrays, and one fieldnorm-id byte column per text
-        field (SURVEY.md §1.5)."""
-        cols = [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("id", T.StringType(), False),
-        ]
-        for name in self.string_fields:
-            cols.append(T.StructField(name, T.StringType(), True))
-        for name in self.integer_fields:
-            cols.append(T.StructField(name, T.LongType(), True))
-        for name in self.double_fields:
-            cols.append(T.StructField(name, T.DoubleType(), True))
-        for name in self.date_fields:
-            cols.append(T.StructField(name, T.TimestampType(), True))
-        for name in self.facet_fields:
-            cols.append(T.StructField(name, T.StringType(), True))
-            cols.append(
-                T.StructField(f"{name}__ancestors", T.ArrayType(T.StringType()), True)
-            )
-        for name in self.json_fields:
-            cols.append(T.StructField(name, T.StringType(), True))
-        for name in self.text_fields:
-            cols.append(T.StructField(f"{name}__norm", T.IntegerType(), True))
-        return T.StructType(cols)
-
     # --- (de)serialization so the schema persists with the index ----------
     def to_json(self) -> str:
         def tok(t: Tokenizer) -> dict:
@@ -254,14 +227,3 @@ class IndexSchema:
             json_fields=list(d.get("json_fields", [])),
             field_tokenizers={k: tok(v) for k, v in d["field_tokenizers"].items()},
         )
-
-
-def facet_ancestors(path: str) -> list[str]:
-    """All ancestor paths of a facet path, itself included: "/a/b/c" →
-    ["/a", "/a/b", "/a/b/c"]. Enables the reference's hierarchy semantics
-    (a query on "/animals" matches "/animals/birds",
-    spec/tantiny/query_spec.rb:259-262) as a simple array_contains."""
-    if not path or not path.startswith("/"):
-        return [path] if path else []
-    parts = [p for p in path.split("/") if p]
-    return ["/" + "/".join(parts[: i + 1]) for i in range(len(parts))]

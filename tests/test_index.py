@@ -436,32 +436,43 @@ def test_dict_table_matches_postings_recount(spark, tmp_path):
     assert stored_dict == recount
 
 
-def test_facet_ancestors_python_matches_jvm(spark):
-    """The analyzer's Python facet-ancestor expansion must match the JVM
-    _ANCESTORS_EXPR used for the docs table for every path shape."""
+def test_facet_postings_terms(spark, tmp_path):
+    """A facet value is indexed as one posting per ancestor path, for every
+    path shape: empty parts are dropped and every '/'-prefixed prefix is a
+    term. A part-less value keeps the ['/', '/'] terms every index built so
+    far carries. The docs table holds no ancestors column."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from tantiny_spark.build import _ANCESTORS_EXPR
-
-    values = [
-        "/a/b/c", "a/b", "/a", "a", "", "/", "//", "/a//b/", "a/b/c/",
-        "/x y/z", "/ünï/codé",
-    ]
-    df = spark.createDataFrame(pd.DataFrame({"cat": values}))
-    jvm = {
-        r["cat"]: list(r["anc"])
-        for r in df.select(
-            "cat", F.expr(_ANCESTORS_EXPR.format(col="cat")).alias("anc")
-        ).collect()
+    expected = {
+        "/a/b/c": ["/a", "/a/b", "/a/b/c"],
+        "a/b": ["/a", "/a/b"],
+        "/a": ["/a"],
+        "a": ["/a"],
+        "": ["/", "/"],
+        "/": ["/", "/"],
+        "//": ["/", "/"],
+        "/a//b/": ["/a", "/a/b"],
+        "a/b/c/": ["/a", "/a/b", "/a/b/c"],
+        "/x y/z": ["/x y", "/x y/z"],
+        "/ünï/codé": ["/ünï", "/ünï/codé"],
     }
-    # mirror of build._flat_analyzer's _facet_ancestors (incl. the
-    # sequence(1,0)-descends quirk for part-less values)
-    def py_anc(value):
-        parts = [p for p in value.split("/") if p]
-        if not parts:
-            return ["/", "/"]
-        return ["/" + "/".join(parts[: i + 1]) for i in range(len(parts))]
-
-    for v in values:
-        assert py_anc(v) == jvm[v], (v, py_anc(v), jvm[v])
+    values = list(expected)
+    s = IndexSchema()
+    s.facet("cat")
+    ix = Index(spark, str(tmp_path / "facets"), s)
+    ix.add_dataframe(spark.createDataFrame(pd.DataFrame(
+        {"id": [str(i) for i in range(len(values))], "cat": values}
+    )))
+    ix.reload()
+    got: dict = {}
+    for r in (
+        ix.ctx.postings.where(F.col("field") == "cat")
+        .join(ix.ctx.id_map, "doc_id").select("id", "term").collect()
+    ):
+        got.setdefault(values[int(r["id"])], []).append(r["term"])
+    assert {v: sorted(t) for v, t in got.items()} == expected
+    assert not [c for c in ix.ctx.docs.columns if c.endswith("__ancestors")]
+    assert sorted(ix.search(ix.facet_query("cat", "/a"), limit=20)) == sorted(
+        str(i) for i, v in enumerate(values) if expected[v][0] == "/a"
+    )

@@ -275,27 +275,3 @@ def test_significant_terms_single_corpus_pass(plan_index):
     # dictionary, never the corpus
     assert plan.count("Exchange hashpartitioning(term") <= 2
     assert "TakeOrderedAndProject" in plan
-
-
-def test_top_hits_prune_precedes_window(spark, tmp_path_factory):
-    """top_hits ranks buckets only AFTER the per-partition streaming prune:
-    the physical plan must show the mapInPandas prune feeding the Window
-    (never a Window straight over the corpus scan)."""
-    s = IndexSchema()
-    s.string("tag")
-    s.integer("n")
-    ix = Index(spark, str(tmp_path_factory.mktemp("tophits") / "idx"), s)
-    ix.add_dataframe(spark.createDataFrame(
-        [(str(i), f"t{i % 3}", i * 7) for i in range(30)],
-        "id string, tag string, n long",
-    ))
-    ix = ix.reload()
-    plan = _physical(ix.aggregate(
-        {"tags": {"terms": {"field": "tag"},
-                  "aggs": {"h": {"top_hits": {
-                      "size": 2, "sort": [{"n": "desc"}]}}}}}
-    ))
-    assert "Window" in plan
-    # the Arrow-batched prune sits below the window in the plan tree
-    # (executedPlan prints children after parents)
-    assert plan.index("Window") < plan.index("MapInPandas")

@@ -4,7 +4,7 @@ import pytest
 
 from tantiny_spark.analysis.tokenizers import Tokenizer
 from tantiny_spark.errors import UnknownField
-from tantiny_spark.schema import IndexSchema, facet_ancestors
+from tantiny_spark.schema import IndexSchema
 
 
 def test_field_registration_per_type():
@@ -88,9 +88,3 @@ def test_roundtrip_json():
     assert back.fields == s.fields
     assert back.tokenizer_for("a") == Tokenizer("ngram", min_gram=2, max_gram=4, prefix_only=True)
     assert back.default_tokenizer.language == "en"
-
-
-def test_facet_ancestors():
-    assert facet_ancestors("/animals/birds") == ["/animals", "/animals/birds"]
-    assert facet_ancestors("/humans") == ["/humans"]
-    assert facet_ancestors("") == []

@@ -78,23 +78,6 @@ def test_language_registry_matches_reference():
     assert "en" in SUPPORTED_LANGUAGES and "ru" in SUPPORTED_LANGUAGES
 
 
-def test_tokens_udf_matches_pure_function(spark):
-    from pyspark.sql import functions as F
-
-    from tantiny_spark.analysis.udfs import tokens_udf
-
-    texts = [
-        "Well, not even last night's storm could wake you.",
-        "Hello World!",
-        None,
-        "",
-    ]
-    tok = Tokenizer.new("stemmer", language="en")
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [r[0] for r in df.select(tokens_udf(tok)(F.col("text"))).collect()]
-    assert got == [tok.terms(t) if t is not None else [] for t in texts]
-
-
 def test_simple_split_rust_alnum_parity():
     """The word-char class matches Rust char::is_alphanumeric (what
     Tantivy's SimpleTokenizer splits on), not Python's narrower \\w:
