@@ -125,8 +125,8 @@ def main():
 
     # SPARK_GRAFT_MASTER overrides local[N] — e.g. spark://host:7077 when the
     # bench runs against a standalone cluster via spark-submit --py-files
-    # (scripts/cluster_bench.sh); SPARK_GRAFT_CPUS then sizes shuffle
-    # partitions only.
+    # (BENCH/CLUSTER.md); SPARK_GRAFT_CPUS then sizes shuffle partitions
+    # only.
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     spark = (
         SparkSession.builder.master(master)

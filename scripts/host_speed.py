@@ -1,6 +1,6 @@
 """Fixed-CPU-work host-speed calibration for a shared, noisy VM.
 
-The latency probe (scripts/probe_gated_sweep.sh) catches scheduler stalls,
+A latency probe (tiny Spark jobs timed back to back) catches scheduler stalls,
 but NOT noisy-neighbor throughput degradation: a sibling VM saturating the
 physical cores' memory bandwidth / SMT siblings cuts instructions-per-cycle
 severalfold while tiny `spark.range(100).count()` jobs still complete in
@@ -224,9 +224,9 @@ def main() -> int:
     # ABSOLUTE floors calibrated from the 2026-08-17/18 clean-vs-degraded
     # distributions (HOSTSPEED.jsonl). The earlier relative-to-best rule
     # ratcheted on every metric's one-off burst (553 MB/s disk, 240 GB/s
-    # memcpy) and then refused demonstrably clean windows; the engine-work
-    # mini-build in gated_sweep_v2.sh stays the decisive gate, these floors
-    # only filter gross collapse. vs_best stays in the record for context.
+    # memcpy) and then refused demonstrably clean windows; an engine-work
+    # mini-build is the decisive gate, these floors only filter gross
+    # collapse. vs_best stays in the record for context.
     floors = {
         # 2026-08-19 recalibration: the new CPUID regime runs the PINNED
         # HASWELL kernel at 30-53 GFLOPS with high per-window variance

@@ -2,7 +2,8 @@
 
 The Spark-native equivalent of the reference's write pipeline
 (lib/tantiny/index.rb:67-79 → src/index.rs:123-188): coerce fields per schema,
-tokenize, and build the four index tables for one *segment*:
+tokenize, and build the three index tables of one *segment*, plus its BM25
+totals:
 
 - ``docs``      doc_id, id, fast-field and facet columns, json sources with
                 their token counts, and per text field a 1-byte quantized
@@ -13,7 +14,9 @@ tokenize, and build the four index tables for one *segment*:
                 lists + fieldnorm file
 - ``dict``      (field, term, df) — the term dictionary, derived by the
                 storage layer from the written postings
-- ``stats``     (field, num_docs, total_tokens, avgdl) — BM25 global stats
+- BM25 totals  ``{"num_docs": n, "tokens": {field: total_tokens}}`` — a few
+                numbers the storage layer keeps in the segment's manifest
+                entry, not in a table (Tantivy's segment metadata)
 
 Scale notes (the 100 TB story):
 - doc_id assignment is a deterministic global rank of ``id`` computed with
@@ -53,35 +56,21 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-STATS_SCHEMA = "field string, num_docs long, total_tokens long, avgdl double"
-
-
-def stats_table(
-    spark: SparkSession, schema: IndexSchema, docs: DataFrame
-) -> tuple:
-    """BM25 global stats rows (field, num_docs, total_tokens, avgdl) of a
-    set of per-doc rows carrying each text/json field's ``<field>__len``:
-    ONE aggregation job for the doc count and every field's token total.
-    String and facet fields count one token per doc. Returns
-    ``(stats DataFrame, num_docs)``."""
+def bm25_totals(schema: IndexSchema, docs: DataFrame) -> dict:
+    """The BM25 totals of a set of per-doc rows carrying each text/json
+    field's ``<field>__len``, in a segment's manifest-entry form
+    ``{"num_docs": n, "tokens": {field: total_tokens}}``: ONE aggregation
+    job for the doc count and every field's token total. String and facet
+    fields count one token per doc."""
     agg_cols = [F.count("*").alias("__n")]
     for f in schema.text_fields + schema.json_fields:
         agg_cols.append(F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}"))
     agg_row = docs.agg(*agg_cols).collect()[0]
     n_docs = int(agg_row["__n"])
-    rows = []
+    tokens = dict.fromkeys(schema.string_fields + schema.facet_fields, n_docs)
     for f in schema.text_fields + schema.json_fields:
-        total = int(agg_row[f"__tot_{f}"] or 0)
-        rows.append((f, n_docs, total, (total / n_docs) if n_docs else 0.0))
-    for f in schema.string_fields + schema.facet_fields:
-        rows.append((f, n_docs, n_docs, 1.0))
-    # via pandas → Arrow LocalRelation: a plain Python list would go
-    # through the RDD path and spawn defaultParallelism Python workers
-    # for 2 rows
-    pdf = pd.DataFrame(
-        rows, columns=["field", "num_docs", "total_tokens", "avgdl"]
-    ).astype({"num_docs": "int64", "total_tokens": "int64", "avgdl": "float64"})
-    return spark.createDataFrame(pdf, schema=STATS_SCHEMA), n_docs
+        tokens[f] = int(agg_row[f"__tot_{f}"] or 0)
+    return {"num_docs": n_docs, "tokens": tokens}
 
 
 _ROW_PICKING_NODE = re.compile(
@@ -280,12 +269,10 @@ def _flat_analyzer(schema: IndexSchema):
     def _facet_ancestors(value: str) -> list:
         # split on '/', drop empty parts, emit every '/'-prefixed prefix
         # (pinned by tests/test_index.py::test_facet_postings_terms). A
-        # part-less value ('', '/', '//') emits ['/', '/'], as every index
-        # built so far does: the same term twice, so the root posting of
-        # such a doc is stored twice.
+        # part-less value ('', '/', '//') is the root: one '/' posting.
         parts = [p for p in value.split("/") if p]
         if not parts:
-            return ["/", "/"]
+            return ["/"]
         return ["/" + "/".join(parts[: i + 1]) for i in range(len(parts))]
 
     def stream(batches):
@@ -617,11 +604,12 @@ def build_segment(
     ).sortWithinPartitions("field", "term", "doc_id")
 
     # stats: one aggregation job for every field's token totals + the doc
-    # count — DEFERRED (0-arg callable) so storage.write_segment runs it
-    # concurrently with the docs/postings writes instead of as a serial
-    # barrier between staging and the table writes. The doc count itself is
-    # n_input (the analyzer emits exactly one doc row per input row), so the
-    # commit path never waits on this job.
+    # count, for the segment's manifest entry — DEFERRED (0-arg callable) so
+    # storage.write_segment runs it concurrently with the docs/postings
+    # writes instead of as a serial barrier between staging and the table
+    # writes. The doc count itself is n_input (the analyzer emits exactly
+    # one doc row per input row), so the commit path never waits on this
+    # job.
     def stats():
         # the job counts the stamped doc rows anyway, so checking them
         # against n_input costs nothing: an input that reads differently
@@ -629,14 +617,15 @@ def build_segment(
         # deterministic that is not) makes the broadcast doc-id join drop
         # rows, and the write must fail before the commit, not record
         # n_input
-        table, n_stamped = stats_table(spark, schema, doc_rows)
+        totals = bm25_totals(schema, doc_rows)
+        n_stamped = totals["num_docs"]
         if n_stamped != n_input:
             raise TantinyError(
                 f"build stamped {n_stamped} documents for {n_input} input "
                 "rows: the id column must be deterministic (the doc-id "
                 "assignment reads the input more than once)"
             )
-        return table
+        return totals
 
     return {
         "docs": docs,

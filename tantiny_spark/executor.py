@@ -2,10 +2,11 @@
 
 The read-path equivalent of the reference's __search
 (/root/reference/src/index.rs:244-274): Query → Weight (global stats) →
-scorer over postings → top-k. Here the "weight" is a set of driver-side
-lookups of the (tiny) dictionary/stats rows the query needs, baked into
-the plan as literals; the "scorer" is a JVM-side BM25 expression over a
-term-pruned postings scan, and top-k compiles to TakeOrderedAndProject.
+scorer over postings → top-k. Here the "weight" is the manifest's BM25
+totals plus driver-side lookups of the (tiny) dictionary rows the query
+needs, baked into the plan as literals; the "scorer" is a JVM-side BM25
+expression over a term-pruned postings scan, and top-k compiles to
+TakeOrderedAndProject.
 
 Score semantics per SURVEY.md §2.5: term/facet tf=1 (IndexRecordOption::Basic,
 src/query.rs:53,190), phrase scores with phrase frequency and the summed idf
@@ -17,11 +18,12 @@ Every scan is pruned before it leaves Parquet: term lookups filter on
 (field, term) — pushed down onto the sorted postings layout — and only the
 columns a query type needs are read (no positions for term queries).
 
-Planning a cold query stays cheap: every driver-side lookup (field stats,
-term dfs, an expansion's dictionary head) is ONE Spark job with no shuffle —
-raw per-segment rows are collected and summed or deduplicated on the
-driver — and every literal list (a term IN list, a term → df or weight
-map) is ONE SQL expression, so one JVM call, not several per literal.
+Planning a cold query stays cheap: field stats start no job, and every
+driver-side lookup (term dfs, an expansion's dictionary head) is ONE Spark
+job with no shuffle — raw per-segment rows are collected and summed or
+deduplicated on the driver — and every literal list (a term IN list, a
+term → df or weight map) is ONE SQL expression, so one JVM call, not
+several per literal.
 Fuzzy expansion usually needs no Python worker: a JVM Levenshtein
 prefilter bounds the candidates and the exact OSA test runs on the driver
 over the collected head; the OSA pandas UDF runs only when the candidates
@@ -109,7 +111,9 @@ class SearchContext:
     docs: DataFrame
     postings: DataFrame
     dictionary: DataFrame
-    stats: DataFrame
+    # field -> (num_docs, total_tokens) summed over the live segments'
+    # manifest entries, as Tantivy reads segment metadata before scoring
+    totals: dict
     # live segments unioned into ``dictionary``: a term has at most one
     # dict row per segment, so the first k distinct terms of a slice lie
     # within its first k × segments raw rows (_first_terms)
@@ -118,13 +122,13 @@ class SearchContext:
     # The full docs table is NOT cached — at web scale it can't be, and
     # range/negation scans want Parquet fast-field pushdown instead.
     ids: DataFrame | None = None
+    # a live segment whose manifest entry predates BM25 totals
+    untallied: str | None = None
 
     def __post_init__(self):
-        # memoized global stats / doc-freq lookups: the "Weight" phase. One
-        # tiny pushdown-pruned collect per distinct key, then pure literals in
-        # the scoring expressions — exactly how Tantivy resolves global stats
-        # from the searcher before scoring (src/index.rs:244-274).
-        self._stats_cache: dict = {}
+        # memoized doc-freq lookups: the rest of the "Weight" phase. One tiny
+        # pushdown-pruned collect per batch of keys, then pure literals in
+        # the scoring expressions.
         self._df_cache: dict = {}
         # memoized dictionary-expansion heads (prefix/regex/fuzzy/json-range
         # nodes are frozen dataclasses → hashable keys); the matched term
@@ -133,10 +137,10 @@ class SearchContext:
         self._expansion_cache: dict = {}
 
     def release(self) -> None:
-        """Unpersist the cached hot tables (ids/dictionary/stats). Called by
+        """Unpersist the cached hot tables (ids/dictionary). Called by
         Index.reload() so long-running readers don't accumulate one cached
         relation set per snapshot generation."""
-        for df in (self.ids, self.dictionary, self.stats):
+        for df in (self.ids, self.dictionary):
             if df is None:
                 continue
             try:
@@ -149,21 +153,15 @@ class SearchContext:
         return self.ids if self.ids is not None else self.docs.select("doc_id", "id")
 
     def field_stats(self, field: str) -> tuple:
-        """(num_docs, avgdl) for a field across live segments: the field's
-        per-segment stats rows are collected (one job, no shuffle) and
-        summed on the driver."""
-        hit = self._stats_cache.get(field)
-        if hit is None:
-            rows = (
-                self.stats.where(F.col("field") == field)
-                .select("num_docs", "total_tokens")
-                .collect()
+        """(num_docs, avgdl) for a field across live segments, from the
+        summed manifest totals: a dict lookup that starts no job."""
+        if self.untallied is not None:
+            raise TantinyError(
+                f"segment {self.untallied} has no BM25 totals in its manifest "
+                "entry (an older version wrote it); merge_segments() rewrites it"
             )
-            n = sum(int(r["num_docs"]) for r in rows)
-            tot = sum(int(r["total_tokens"]) for r in rows)
-            hit = (n, (tot / n) if n else 1.0)
-            self._stats_cache[field] = hit
-        return hit
+        n, tot = self.totals.get(field, (0, 0))
+        return (n, (tot / n) if n else 1.0)
 
     def term_dfs(self, field: str, terms: list) -> dict:
         """doc-freq per term (0 when absent), batched + memoized: the raw
@@ -194,17 +192,15 @@ def _bm25_expr(tf_col, dl_col, avgdl_col, df_col, n_col):
 
 
 def prime_stats_many(nodes: list, ctx: SearchContext) -> None:
-    """Warm the stats/df caches for a whole query BATCH: per distinct field
-    across all plans, one shuffle-free stats lookup and one shuffle-free
-    dictionary lookup of all its terms (search_many pays the driver
-    round-trips once per batch, not once per query)."""
+    """Warm the df cache for a whole query BATCH: per distinct field across
+    all plans, one shuffle-free dictionary lookup of all its terms
+    (search_many pays the driver round-trips once per batch, not once per
+    query)."""
     per_field: dict = {}
     for node in nodes:
         _collect_stat_keys(node, per_field)
     for field, terms in per_field.items():
-        ctx.field_stats(field)
-        if terms:
-            ctx.term_dfs(field, sorted(terms))
+        ctx.term_dfs(field, sorted(terms))
 
 
 def prime_stats(node: P.Query, ctx: SearchContext) -> None:

@@ -23,7 +23,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from tantiny_spark import plan as P
-from tantiny_spark.build import build_segment, stats_table
+from tantiny_spark.build import bm25_totals, build_segment
 from tantiny_spark.errors import (
     IndexWriterBusyError, UnexpectedNone, UnsupportedField,
 )
@@ -479,11 +479,12 @@ class Index:
     # --- segment merge / compaction ------------------------------------------
     def merge_segments(self) -> int:
         """Compact all live segments into one: tombstones are physically
-        applied, dict/stats rebuilt from the surviving docs and postings —
-        the background-merge analog of Tantivy's segment merging (surfaced
-        via commit/reload, src/index.rs:229-242). After a merge, deleted
-        docs no longer affect BM25 stats, and queries stop paying the
-        per-segment tombstone anti-joins."""
+        applied, dict and BM25 totals rebuilt from the surviving docs and
+        postings — the background-merge analog of Tantivy's segment merging
+        (surfaced via commit/reload, src/index.rs:229-242). After a merge,
+        deleted docs no longer affect BM25 stats, and queries stop paying
+        the per-segment tombstone anti-joins. It also rewrites a segment
+        whose manifest entry predates BM25 totals."""
         # a merge rewrites the whole manifest, so it is a WRITE: take the
         # writer lock (like transaction()) — a merge racing another writer
         # would silently drop that writer's commit from the new manifest
@@ -498,9 +499,10 @@ class Index:
         ctx = Snapshot(
             self.spark, self.storage, self.storage.current_version()
         ).context()
-        # exact per-field totals from the stored per-doc lengths
-        stats, n_docs = stats_table(self.spark, self.schema, ctx.docs)
-        tables = {"docs": ctx.docs, "postings": ctx.postings, "stats": stats}
+        # exact per-field totals recounted from the stored per-doc lengths,
+        # so no segment's old totals are needed
+        tables = {"docs": ctx.docs, "postings": ctx.postings,
+                  "stats": lambda: bm25_totals(self.schema, ctx.docs)}
         manifest = self.storage.read_manifest(self.storage.current_version())
         entry = self.storage.write_segment(tables, tombstones=[])
         ctx.release()
@@ -524,7 +526,7 @@ class Index:
                 1 for s in manifest["segments"]
                 if s.get("tombstones") or s.get("tombstone_table")
             ),
-            "live_docs_rewritten": n_docs,
+            "live_docs_rewritten": entry["num_docs"],
         }
         return version
 

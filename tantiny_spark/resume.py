@@ -6,8 +6,10 @@ lineage + metrics". The bulk build is split into K deterministic shards
 writes a checkpoint JSON with lineage metrics (row/token counts,
 order-insensitive checksums, wall time). A crashed build re-run skips every
 shard whose checkpoint exists — at 10^12 docs a lost executor hour is
-re-done, not the whole job. The final commit is one atomic manifest swap
-listing all K segments, so readers never observe a partial build.
+re-done, not the whole job. Each checkpoint keeps the manifest entry its
+segment write returned (with the segment's BM25 totals), and the final
+commit is one atomic manifest swap listing those K entries, so readers
+never observe a partial build.
 
 Shard doc_id spaces are disjoint fixed ranges (shard k owns
 [k·SHARD_CAPACITY, (k+1)·SHARD_CAPACITY)), making doc_ids independent of
@@ -24,6 +26,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tantiny_spark.build import build_segment
+from tantiny_spark.errors import TantinyError
 from tantiny_spark.schema import IndexSchema
 from tantiny_spark.storage import IndexStorage
 
@@ -85,7 +88,14 @@ def resumable_build(
         chk_path = os.path.join(chk_dir, f"part-{k:05d}.json")
         if os.path.exists(chk_path):
             with open(chk_path) as fh:
-                lineage.append(json.load(fh))
+                record = json.load(fh)
+            if "tokens" not in record.get("entry", {}):
+                raise TantinyError(
+                    f"checkpoint {chk_path} holds no segment entry with BM25 "
+                    "totals (an older version wrote it); delete it to "
+                    "rebuild that shard"
+                )
+            lineage.append(record)
             continue
         t0 = time.time()
         shard_df = sharded.where(F.col("__shard") == k).drop("__shard")
@@ -107,6 +117,7 @@ def resumable_build(
             "segment": entry["name"],
             "wall_sec": round(time.time() - t0, 3),
             **metrics,
+            "entry": entry,
         }
         tmp = chk_path + ".tmp"
         with open(tmp, "w") as fh:
@@ -119,9 +130,7 @@ def resumable_build(
 
     version = storage.commit(
         {
-            "segments": [
-                {"name": rec["segment"], "tombstones": []} for rec in lineage
-            ],
+            "segments": [rec["entry"] for rec in lineage],
             "next_doc_id": num_shards * SHARD_CAPACITY,
             "schema": schema.to_json(),
             "lineage": lineage,

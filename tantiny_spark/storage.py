@@ -3,10 +3,12 @@
 The Spark-native analog of Tantivy's segment directory + meta.json
 (/root/reference/src/index.rs:35-121, commit at :229-236, reload at :238-242):
 
-- each commit writes one immutable *segment* directory holding the four index
-  tables (docs/postings/dict/stats) as Parquet, plus an optional tombstone
+- each commit writes one immutable *segment* directory holding the three
+  index tables (docs/postings/dict) as Parquet, plus an optional tombstone
   list of deleted doc ``id``s applying to all OLDER segments;
-- a JSON *manifest* lists the live segments of a version;
+- a JSON *manifest* lists the live segments of a version, each entry with
+  its BM25 totals ``"num_docs": n, "tokens": {field: total_tokens}`` (what
+  Tantivy keeps in segment metadata), summed by readers on the driver;
 - ``HEAD`` names the current manifest and is swapped atomically
   (write-tmp + os.replace), giving reader snapshot isolation: an open
   Snapshot keeps resolving the version it was opened at until reload —
@@ -27,11 +29,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from tantiny_spark.build import POSTINGS_SCHEMA, STATS_SCHEMA
+from tantiny_spark.build import POSTINGS_SCHEMA
 from tantiny_spark.executor import SearchContext
 from tantiny_spark.schema import IndexSchema
 
-TABLES = ("docs", "postings", "dict", "stats")
+TABLES = ("docs", "postings", "dict")
 
 
 def dict_table(postings: DataFrame) -> DataFrame:
@@ -108,31 +110,32 @@ class IndexStorage:
         commit — a crash here leaves an unreferenced directory, never a
         corrupt index (the resumability contract).
 
-        ``tables`` holds ``docs``, ``postings`` and ``stats``, each a
-        DataFrame or a 0-arg callable returning one (the build defers its
-        stats aggregation that way). The three are independent reads of
-        the staged analyzer output, so they are submitted from a small
-        thread pool: the later jobs' tasks back-fill executors idling in
-        the earlier jobs' stragglers (one job alone rarely fills the
-        cluster, e.g. the postings range-sort runs at its data-sized
-        partition count). Spark runs concurrent actions FIFO, which is
-        exactly the back-fill wanted; failures propagate out of pool.map.
-        The ``dict`` is then derived from the freshly-written postings
-        files (dict_table), never by re-running the build lineage."""
+        ``tables`` holds the ``docs`` and ``postings`` DataFrames and
+        ``stats``, a 0-arg callable returning the BM25 totals that go into
+        the entry (``{"num_docs": n, "tokens": {field: total_tokens}}``).
+        The two writes and that aggregation are independent reads of the
+        same input, so they are submitted from a small thread pool: the
+        later jobs' tasks back-fill executors idling in the earlier jobs'
+        stragglers (one job alone rarely fills the cluster, e.g. the
+        postings range-sort runs at its data-sized partition count). Spark
+        runs concurrent actions FIFO, which is exactly the back-fill
+        wanted; failures propagate out of pool.map. The ``dict`` is then
+        derived from the freshly-written postings files (dict_table), never
+        by re-running the build lineage."""
         from concurrent.futures import ThreadPoolExecutor
 
         name = name or f"seg-{uuid.uuid4().hex[:12]}"
         seg_dir = os.path.join(self.path, "segments", name)
 
-        def _write(tname):
-            df = tables[tname]
-            if callable(df):
-                df = df()
-            df.write.mode("overwrite").parquet(os.path.join(seg_dir, tname))
+        def _run(tname):
+            if tname == "stats":
+                return tables["stats"]()
+            tables[tname].write.mode("overwrite").parquet(
+                os.path.join(seg_dir, tname)
+            )
 
         with ThreadPoolExecutor(max_workers=3) as pool:
-            for _ in pool.map(_write, ("docs", "postings", "stats")):
-                pass
+            *_, totals = pool.map(_run, ("docs", "postings", "stats"))
         spark = tables["postings"].sparkSession
         stored = spark.read.parquet(os.path.join(seg_dir, "postings"))
         dict_table(stored).write.mode("overwrite").parquet(
@@ -145,15 +148,11 @@ class IndexStorage:
             }
         else:
             entry = {"name": name, "tombstones": sorted(tombstones or [])}
-        return entry
+        return {**entry, **totals}
 
     def load_segment(self, spark: SparkSession, entry: dict) -> dict:
         seg_dir = os.path.join(self.path, "segments", entry["name"])
-        out = {}
-        for t in TABLES:
-            tdir = os.path.join(seg_dir, t)
-            out[t] = spark.read.parquet(tdir) if os.path.exists(tdir) else None
-        return out
+        return {t: spark.read.parquet(os.path.join(seg_dir, t)) for t in TABLES}
 
 
 class Snapshot:
@@ -179,26 +178,14 @@ class Snapshot:
         segments that precede it (delete-then-add upsert semantics,
         src/index.rs:182-185)."""
         entries = self.manifest["segments"]
-        if not entries:
-            empty_docs = self.spark.createDataFrame([], "doc_id long, id string")
-            empty_stats = self.spark.createDataFrame([], STATS_SCHEMA)
-            empty_dict = self.spark.createDataFrame(
-                [], "field string, term string, df long"
-            )
-            return SearchContext(
-                docs=empty_docs,
-                postings=self.spark.createDataFrame([], POSTINGS_SCHEMA),
-                dictionary=empty_dict,
-                stats=empty_stats,
-                segments=0,
-            )
-
         loaded = [
             self.storage.load_segment(self.spark, e) if e.get("name") else None
             for e in entries
         ]
         # ids deleted by any LATER segment apply to this one
-        docs_parts, post_parts, dict_parts, stats_parts = [], [], [], []
+        docs_parts, post_parts, dict_parts = [], [], []
+        totals: dict = {}  # field -> (num_docs, total_tokens)
+        untallied = None
         for i, (entry, seg) in enumerate(zip(entries, loaded)):
             if seg is None:  # pure-delete commit: tombstones only
                 continue
@@ -246,7 +233,11 @@ class Snapshot:
             docs_parts.append(docs)
             post_parts.append(postings)
             dict_parts.append(seg["dict"])
-            stats_parts.append(seg["stats"])
+            if "tokens" not in entry:
+                untallied = untallied or entry["name"]
+            for f, tot in entry.get("tokens", {}).items():
+                n0, tot0 = totals.get(f, (0, 0))
+                totals[f] = (n0 + entry["num_docs"], tot0 + tot)
 
         def union_all(parts):
             out = parts[0]
@@ -255,15 +246,23 @@ class Snapshot:
             return out
 
         if not docs_parts:
-            return Snapshot(self.spark, self.storage, 0).context()
+            return SearchContext(
+                docs=self.spark.createDataFrame([], "doc_id long, id string"),
+                postings=self.spark.createDataFrame([], POSTINGS_SCHEMA),
+                dictionary=self.spark.createDataFrame(
+                    [], "field string, term string, df long"
+                ),
+                totals={},
+                segments=0,
+            )
 
         docs = union_all(docs_parts)
         postings = union_all(post_parts)
-        # NOTE: dict df / stats counts still include tombstoned docs until the
+        # NOTE: dict df / BM25 totals still include tombstoned docs until the
         # next merge/compaction — the same freshness tradeoff Tantivy makes
         # (deleted docs affect BM25 stats until segments merge).
         # The repeatedly-probed SMALL tables stay hot: the (doc_id, id) map
-        # (every top-k joins it), the dictionary and the stats. The full docs
+        # (every top-k joins it) and the dictionary. The full docs
         # table is deliberately NOT cached — at web scale it cannot be, and
         # range/negation want Parquet scans with fast-field min/max pushdown
         # rather than a full in-memory relation. postings likewise stay on
@@ -273,6 +272,7 @@ class Snapshot:
             ids=docs.select("doc_id", "id").persist(),
             postings=postings,
             dictionary=union_all(dict_parts).persist(),
-            stats=union_all(stats_parts).persist(),
+            totals=totals,
             segments=len(dict_parts),
+            untallied=untallied,
         )

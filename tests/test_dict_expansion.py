@@ -51,14 +51,9 @@ def big_dict_ctx(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(n), "id": [f"{i:06d}" for i in range(n)]})
     )
-    stats = spark.createDataFrame(
-        pd.DataFrame(
-            {"field": ["text"], "num_docs": [n], "total_tokens": [n], "avgdl": [1.0]}
-        )
-    )
     return SearchContext(
-        docs=docs, postings=postings, dictionary=dictionary, stats=stats,
-        segments=1,
+        docs=docs, postings=postings, dictionary=dictionary,
+        totals={"text": (n, n)}, segments=1,
     )
 
 
@@ -106,14 +101,9 @@ def _expansion_ctx(spark, terms, segments=1) -> SearchContext:
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(n), "id": [f"{i:04d}" for i in range(n)]})
     )
-    stats = spark.createDataFrame(
-        pd.DataFrame(
-            {"field": ["text"], "num_docs": [n], "total_tokens": [n], "avgdl": [1.0]}
-        )
-    )
     return SearchContext(
-        docs=docs, postings=postings, dictionary=dictionary, stats=stats,
-        segments=segments,
+        docs=docs, postings=postings, dictionary=dictionary,
+        totals={"text": (n, n)}, segments=segments,
     )
 
 
@@ -311,11 +301,10 @@ def lookup_index(spark, tmp_path_factory):
     ids=["term", "prefix", "fuzzy", "fuzzy_prefix"],
 )
 def test_cold_lookups_are_shuffle_free(lookup_index, monkeypatch, make):
-    """Every driver-side lookup of a cold search (stats, dfs, expansion
-    head) is a plan without an Exchange, and no plan of a search whose
-    fuzzy expansion fits the cap runs Python."""
+    """Every driver-side lookup of a cold search (dfs, expansion head) is a
+    plan without an Exchange, and no plan of a search whose fuzzy expansion
+    fits the cap runs Python."""
     idx = lookup_index.reload()
-    idx.ctx._stats_cache.clear()
     idx.ctx._df_cache.clear()
     idx.ctx._expansion_cache.clear()
     plans = _collect_plans(monkeypatch, type(idx.ctx.dictionary))

@@ -439,8 +439,8 @@ def test_dict_table_matches_postings_recount(spark, tmp_path):
 def test_facet_postings_terms(spark, tmp_path):
     """A facet value is indexed as one posting per ancestor path, for every
     path shape: empty parts are dropped and every '/'-prefixed prefix is a
-    term. A part-less value keeps the ['/', '/'] terms every index built so
-    far carries. The docs table holds no ancestors column."""
+    term. A part-less value is the root: one '/' term. The docs table holds
+    no ancestors column."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -449,9 +449,9 @@ def test_facet_postings_terms(spark, tmp_path):
         "a/b": ["/a", "/a/b"],
         "/a": ["/a"],
         "a": ["/a"],
-        "": ["/", "/"],
-        "/": ["/", "/"],
-        "//": ["/", "/"],
+        "": ["/"],
+        "/": ["/"],
+        "//": ["/"],
         "/a//b/": ["/a", "/a/b"],
         "a/b/c/": ["/a", "/a/b", "/a/b/c"],
         "/x y/z": ["/x y", "/x y/z"],
@@ -476,3 +476,22 @@ def test_facet_postings_terms(spark, tmp_path):
     assert sorted(ix.search(ix.facet_query("cat", "/a"), limit=20)) == sorted(
         str(i) for i, v in enumerate(values) if expected[v][0] == "/a"
     )
+
+
+def test_facet_root_doc_returned_once(spark, tmp_path):
+    """A part-less facet value ('', '/', '//') gets one root posting: a
+    root facet query returns each such doc exactly once, and the root's
+    df counts each doc once."""
+    import pandas as pd
+
+    s = IndexSchema()
+    s.facet("cat")
+    ix = Index(spark, str(tmp_path / "facets"), s)
+    ix.add_dataframe(spark.createDataFrame(pd.DataFrame(
+        {"id": ["0", "1", "2", "3"], "cat": ["", "/", "//", "/a"]}
+    )))
+    ix.reload()
+    assert sorted(ix.search(ix.facet_query("cat", "/"), limit=20)) == [
+        "0", "1", "2",
+    ]
+    assert ix.ctx.term_dfs("cat", ["/"]) == {"/": 3}

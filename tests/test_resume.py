@@ -55,6 +55,9 @@ def test_kill_and_resume_identical(spark, tmp_path):
     ib = Index(spark, crash_path)
     for q in ["common", "word3", "body"]:
         assert ia.search(q, limit=20) == ib.search(q, limit=20)
+    # the committed entries carry the checkpointed BM25 totals
+    assert ib.ctx.field_stats("text") == ia.ctx.field_stats("text")
+    assert ib.ctx.field_stats("text")[0] == 200
 
     # manifest records lineage + metrics
     manifest = json.load(
@@ -62,3 +65,26 @@ def test_kill_and_resume_identical(spark, tmp_path):
     )
     assert len(manifest["lineage"]) == 4
     assert all("wall_sec" in rec and "postings_crc" in rec for rec in manifest["lineage"])
+
+
+def test_checkpoint_without_entry_fails_loudly(spark, tmp_path):
+    """A checkpoint that holds no segment entry with BM25 totals (one
+    written before checkpoints kept the entry) stops the resume before the
+    commit instead of committing an entry without totals."""
+    from tantiny_spark.errors import TantinyError
+
+    path = str(tmp_path / "idx")
+    df = make_df(spark, n=40)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resumable_build(spark, df, schema(), path, num_shards=2, fail_after=1)
+    chk = os.path.join(path, "checkpoints", "part-00000.json")
+    with open(chk) as fh:
+        record = json.load(fh)
+    assert record["entry"]["num_docs"] == record["docs_rows"]
+    del record["entry"]
+    with open(chk, "w") as fh:
+        json.dump(record, fh)
+
+    with pytest.raises(TantinyError, match="part-00000.json"):
+        resumable_build(spark, df, schema(), path, num_shards=2)
+    assert not os.path.exists(os.path.join(path, "HEAD"))

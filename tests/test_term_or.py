@@ -205,10 +205,23 @@ def test_odd_string_terms_round_trip(odd_strings, term):
     _assert_top_k(idx, _or("tag", [term, other, "nosuch"]), expected, ALL)
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """(fn(), the ids of the Spark jobs fn started) under job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_lookups_sum_segments_with_tombstones(spark, tmp_path):
-    """term_dfs and field_stats sum a term's per-segment rows over 3
-    segments; tombstoned docs keep counting in the dict df and the stats
-    until a merge rewrites them (Tantivy's freshness tradeoff)."""
+    """term_dfs sums a term's per-segment dict rows and field_stats the
+    segments' manifest totals over 3 segments; tombstoned docs keep counting
+    in both until a merge rewrites them (Tantivy's freshness tradeoff).
+    field_stats is a driver-side lookup that starts no Spark job."""
     schema = IndexSchema()
     schema.text("text")
     idx = Index(spark, str(tmp_path / "idx"), schema)
@@ -223,9 +236,20 @@ def test_lookups_sum_segments_with_tombstones(spark, tmp_path):
     assert idx.ctx.term_dfs("text", ["common", "seg1", "u2x4", "nosuch"]) == {
         "common": 30, "seg1": 10, "u2x4": 1, "nosuch": 0,
     }
-    assert idx.ctx.field_stats("text") == (30, 3.0)
+    stats, jobs = _jobs_in_group(
+        spark, "field-stats", lambda: idx.ctx.field_stats("text")
+    )
+    assert stats == (30, 3.0)
+    assert jobs == []
+    # the same probe sees the job of an uncached dictionary lookup
+    _, jobs = _jobs_in_group(
+        spark, "term-dfs", lambda: idx.ctx.term_dfs("text", ["seg2"])
+    )
+    assert len(jobs) >= 1
+    assert idx.ctx.field_stats("nosuch") == (0, 1.0)
     assert len(idx.search(P.Term("text", "common"), limit=ALL)) == 26
 
+    pre_merge = idx.storage.current_version()
     idx.merge_segments()
     idx = idx.reload()
     assert idx.ctx.segments == 1
@@ -233,3 +257,74 @@ def test_lookups_sum_segments_with_tombstones(spark, tmp_path):
         "common": 26, "seg1": 9, "u2x4": 0,
     }
     assert idx.ctx.field_stats("text") == (26, 3.0)
+    # time travel reads the pre-merge manifest totals, dead docs included
+    idx = idx.reload(version=pre_merge)
+    assert idx.ctx.field_stats("text") == (30, 3.0)
+
+
+def test_entries_without_totals_refuse_to_score_until_merged(spark, tmp_path):
+    """A manifest entry written before entries carried BM25 totals has no
+    second read path: scoring against it raises a TantinyError that names
+    the segment and merge_segments(), and a merge, which recounts the
+    totals from the stored per-doc lengths, restores the same hits."""
+    import json
+    import os
+
+    from tantiny_spark.errors import TantinyError
+
+    schema = IndexSchema()
+    schema.text("text")
+    path = str(tmp_path / "idx")
+    idx = Index(spark, path, schema)
+    for seg in range(2):
+        rows = [(f"s{seg}d{i}", f"common seg{seg} w{i % 3}") for i in range(6)]
+        idx.add_dataframe(spark.createDataFrame(rows, "id string, text string"))
+    idx = idx.reload()
+    query = P.disjunction(P.Term("text", "common"), P.Term("text", "w1"))
+    want = idx.search_with_scores(query, limit=ALL)
+    assert len(want) == 12
+
+    mpath = os.path.join(
+        path, "snapshots", f"v{idx.storage.current_version():06d}.json"
+    )
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    for entry in manifest["segments"]:
+        del entry["num_docs"], entry["tokens"]
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+
+    legacy = Index(spark, path)
+    name = manifest["segments"][0]["name"]
+    with pytest.raises(TantinyError, match=f"{name}.*merge_segments"):
+        legacy.search_with_scores(query, limit=ALL)
+
+    legacy.merge_segments()
+    legacy = legacy.reload()
+    assert legacy.search_with_scores(query, limit=ALL) == want
+
+
+def test_snapshot_caches_two_per_reload(spark, tmp_path):
+    """A reload plus one scoring search materializes exactly the two
+    snapshot reader caches, the (doc_id, id) map and the dictionary, and
+    the next reload releases both."""
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    schema = IndexSchema()
+    schema.text("text")
+    idx = Index(spark, str(tmp_path / "idx"), schema)
+    for seg in range(2):
+        rows = [(f"s{seg}d{i}", f"common seg{seg}") for i in range(5)]
+        idx.add_dataframe(spark.createDataFrame(rows, "id string, text string"))
+    start = persisted()
+
+    idx = idx.reload()
+    assert len(idx.search(P.Term("text", "common"), limit=ALL)) == 10
+    searched = persisted()
+    assert start <= searched
+    assert len(searched - start) == 2
+
+    idx = idx.reload()
+    assert persisted() == start
