@@ -241,6 +241,24 @@ def _flat_stream_schema(schema: IndexSchema) -> T.StructType:
     return T.StructType(fields)
 
 
+def docs_schema(schema: IndexSchema) -> T.StructType:
+    """The ``docs`` table's columns and types, in the order build_segment
+    writes them: doc_id, id, the fast-field and facet columns, each json
+    source with its token count, and each text field's quantized fieldnorm
+    with its token count. Readers pass it to ``spark.read``, so loading a
+    segment infers nothing from its files."""
+    stream = _flat_stream_schema(schema)
+    names = ["doc_id", "id"] + (
+        schema.string_fields + schema.integer_fields + schema.double_fields
+        + schema.date_fields + schema.facet_fields
+    )
+    for f in schema.json_fields:
+        names += [f, f"{f}__len"]
+    for f in schema.text_fields:
+        names += [f"{f}__norm", f"{f}__len"]
+    return T.StructType([stream[n] for n in names])
+
+
 def _flat_analyzer(schema: IndexSchema):
     """mapInPandas kernel: tokenize + doc-local posting construction with
     FLAT list building (no per-term dicts-of-dicts — ~2.5× less Python time
@@ -552,19 +570,7 @@ def build_segment(
     doc_rows = staged.where(F.col("field") == DOC_SENTINEL)
 
     # --- docs table -------------------------------------------------------
-    doc_cols = [F.col("doc_id"), F.col("id")]
-    for f in (
-        schema.string_fields + schema.integer_fields + schema.double_fields
-        + schema.date_fields + schema.facet_fields
-    ):
-        doc_cols.append(F.col(f))
-    for f in schema.json_fields:
-        doc_cols.append(F.col(f))
-        doc_cols.append(F.col(f"{f}__len"))
-    for f in schema.text_fields:
-        doc_cols.append(F.col(f"{f}__norm"))
-        doc_cols.append(F.col(f"{f}__len"))
-    docs = doc_rows.select(*doc_cols)
+    docs = doc_rows.select(*docs_schema(schema).fieldNames())
 
     # --- postings ----------------------------------------------------------
     # string/facet postings are emitted by the analyzer itself (tf=1,

@@ -1011,7 +1011,12 @@ def facet_counts(
     p = ctx.postings.where(
         (F.col("field") == field) & F.col("term").startswith(base + "/")
     )
-    p = p.where(F.size(F.split(F.col("term"), "/")) == depth + 2)
+    # the term base + "/" (the root "/" under base "") also splits into
+    # depth + 2 parts, but it is the prefix itself, not one of its children
+    p = p.where(
+        (F.size(F.split(F.col("term"), "/")) == depth + 2)
+        & (F.col("term") != base + "/")
+    )
     if matched is not None:
         p = p.join(matched.select("doc_id"), "doc_id", "left_semi")
     out = (

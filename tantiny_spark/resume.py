@@ -110,7 +110,7 @@ def resumable_build(
             import shutil
 
             shutil.rmtree(staging, ignore_errors=True)
-        stored = storage.load_segment(spark, entry)
+        stored = storage.load_segment(spark, entry, schema)
         metrics = _lineage_checksums(stored["docs"], stored["postings"])
         record = {
             "shard": k,

@@ -498,3 +498,24 @@ def test_search_after_cursor_pagination(spark, tmp_path):
         idx.search_df(q, limit=5, offset=3, search_after=(1.0, "5"))
     with pytest.raises(ValueError):  # malformed cursor
         idx.search_df(q, search_after="bogus")
+
+
+def test_facet_counts_root_is_not_its_own_child(spark, tmp_path):
+    """The root term '/' (which part-less values index to) starts with
+    '/' and splits into two parts like a depth-1 child, but counting the
+    root's children must not list the root itself."""
+    import pandas as pd
+
+    from tantiny_spark.index import Index
+    from tantiny_spark.schema import IndexSchema
+
+    s = IndexSchema()
+    s.facet("cat")
+    ix = Index(spark, str(tmp_path / "root"), s)
+    ix.add_dataframe(spark.createDataFrame(pd.DataFrame(
+        {"id": ["0", "1", "2"], "cat": ["/", "/a", ""]}
+    )))
+    ix.reload()
+    for prefix in ("", "/"):
+        got = [(r["path"], r["cnt"]) for r in ix.facet_counts("cat", prefix).collect()]
+        assert got == [("/a", 1)], prefix
