@@ -16,7 +16,9 @@ totals:
                 storage layer from the written postings
 - BM25 totals  ``{"num_docs": n, "tokens": {field: total_tokens}}`` — a few
                 numbers the storage layer keeps in the segment's manifest
-                entry, not in a table (Tantivy's segment metadata)
+                entry, not in a table (Tantivy's segment metadata), with
+                the segment's id range and that its doc_id order is its
+                id order
 
 Scale notes (the 100 TB story):
 - doc_id assignment is a deterministic global rank of ``id`` computed with
@@ -57,12 +59,16 @@ POSTINGS_SCHEMA = T.StructType(
 
 
 def bm25_totals(schema: IndexSchema, docs: DataFrame) -> dict:
-    """The BM25 totals of a set of per-doc rows carrying each text/json
-    field's ``<field>__len``, in a segment's manifest-entry form
-    ``{"num_docs": n, "tokens": {field: total_tokens}}``: ONE aggregation
-    job for the doc count and every field's token total. String and facet
-    fields count one token per doc."""
-    agg_cols = [F.count("*").alias("__n")]
+    """The BM25 totals of a set of per-doc rows carrying ``id`` and each
+    text/json field's ``<field>__len``, in a segment's manifest-entry form
+    ``{"num_docs": n, "tokens": {field: total_tokens}, "id_range": [min
+    id, max id]}``: ONE aggregation job for the doc count, every field's
+    token total and the id range (None when an id is null). String and
+    facet fields count one token per doc."""
+    agg_cols = [
+        F.count("*").alias("__n"), F.count("id").alias("__n_id"),
+        F.min("id").alias("__min_id"), F.max("id").alias("__max_id"),
+    ]
     for f in schema.text_fields + schema.json_fields:
         agg_cols.append(F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}"))
     agg_row = docs.agg(*agg_cols).collect()[0]
@@ -70,7 +76,11 @@ def bm25_totals(schema: IndexSchema, docs: DataFrame) -> dict:
     tokens = dict.fromkeys(schema.string_fields + schema.facet_fields, n_docs)
     for f in schema.text_fields + schema.json_fields:
         tokens[f] = int(agg_row[f"__tot_{f}"] or 0)
-    return {"num_docs": n_docs, "tokens": tokens}
+    id_range = (
+        [agg_row["__min_id"], agg_row["__max_id"]]
+        if n_docs and agg_row["__n_id"] == n_docs else None
+    )
+    return {"num_docs": n_docs, "tokens": tokens, "id_range": id_range}
 
 
 _ROW_PICKING_NODE = re.compile(
@@ -609,8 +619,10 @@ def build_segment(
         n_post_parts, "field", "term", "doc_id"
     ).sortWithinPartitions("field", "term", "doc_id")
 
-    # stats: one aggregation job for every field's token totals + the doc
-    # count, for the segment's manifest entry — DEFERRED (0-arg callable) so
+    # stats: one aggregation job for every field's token totals, the doc
+    # count and the id range, for the segment's manifest entry, which also
+    # records that doc_id order is id order (assign_doc_ids stamps
+    # doc_id = base + rank(id)) — DEFERRED (0-arg callable) so
     # storage.write_segment runs it concurrently with the docs/postings
     # writes instead of as a serial barrier between staging and the table
     # writes. The doc count itself is n_input (the analyzer emits exactly
@@ -631,7 +643,7 @@ def build_segment(
                 "rows: the id column must be deterministic (the doc-id "
                 "assignment reads the input more than once)"
             )
-        return totals
+        return {**totals, "id_ordered": True}
 
     return {
         "docs": docs,

@@ -18,12 +18,18 @@ Every scan is pruned before it leaves Parquet: term lookups filter on
 (field, term) — pushed down onto the sorted postings layout — and only the
 columns a query type needs are read (no positions for term queries).
 
-Planning a cold query stays cheap: field stats start no job, and every
-driver-side lookup (term dfs, an expansion's dictionary head) is ONE Spark
-job with no shuffle — raw per-segment rows are collected and summed or
-deduplicated on the driver — and every literal list (a term IN list, a
-term → df or weight map) is ONE SQL expression, so one JVM call, not
-several per literal.
+A cold term search is ONE Spark job on an id-ordered snapshot:
+- term dfs and prefix heads are read on the driver from the live
+  segments' dict files (storage.SegmentFiles: pyarrow, pruned by row-group
+  min/max), so planning starts no job; field stats come from the manifest;
+- the hits rank by (score desc, doc_id asc) in one TakeOrderedAndProject
+  (top_doc_ids), and the driver reads the k hits' ids from the docs files.
+Any other snapshot, ``search_after`` and the other reads join the
+(doc_id, id) map before ranking (top_k). Regex, fuzzy and JSON-range heads
+need Java regex or the JVM ``levenshtein`` prefilter, so each stays ONE
+shuffle-free Spark job: raw per-segment rows collected and deduplicated on
+the driver. Every literal list (a term IN list, a term → df or weight map)
+is ONE SQL expression, so one JVM call, not several per literal.
 Fuzzy expansion usually needs no Python worker: a JVM Levenshtein
 prefilter bounds the candidates and the exact OSA test runs on the driver
 over the collected head; the OSA pandas UDF runs only when the candidates
@@ -106,11 +112,15 @@ def _by_term(values: dict) -> Column:
 @dataclass
 class SearchContext:
     """The live snapshot a query runs against: unioned segment tables with
-    tombstones already applied (see storage.Snapshot.context)."""
+    tombstones already applied (see storage.Snapshot.context). Nothing in
+    it is cached by Spark."""
 
     docs: DataFrame
     postings: DataFrame
     dictionary: DataFrame
+    # driver-side reads of the live segments' dict and docs files
+    # (storage.SegmentFiles): term dfs, prefix heads, the hits' ids
+    files: object
     # field -> (num_docs, total_tokens) summed over the live segments'
     # manifest entries, as Tantivy reads segment metadata before scoring
     totals: dict
@@ -118,39 +128,26 @@ class SearchContext:
     # dict row per segment, so the first k distinct terms of a slice lie
     # within its first k × segments raw rows (_first_terms)
     segments: int
-    # slim persisted (doc_id, id) projection: the only per-query hot join.
-    # The full docs table is NOT cached — at web scale it can't be, and
-    # range/negation scans want Parquet fast-field pushdown instead.
-    ids: DataFrame | None = None
     # a live segment whose manifest entry predates BM25 totals
     untallied: str | None = None
+    # doc_id order is id order over the live docs (storage.id_ordered), so
+    # (score desc, doc_id asc) ranks as (score desc, id asc) (top_doc_ids)
+    id_ordered: bool = False
 
     def __post_init__(self):
-        # memoized doc-freq lookups: the rest of the "Weight" phase. One tiny
-        # pushdown-pruned collect per batch of keys, then pure literals in
-        # the scoring expressions.
+        # memoized doc-freq lookups: the rest of the "Weight" phase. One
+        # pruned driver read per batch of keys, then pure literals in the
+        # scoring expressions.
         self._df_cache: dict = {}
         # memoized dictionary-expansion heads (prefix/regex/fuzzy/json-range
         # nodes are frozen dataclasses → hashable keys); the matched term
         # slice of an immutable snapshot never changes, so repeating the
-        # query must not repeat the capped collect job
+        # query must not repeat the capped read
         self._expansion_cache: dict = {}
-
-    def release(self) -> None:
-        """Unpersist the cached hot tables (ids/dictionary). Called by
-        Index.reload() so long-running readers don't accumulate one cached
-        relation set per snapshot generation."""
-        for df in (self.ids, self.dictionary):
-            if df is None:
-                continue
-            try:
-                df.unpersist()
-            except Exception:
-                pass
 
     @property
     def id_map(self) -> DataFrame:
-        return self.ids if self.ids is not None else self.docs.select("doc_id", "id")
+        return self.docs.select("doc_id", "id")
 
     def field_stats(self, field: str) -> tuple:
         """(num_docs, avgdl) for a field across live segments, from the
@@ -164,19 +161,12 @@ class SearchContext:
         return (n, (tot / n) if n else 1.0)
 
     def term_dfs(self, field: str, terms: list) -> dict:
-        """doc-freq per term (0 when absent), batched + memoized: the raw
-        per-segment (term, df) rows are collected (one job, no shuffle; at
-        most segments × terms rows) and summed on the driver."""
+        """doc-freq per term (0 when absent), batched + memoized: the
+        per-segment dict rows are read on the driver from the row groups
+        that may hold the terms and summed there; no Spark job."""
         missing = [t for t in terms if (field, t) not in self._df_cache]
         if missing:
-            rows = (
-                self.dictionary.where((F.col("field") == field) & _term_in(missing))
-                .select("term", "df")
-                .collect()
-            )
-            found: dict = {}
-            for r in rows:
-                found[r["term"]] = found.get(r["term"], 0) + int(r["df"])
+            found = self.files.term_dfs(field, missing)
             for t in missing:
                 self._df_cache[(field, t)] = found.get(t, 0)
         return {t: self._df_cache[(field, t)] for t in terms}
@@ -255,10 +245,7 @@ def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
             cache_key=node,
         )
     if isinstance(node, P.Prefix):
-        return _dict_expansion(
-            ctx, node.field, F.col("term").startswith(node.prefix),
-            cache_key=node,
-        )
+        return _dict_expansion(ctx, node.field, node.prefix, cache_key=node)
     if isinstance(node, P.JsonRange):
         from tantiny_spark.analysis.jsonpath import (
             JSON_SEP, MARK_DATE, MARK_FLOAT, MARK_INT,
@@ -464,22 +451,19 @@ def _term_or(field: str, weights: dict, ctx: SearchContext) -> DataFrame:
     scores with tf = 1 (reference term queries read postings without freqs)
     and its term's df, times the term's weight: the sum of its boosts over
     its occurrences in the OR, so a duplicated term adds up exactly as
-    separate children do."""
+    separate children do. Dfs and weights enter as map literals (_by_term),
+    a lone term's too: Spark inlines a double literal into the generated
+    code but keeps a map literal as a reference, so a term query with
+    another df reuses the compiled class instead of compiling a new one."""
     n, avgdl = ctx.field_stats(field)
     terms = sorted(weights)
     dfs = ctx.term_dfs(field, terms)
-
-    def per_term(values: dict):
-        if len(terms) == 1:
-            return F.lit(float(values[terms[0]]))
-        return _by_term({t: values[t] for t in terms})
-
     score = _bm25_expr(
         F.lit(1.0), _decode_norm(F.col("norm_id")),
-        F.lit(float(avgdl)), per_term(dfs), F.lit(float(n)),
+        F.lit(float(avgdl)), _by_term(dfs), F.lit(float(n)),
     )
     if any(w != 1.0 for w in weights.values()):
-        score = score * per_term(weights)
+        score = score * _by_term(weights)
     return ctx.postings.where(
         (F.col("field") == field) & _term_in(terms)
     ).select("doc_id", score.alias("score"))
@@ -642,10 +626,7 @@ def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
     corpus scan; per-doc expansion positions union via ONE flatten agg
     bounded by expansions-per-doc."""
     k = len(node.terms)
-    exp = _first_terms(
-        ctx, node.field, F.col("term").startswith(node.prefix),
-        node.max_expansions,
-    )
+    exp = _first_terms(ctx, node.field, node.prefix, node.max_expansions)
     if not exp:
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
     parts = []
@@ -685,13 +666,18 @@ MAX_EXPANSION_LITERALS = 10_000
 _OVERFLOW = object()
 
 
-def _sorted_terms(ctx: SearchContext, field: str, term_predicate, n: int) -> list:
-    """The first ``n`` raw dictionary rows of ``field`` matching
-    ``term_predicate``, in term order (a term repeats once per segment
-    holding it): ONE TakeOrdered job (per-partition top rows, merged on the
-    driver), no distinct and no shuffle."""
+def _sorted_terms(ctx: SearchContext, field: str, match, n: int) -> list:
+    """The first ``n`` raw dictionary rows of ``field`` matching ``match``,
+    in term order (a term repeats once per segment holding it). A prefix
+    string is read on the driver from the dict files (SegmentFiles
+    .term_head: no job); a Column predicate (Java regex, the JVM
+    Levenshtein prefilter, a JSON range) is ONE TakeOrdered job
+    (per-partition top rows, merged on the driver), no distinct and no
+    shuffle."""
+    if isinstance(match, str):
+        return ctx.files.term_head(field, match, n)
     rows = (
-        ctx.dictionary.where((F.col("field") == field) & term_predicate)
+        ctx.dictionary.where((F.col("field") == field) & match)
         .select("term")
         .orderBy("term")
         .limit(n)
@@ -700,32 +686,33 @@ def _sorted_terms(ctx: SearchContext, field: str, term_predicate, n: int) -> lis
     return [r["term"] for r in rows]
 
 
-def _first_terms(ctx: SearchContext, field: str, term_predicate, k: int) -> list:
+def _first_terms(ctx: SearchContext, field: str, match, k: int) -> list:
     """The first ``k`` distinct dictionary terms of ``field`` matching
-    ``term_predicate``, in term order. A term has at most one dict row per
-    segment, so the first ``k × segments`` raw rows hold them; for the
-    small ``max_expansions`` heads of the phrase expansions only."""
-    rows = _sorted_terms(ctx, field, term_predicate, k * ctx.segments)
+    ``match`` (see _sorted_terms), in term order. A term has at most one
+    dict row per segment, so the first ``k × segments`` raw rows hold them;
+    for the small ``max_expansions`` heads of the phrase expansions only."""
+    rows = _sorted_terms(ctx, field, match, k * ctx.segments)
     return list(dict.fromkeys(rows))[:k]
 
 
-def _capped_terms(ctx: SearchContext, field: str, term_predicate):
+def _capped_terms(ctx: SearchContext, field: str, match):
     """The distinct matching terms, or _OVERFLOW when they may not fit:
     at most MAX_EXPANSION_LITERALS + 1 raw rows reach the driver whatever
     the segment count. A head that is not full holds every matching row,
     so its dedupe is exact; a full head is treated as overflow."""
-    rows = _sorted_terms(ctx, field, term_predicate, MAX_EXPANSION_LITERALS + 1)
+    rows = _sorted_terms(ctx, field, match, MAX_EXPANSION_LITERALS + 1)
     if len(rows) > MAX_EXPANSION_LITERALS:
         return _OVERFLOW
     return list(dict.fromkeys(rows))
 
 
 def _dict_expansion(
-    ctx: SearchContext, field: str, term_predicate, cache_key=None,
-    refine=None,
+    ctx: SearchContext, field: str, match, cache_key=None, refine=None,
 ) -> DataFrame:
     """Automaton-style queries (regex/prefix/fuzzy): enumerate matching
-    dictionary terms, union their postings, constant score 1.0.
+    dictionary terms, union their postings, constant score 1.0. ``match``
+    is a prefix string, whose head the driver reads from the dict files,
+    or a Column predicate, whose head is one Spark job (_sorted_terms).
 
     Typical patterns match a tiny dictionary slice, which is collected and
     re-injected as an IN literal list so the postings scan gets *term-level
@@ -738,7 +725,7 @@ def _dict_expansion(
     fully distributed, no driver materialization (AQE picks broadcast vs
     shuffle by actual size).
 
-    ``refine`` is ``(keep, column)`` when ``term_predicate`` only bounds a
+    ``refine`` is ``(keep, column)`` when ``match`` only bounds a
     superset of the matches: the same exact test as a Python predicate,
     applied to the collected head on the driver, and as a 0-arg callable
     returning a Column. The column runs only when the superset overflows:
@@ -746,14 +733,15 @@ def _dict_expansion(
     exact matches fit, then inside the semi-join if they do not."""
 
     def exact():
-        return term_predicate if refine is None else term_predicate & refine[1]()
+        pred = F.col("term").startswith(match) if isinstance(match, str) else match
+        return pred if refine is None else pred & refine[1]()
 
     # memoize the capped head per plan node: the snapshot's dictionary is
     # immutable, so a repeated prefix/regex/fuzzy query must not re-run
-    # the expansion job (the dominant fixed cost of a repeated smart query)
+    # the expansion read (the dominant fixed cost of a repeated smart query)
     matched = ctx._expansion_cache.get(cache_key) if cache_key is not None else None
     if matched is None:
-        matched = _capped_terms(ctx, field, term_predicate)
+        matched = _capped_terms(ctx, field, match)
         if refine is not None:
             matched = (
                 _capped_terms(ctx, field, exact()) if matched is _OVERFLOW
@@ -900,6 +888,19 @@ def _facet(node: P.Facet, ctx: SearchContext) -> DataFrame:
         (F.col("field") == node.field) & (F.col("term") == node.path)
     ).select("doc_id")
     return p.select("doc_id", F.lit(scoring.idf(df, n)).alias("score"))
+
+
+def top_doc_ids(result: DataFrame, limit: int = 10, offset: int = 0) -> DataFrame:
+    """top_k on an id-ordered snapshot (SearchContext.id_ordered): there
+    (score desc, doc_id asc) is (score desc, id asc), so the hits rank
+    without the (doc_id, id) join, in ONE TakeOrderedAndProject job over
+    the scored rows, like Tantivy's TopDocs ranks DocAddresses. The caller
+    reads the ``limit`` ids on the driver (SegmentFiles.ids).
+    Returns DataFrame[doc_id, score]."""
+    out = result.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    if offset:
+        out = out.offset(offset)
+    return out.limit(limit).select("doc_id", "score")
 
 
 def top_k(

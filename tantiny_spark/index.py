@@ -27,7 +27,9 @@ from tantiny_spark.build import bm25_totals, build_segment
 from tantiny_spark.errors import (
     IndexWriterBusyError, UnexpectedNone, UnsupportedField,
 )
-from tantiny_spark.executor import compile_plan, prime_stats, top_k
+from tantiny_spark.executor import (
+    compile_plan, prime_stats, top_doc_ids, top_k,
+)
 from tantiny_spark.schema import SPARK_TYPES, IndexSchema
 from tantiny_spark.storage import IndexStorage, Snapshot
 
@@ -138,9 +140,9 @@ class Index:
         return Index(spark, path, schema)
 
     def reload(self, version: int | None = None) -> "Index":
-        """Refresh the reader snapshot (index.rb:63-65). The previous
-        snapshot's cached tables are unpersisted — a streaming writer calling
-        reload() per micro-batch must not accumulate cached relations.
+        """Refresh the reader snapshot (index.rb:63-65). A snapshot caches
+        no relation, so a streaming writer calling reload() per
+        micro-batch accumulates none.
 
         ``version`` pins the reader to a HISTORICAL commit instead of HEAD —
         snapshot time travel (Iceberg ``VERSION AS OF`` / Lucene commit
@@ -167,8 +169,6 @@ class Index:
                     f"{[v['version'] for v in self.versions()]}"
                 ) from None
         self.snapshot = Snapshot(self.spark, self.storage, target)
-        if self._ctx is not None:
-            self._ctx.release()
         self._ctx = None
         self._query_cache.clear()
         return self
@@ -500,12 +500,17 @@ class Index:
             self.spark, self.storage, self.storage.current_version()
         ).context()
         # exact per-field totals recounted from the stored per-doc lengths,
-        # so no segment's old totals are needed
-        tables = {"docs": ctx.docs, "postings": ctx.postings,
-                  "stats": lambda: bm25_totals(self.schema, ctx.docs)}
+        # so no segment's old totals are needed; doc ids are kept, so the
+        # merged entry is id-ordered iff the merged snapshot was
+        tables = {
+            "docs": ctx.docs, "postings": ctx.postings,
+            "stats": lambda: {
+                **bm25_totals(self.schema, ctx.docs),
+                "id_ordered": ctx.id_ordered,
+            },
+        }
         manifest = self.storage.read_manifest(self.storage.current_version())
         entry = self.storage.write_segment(tables, tombstones=[])
-        ctx.release()
         version = self.storage.commit(
             {
                 "segments": [entry],
@@ -689,19 +694,37 @@ class Index:
         ``search_after`` is ES-style cursor pagination: pass the previous
         page's last hit (id, score) — exactly as search_with_scores
         returns it — and page depth costs nothing extra."""
-        rows = self.search_df(
+        hits = self.search_with_scores(
             query, limit, offset, search_after, **smart_opts
-        ).collect()
-        return [r["id"] for r in rows]
+        )
+        return [i for i, _ in hits]
 
     def search_with_scores(
         self, query, limit: int = DEFAULT_LIMIT, offset: int = 0,
         search_after: tuple | None = None, **smart_opts,
     ) -> list:
-        rows = self.search_df(
-            query, limit, offset, search_after, **smart_opts
+        """search() with each hit's score: ``[(id, score), ...]``, the rows
+        of search_df. On an id-ordered snapshot (SearchContext.id_ordered)
+        without a cursor, the hits rank by doc id in ONE Spark job
+        (executor.top_doc_ids) and the driver then reads their ids from
+        the docs files, as Tantivy's TopDocs ranks DocAddresses and reads
+        the k stored ids; otherwise search_df's join-then-rank runs."""
+        if search_after is not None or not self.ctx.id_ordered:
+            rows = self.search_df(
+                query, limit, offset, search_after, **smart_opts
+            ).collect()
+            return [(r["id"], r["score"]) for r in rows]
+        if offset < 0:
+            raise ValueError("offset must be >= 0")
+        rows = self._cached(
+            lambda: ("__doc_ids__", query, tuple(sorted(smart_opts.items())),
+                     limit, offset),
+            lambda: top_doc_ids(
+                self._compile(query, smart_opts), limit, offset
+            ),
         ).collect()
-        return [(r["id"], r["score"]) for r in rows]
+        ids = self.ctx.files.ids([r["doc_id"] for r in rows])
+        return [(ids[r["doc_id"]], r["score"]) for r in rows]
 
     def search_df(
         self, query, limit: int = DEFAULT_LIMIT, offset: int = 0,
@@ -716,31 +739,34 @@ class Index:
         is planned, so a hit costs no planning at all."""
         if offset < 0:
             raise ValueError("offset must be >= 0")
-        try:
-            cache_key = (
-                query, tuple(sorted(smart_opts.items())), limit, offset,
+        return self._cached(
+            lambda: (query, tuple(sorted(smart_opts.items())), limit, offset,
+                     search_after),
+            lambda: top_k(
+                self._compile(query, smart_opts), self.ctx, limit, offset,
                 search_after,
-            )
-            hit = self._query_cache.get(cache_key)
-        except TypeError:  # unhashable query payload — skip the cache
-            cache_key, hit = None, None
-        if hit is not None:
-            self._query_cache.move_to_end(cache_key)
-            return hit
-        return self._cache_query(cache_key, top_k(
-            self._compile(query, smart_opts), self.ctx, limit, offset,
-            search_after,
-        ))
+            ),
+        )
 
     #: compiled-query LRU capacity — enough for any realistic hot query set
     #: while bounding the DataFrame references a long-lived reader pins
     QUERY_CACHE_SIZE = 256
 
-    def _cache_query(self, cache_key, out: DataFrame) -> DataFrame:
-        if cache_key is not None:
-            self._query_cache[cache_key] = out
-            while len(self._query_cache) > self.QUERY_CACHE_SIZE:
-                self._query_cache.popitem(last=False)
+    def _cached(self, key, build) -> DataFrame:
+        """The compiled-query LRU: the DataFrame cached under ``key()``, or
+        ``build()``'s, cached. A key that cannot be built or hashed (a
+        query payload that does not sort or hash) skips the cache."""
+        try:
+            cache_key = key()
+            hit = self._query_cache.get(cache_key)
+        except TypeError:
+            return build()
+        if hit is not None:
+            self._query_cache.move_to_end(cache_key)
+            return hit
+        out = self._query_cache[cache_key] = build()
+        while len(self._query_cache) > self.QUERY_CACHE_SIZE:
+            self._query_cache.popitem(last=False)
         return out
 
     def search_by_field(
@@ -1399,17 +1425,7 @@ class Index:
         1000); above that, each query's matched set is ranked whole."""
         from pyspark.sql import Window
 
-        # the whole batch plan rides the compiled-query LRU (same staleness
-        # semantics as search_df's cache — cleared on reload()): a repeated
-        # batch pays py4j plan construction once, execution every call
-        try:
-            cache_key = ("__batch__", tuple(sorted(queries.items())), limit)
-            ranked = self._query_cache.get(cache_key)
-        except TypeError:  # unhashable query payload — skip the cache
-            cache_key, ranked = None, None
-        if ranked is not None:
-            self._query_cache.move_to_end(cache_key)
-        else:
+        def build():
             tagged = [
                 df.select(F.lit(name).alias("query"), "doc_id", "score")
                 for name, df in zip(
@@ -1422,14 +1438,20 @@ class Index:
             w = Window.partitionBy("query").orderBy(
                 F.col("score").desc(), F.col("id").asc()
             )
-            ranked = (
+            return (
                 unioned.join(self.ctx.id_map, "doc_id")
                 .withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= limit)
                 .select("query", "id", "rank")
             )
-            self._cache_query(cache_key, ranked)
-        rows = ranked.collect()
+
+        # the whole batch plan rides the compiled-query LRU (same staleness
+        # semantics as search_df's cache — cleared on reload()): a repeated
+        # batch pays py4j plan construction once, execution every call
+        rows = self._cached(
+            lambda: ("__batch__", tuple(sorted(queries.items())), limit),
+            build,
+        ).collect()
         out: dict = {name: [] for name in queries}
         for r in sorted(rows, key=lambda r: (r["query"], r["rank"])):
             out[r["query"]].append(r["id"])

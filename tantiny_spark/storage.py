@@ -8,7 +8,11 @@ The Spark-native analog of Tantivy's segment directory + meta.json
   list of deleted doc ``id``s applying to all OLDER segments;
 - a JSON *manifest* lists the live segments of a version, each entry with
   its BM25 totals ``"num_docs": n, "tokens": {field: total_tokens}`` (what
-  Tantivy keeps in segment metadata), summed by readers on the driver;
+  Tantivy keeps in segment metadata), summed by readers on the driver, and
+  its ``"id_range": [min id, max id]`` with ``"id_ordered"``: whether its
+  ``doc_id`` order is its ``id`` order (a build stamps ``doc_id = base +
+  rank(id)``; a merge keeps doc ids, so a merged entry is id-ordered only
+  if the snapshot it merged was);
 - every table is zstd Parquet with v2 pages (``WRITE_OPTIONS``): ``doc_id``
   in docs and postings is DELTA_BINARY_PACKED (the d-gaps of a posting
   list, coded by Parquet itself), ``docs.id`` and ``dict.term`` fall back
@@ -16,6 +20,11 @@ The Spark-native analog of Tantivy's segment directory + meta.json
   ``norm_id`` and the postings ``term`` keep RLE_DICTIONARY (delta coding
   made ``positions`` 12% larger). Footers name their encodings, so older
   snappy/v1 segments read as they are until a merge rewrites them;
+- ``dict`` is written sorted by (field, term), so its files' and row
+  groups' min/max statistics bound the terms they hold: the driver reads
+  a term's df, a prefix's first terms and the hits' ids straight from the
+  files with pyarrow (``SegmentFiles``), pruned by those statistics, with
+  no Spark job and no cached relation;
 - every table is read with its fixed schema (``load_segment``), so loading
   a snapshot starts no schema-inference job;
 - ``HEAD`` names the current manifest and is swapped atomically
@@ -31,11 +40,16 @@ and pushdown are identical.
 
 from __future__ import annotations
 
+import bisect
+import heapq
 import json
 import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tantiny_spark.build import POSTINGS_SCHEMA, docs_schema
@@ -70,6 +84,160 @@ def dict_table(postings: DataFrame) -> DataFrame:
     return postings.groupBy("field", "term").agg(
         F.count("*").cast("long").alias("df")
     )
+
+
+def _parquet_files(table_dir: str) -> list:
+    """The data files Spark wrote into one table directory, in name
+    order."""
+    try:
+        names = sorted(os.listdir(table_dir))
+    except FileNotFoundError:
+        return []
+    return [
+        os.path.join(table_dir, n) for n in names
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    ]
+
+
+def _any_within(values: list, lo, hi) -> bool:
+    """Whether the sorted ``values`` hold one in [lo, hi]."""
+    i = bisect.bisect_left(values, lo)
+    return i < len(values) and values[i] <= hi
+
+
+class SegmentFiles:
+    """Driver-side reads of the live segments' files with pyarrow: the dfs
+    of a field's terms, the first dictionary terms under a prefix, and the
+    stored ``id`` of a few doc ids — what Tantivy's searcher reads from a
+    segment's term dictionary and doc store without a distributed job.
+
+    A read opens only the row groups whose footer min/max statistics may
+    hold what it looks for (``dict`` is sorted by (field, term), so a term
+    lies in one row group per segment) and starts no Spark job. Footers
+    are read once per snapshot, by the first lookup of each table; a
+    column without statistics prunes nothing."""
+
+    #: the columns whose min/max the lookups test
+    BOUNDED = ("field", "term", "doc_id")
+
+    def __init__(self, seg_dirs: list):
+        self._dirs = list(seg_dirs)
+        self._groups: dict = {}  # table -> [(path, footer, index, bounds)]
+
+    def _row_groups(self, table: str) -> list:
+        groups = self._groups.get(table)
+        if groups is None:
+            groups = []
+            for d in self._dirs:
+                for path in _parquet_files(os.path.join(d, table)):
+                    footer = pq.read_metadata(path)
+                    for i in range(footer.num_row_groups):
+                        rg = footer.row_group(i)
+                        bounds = {}
+                        for j in range(rg.num_columns):
+                            col = rg.column(j)
+                            st = col.statistics
+                            if (
+                                col.path_in_schema in self.BOUNDED
+                                and st is not None and st.has_min_max
+                            ):
+                                bounds[col.path_in_schema] = (st.min, st.max)
+                        groups.append((path, footer, i, bounds))
+            self._groups[table] = groups
+        return groups
+
+    @staticmethod
+    def _read(group, columns: list) -> pa.Table:
+        path, footer, i, _ = group
+        with pq.ParquetFile(path, metadata=footer) as pf:
+            return pf.read_row_group(i, columns=columns)
+
+    def _pruned(self, table: str, **within) -> list:
+        """The row groups of ``table`` whose (min, max) of each named
+        column its test ``(lo, hi) -> bool`` admits."""
+        return [
+            g for g in self._row_groups(table)
+            if all(c not in g[3] or ok(*g[3][c]) for c, ok in within.items())
+        ]
+
+    def term_dfs(self, field: str, terms: list) -> dict:
+        """Each term's df summed over the live segments; absent terms are
+        left out."""
+        want = sorted(set(terms))
+        found: dict = {}
+        for g in self._pruned(
+            "dict", field=lambda lo, hi: lo <= field <= hi,
+            term=lambda lo, hi: _any_within(want, lo, hi),
+        ):
+            t = self._read(g, ["field", "term", "df"])
+            t = t.filter(pc.and_(
+                pc.equal(t["field"], field),
+                pc.is_in(t["term"], value_set=pa.array(want, pa.string())),
+            ))
+            for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
+                found[term] = found.get(term, 0) + df
+        return found
+
+    def term_head(self, field: str, prefix: str, n: int) -> list:
+        """The first ``n`` raw dict rows of ``field`` whose term starts with
+        ``prefix``, in term order (a term repeats once per segment holding
+        it). Row groups are read in order of their smallest term, and once
+        ``n`` rows are held, a row group whose smallest term sorts after
+        all of them is not read, nor is any after it."""
+        def lowest(g) -> str:
+            return g[3].get("term", ("",))[0]
+
+        groups = self._pruned(
+            "dict", field=lambda lo, hi: lo <= field <= hi,
+            term=lambda lo, hi: hi >= prefix
+            and (lo <= prefix or lo.startswith(prefix)),
+        )
+        head: list = []
+        for g in sorted(groups, key=lowest):
+            if len(head) >= n and lowest(g) > head[-1]:
+                break
+            t = self._read(g, ["field", "term"])
+            t = t.filter(pc.and_(
+                pc.equal(t["field"], field), pc.starts_with(t["term"], prefix)
+            ))
+            head = heapq.nsmallest(n, head + t["term"].to_pylist())
+        return head
+
+    def ids(self, doc_ids: list) -> dict:
+        """doc_id → stored ``id`` for the given doc ids (unique across the
+        segments of a snapshot)."""
+        want = sorted(set(doc_ids))
+        out: dict = {}
+        if not want:
+            return out
+        for g in self._pruned(
+            "docs", doc_id=lambda lo, hi: _any_within(want, lo, hi)
+        ):
+            t = self._read(g, ["doc_id", "id"])
+            t = t.filter(
+                pc.is_in(t["doc_id"], value_set=pa.array(want, pa.int64()))
+            )
+            out.update(zip(t["doc_id"].to_pylist(), t["id"].to_pylist()))
+        return out
+
+
+def id_ordered(entries: list) -> bool:
+    """Whether ``doc_id`` order is ``id`` order over the live entries: each
+    entry is id-ordered and its smallest id sorts after the previous
+    entry's largest. An entry without these fields (written by an older
+    version) is not id-ordered. Tombstones keep the order: deleting docs
+    removes both orders' rows alike."""
+    last = None
+    for e in entries:
+        if not e.get("name"):  # pure-delete commit
+            continue
+        if not e.get("id_ordered") or not e.get("id_range"):
+            return False
+        low, high = e["id_range"]
+        if last is not None and low <= last:
+            return False
+        last = high
+    return True
 
 
 class IndexStorage:
@@ -141,8 +309,9 @@ class IndexStorage:
         corrupt index (the resumability contract).
 
         ``tables`` holds the ``docs`` and ``postings`` DataFrames and
-        ``stats``, a 0-arg callable returning the BM25 totals that go into
-        the entry (``{"num_docs": n, "tokens": {field: total_tokens}}``).
+        ``stats``, a 0-arg callable returning what else goes into the
+        entry: the BM25 totals (``{"num_docs": n, "tokens": {field:
+        total_tokens}}``), ``id_range`` and ``id_ordered``.
         The two writes and that aggregation are independent reads of the
         same input, so they are submitted from a small thread pool: the
         later jobs' tasks back-fill executors idling in the earlier jobs'
@@ -151,7 +320,8 @@ class IndexStorage:
         runs concurrent actions FIFO, which is exactly the back-fill
         wanted; failures propagate out of pool.map. The ``dict`` is then
         derived from the freshly-written postings files (dict_table), never
-        by re-running the build lineage."""
+        by re-running the build lineage, and written sorted by (field,
+        term) for ``SegmentFiles``."""
         from concurrent.futures import ThreadPoolExecutor
 
         name = name or f"seg-{uuid.uuid4().hex[:12]}"
@@ -168,7 +338,10 @@ class IndexStorage:
         stored = spark.read.schema(POSTINGS_SCHEMA).parquet(
             os.path.join(seg_dir, "postings")
         )
-        write_table(dict_table(stored), os.path.join(seg_dir, "dict"))
+        write_table(
+            dict_table(stored).orderBy("field", "term"),
+            os.path.join(seg_dir, "dict"),
+        )
         if isinstance(tombstones, DataFrame):
             entry = {
                 "name": name, "tombstones": [],
@@ -288,32 +461,33 @@ class Snapshot:
                 out = out.unionByName(p)
             return out
 
+        seg_dirs = [
+            os.path.join(self.storage.path, "segments", e["name"])
+            for e in entries if e.get("name")
+        ]
         if not docs_parts:
             return SearchContext(
                 docs=self.spark.createDataFrame([], "doc_id long, id string"),
                 postings=self.spark.createDataFrame([], POSTINGS_SCHEMA),
                 dictionary=self.spark.createDataFrame([], DICT_SCHEMA),
+                files=SegmentFiles(seg_dirs),
                 totals={},
                 segments=0,
             )
 
-        docs = union_all(docs_parts)
-        postings = union_all(post_parts)
         # NOTE: dict df / BM25 totals still include tombstoned docs until the
         # next merge/compaction — the same freshness tradeoff Tantivy makes
         # (deleted docs affect BM25 stats until segments merge).
-        # The repeatedly-probed SMALL tables stay hot: the (doc_id, id) map
-        # (every top-k joins it) and the dictionary. The full docs
-        # table is deliberately NOT cached — at web scale it cannot be, and
-        # range/negation want Parquet scans with fast-field min/max pushdown
-        # rather than a full in-memory relation. postings likewise stay on
-        # Parquet: term lookups prune them.
+        # Nothing is cached: the driver reads dfs, prefix heads and the hits'
+        # ids from the files (SegmentFiles), and every scan reads Parquet
+        # with its pushdown.
         return SearchContext(
-            docs=docs,
-            ids=docs.select("doc_id", "id").persist(),
-            postings=postings,
-            dictionary=union_all(dict_parts).persist(),
+            docs=union_all(docs_parts),
+            postings=union_all(post_parts),
+            dictionary=union_all(dict_parts),
+            files=SegmentFiles(seg_dirs),
             totals=totals,
             segments=len(dict_parts),
             untallied=untallied,
+            id_ordered=id_ordered(entries),
         )

@@ -9,13 +9,19 @@ tests pin both plan shapes, that the head stays within the cap however
 many segments repeat a term (it is deduplicated on the driver, not by a
 distinct job), the fuzzy prefilter's exactness against a brute-force OSA,
 the exact fallback when only the prefilter overflows, and that no lookup
-shuffles.
+shuffles. A prefix head is read on the driver from the dict files
+(storage.SegmentFiles); a Column predicate's head is one Spark job. Both
+heads keep the same cap.
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,15 +33,36 @@ from tantiny_spark.executor import (
 )
 from tantiny_spark.index import Index
 from tantiny_spark.schema import IndexSchema
+from tantiny_spark.storage import SegmentFiles
+
+
+def _context(spark, root, dicts, postings, docs, n) -> SearchContext:
+    """A context whose ``text`` dictionary holds one segment per frame of
+    ``dicts``: each is written sorted by (field, term) into its own
+    segment directory under ``root`` for the driver reads, and their union
+    is the Spark ``dictionary``."""
+    seg_dirs = []
+    for i, frame in enumerate(dicts):
+        seg_dirs.append(os.path.join(str(root), f"seg{i}"))
+        os.makedirs(os.path.join(seg_dirs[-1], "dict"))
+        pq.write_table(
+            pa.Table.from_pandas(
+                frame.sort_values(["field", "term"]), preserve_index=False
+            ),
+            os.path.join(seg_dirs[-1], "dict", "part-00000.parquet"),
+        )
+    return SearchContext(
+        docs=docs, postings=postings,
+        dictionary=spark.createDataFrame(pd.concat(dicts)),
+        files=SegmentFiles(seg_dirs), totals={"text": (n, n)},
+        segments=len(dicts),
+    )
 
 
 @pytest.fixture(scope="module")
-def big_dict_ctx(spark):
+def big_dict_ctx(spark, tmp_path_factory):
     n = MAX_EXPANSION_LITERALS + 5_000
     terms = [f"a{i:06d}" for i in range(n)]
-    dictionary = spark.createDataFrame(
-        pd.DataFrame({"field": "text", "term": terms, "df": 1})
-    )
     postings = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -51,9 +78,10 @@ def big_dict_ctx(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(n), "id": [f"{i:06d}" for i in range(n)]})
     )
-    return SearchContext(
-        docs=docs, postings=postings, dictionary=dictionary,
-        totals={"text": (n, n)}, segments=1,
+    return _context(
+        spark, tmp_path_factory.mktemp("big_dict"),
+        [pd.DataFrame({"field": "text", "term": terms, "df": 1})],
+        postings, docs, n,
     )
 
 
@@ -64,7 +92,7 @@ def _analyzed_plan(df) -> str:
 
 
 def test_pathological_prefix_uses_semi_join_not_driver_collect(big_dict_ctx):
-    out = _dict_expansion(big_dict_ctx, "text", F.col("term").startswith("a"))
+    out = _dict_expansion(big_dict_ctx, "text", "a")
     plan = _analyzed_plan(out)
     # distributed fallback: a semi-join against the dictionary slice, and no
     # giant IN-literal list baked into the plan
@@ -74,7 +102,7 @@ def test_pathological_prefix_uses_semi_join_not_driver_collect(big_dict_ctx):
 
 
 def test_typical_prefix_keeps_literal_pushdown(big_dict_ctx):
-    out = _dict_expansion(big_dict_ctx, "text", F.col("term").startswith("a00000"))
+    out = _dict_expansion(big_dict_ctx, "text", "a00000")
     plan = _analyzed_plan(out)
     # 10 matched terms → isin literals (term-level pushdown), no join
     assert "LeftSemi" not in plan, plan
@@ -82,14 +110,11 @@ def test_typical_prefix_keeps_literal_pushdown(big_dict_ctx):
     assert out.count() == 10
 
 
-def _expansion_ctx(spark, terms, segments=1) -> SearchContext:
+def _expansion_ctx(spark, root, terms, segments=1) -> SearchContext:
     """A ``text`` dictionary holding every term once per segment (the
     layout of an index whose segments all carry every term) over
     postings with one doc per term: doc_id i ↔ terms[i]."""
     n = len(terms)
-    dictionary = spark.createDataFrame(
-        pd.DataFrame({"field": "text", "term": list(terms) * segments, "df": 1})
-    )
     postings = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -101,10 +126,11 @@ def _expansion_ctx(spark, terms, segments=1) -> SearchContext:
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(n), "id": [f"{i:04d}" for i in range(n)]})
     )
-    return SearchContext(
-        docs=docs, postings=postings, dictionary=dictionary,
-        totals={"text": (n, n)}, segments=segments,
-    )
+    dicts = [
+        pd.DataFrame({"field": "text", "term": list(terms), "df": 1})
+        for _ in range(segments)
+    ]
+    return _context(spark, root, dicts, postings, docs, n)
 
 
 def _matched_terms(ctx, terms, node) -> set:
@@ -132,8 +158,10 @@ _FUZZY_TERMS = sorted(
 
 
 @pytest.fixture(scope="module")
-def fuzzy_ctx(spark):
-    return _expansion_ctx(spark, _FUZZY_TERMS, segments=2)
+def fuzzy_ctx(spark, tmp_path_factory):
+    return _expansion_ctx(
+        spark, tmp_path_factory.mktemp("fuzzy"), _FUZZY_TERMS, segments=2
+    )
 
 
 @pytest.mark.parametrize("prefix", [False, True])
@@ -179,43 +207,71 @@ def _collect_sizes(monkeypatch, cls) -> list:
     return sizes
 
 
+def _head_sizes(monkeypatch, ctx, match) -> list:
+    """Record how many raw rows each expansion head of ``match`` brings to
+    the driver: SegmentFiles.term_head's for a prefix string, the
+    dictionary collect's for a Column predicate."""
+    if not isinstance(match, str):
+        return _collect_sizes(monkeypatch, type(ctx.dictionary))
+    sizes: list = []
+    head = SegmentFiles.term_head
+
+    def spy(self, *args):
+        rows = head(self, *args)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(SegmentFiles, "term_head", spy)
+    return sizes
+
+
+def _heads(prefix: str) -> tuple:
+    """The same slice for both head readers: the prefix, read on the
+    driver, and a regex predicate, collected by Spark."""
+    return (prefix, F.col("term").rlike(f"^{prefix}"))
+
+
 _B_TERMS = [f"b{i:02d}" for i in range(10)] + [f"c{i:02d}" for i in range(4)]
 
 
 @pytest.mark.parametrize("cap", [30, 31, 29, 10, 3])
-def test_literal_path_iff_raw_head_fits(spark, monkeypatch, cap):
+def test_literal_path_iff_raw_head_fits(spark, tmp_path, monkeypatch, cap):
     """Every term in every one of 3 segments: 10 distinct matches are 30
-    raw dict rows. The head collects at most cap + 1 raw rows, so the
+    raw dict rows. Either head brings at most cap + 1 raw rows, so the
     literal path is taken exactly when all 30 fit; a full head (even one
     whose 10 distinct terms would fit, cap 10) takes the semi-join, which
     is exact for any number of matches."""
     monkeypatch.setattr(executor, "MAX_EXPANSION_LITERALS", cap)
-    ctx = _expansion_ctx(spark, _B_TERMS, segments=3)
-    sizes = _collect_sizes(monkeypatch, type(ctx.dictionary))
-    out = _dict_expansion(ctx, "text", F.col("term").startswith("b"))
-    assert sizes and max(sizes) <= cap + 1, sizes
-    plan = _analyzed_plan(out)
-    if cap >= 30:
-        assert "LeftSemi" not in plan, plan
-        assert "b09" in plan, plan
-    else:
-        assert "LeftSemi" in plan, plan
-        assert "b09" not in plan, plan
-    assert sorted(_B_TERMS[r["doc_id"]] for r in out.collect()) == _B_TERMS[:10]
+    ctx = _expansion_ctx(spark, tmp_path, _B_TERMS, segments=3)
+    for match in _heads("b"):
+        sizes = _head_sizes(monkeypatch, ctx, match)
+        out = _dict_expansion(ctx, "text", match)
+        assert sizes and max(sizes) <= cap + 1, sizes
+        plan = _analyzed_plan(out)
+        if cap >= 30:
+            assert "LeftSemi" not in plan, plan
+            assert "b09" in plan, plan
+        else:
+            assert "LeftSemi" in plan, plan
+            assert "b09" not in plan, plan
+        assert sorted(
+            _B_TERMS[r["doc_id"]] for r in out.collect()
+        ) == _B_TERMS[:10]
 
 
-def test_head_stays_within_cap_over_many_segments(spark, monkeypatch):
+def test_head_stays_within_cap_over_many_segments(spark, tmp_path, monkeypatch):
     """A one-letter prefix over 40 un-merged segments that each repeat the
-    same 600 terms (24,000 raw rows, 600 distinct): at the real cap no
-    collect brings more than MAX_EXPANSION_LITERALS + 1 rows to the
+    same 600 terms (24,000 raw rows, 600 distinct): at the real cap
+    neither head brings more than MAX_EXPANSION_LITERALS + 1 rows to the
     driver, and the semi-join answers exactly."""
     terms = [f"m{i:04d}" for i in range(600)]
-    ctx = _expansion_ctx(spark, terms, segments=40)
-    sizes = _collect_sizes(monkeypatch, type(ctx.dictionary))
-    out = _dict_expansion(ctx, "text", F.col("term").startswith("m"))
-    assert sizes and max(sizes) <= MAX_EXPANSION_LITERALS + 1, sizes
-    assert "LeftSemi" in _analyzed_plan(out)
-    assert out.count() == len(terms)
+    ctx = _expansion_ctx(spark, tmp_path, terms, segments=40)
+    for match in _heads("m"):
+        sizes = _head_sizes(monkeypatch, ctx, match)
+        out = _dict_expansion(ctx, "text", match)
+        assert sizes and max(sizes) <= MAX_EXPANSION_LITERALS + 1, sizes
+        assert "LeftSemi" in _analyzed_plan(out)
+        assert out.count() == len(terms)
 
 
 @pytest.mark.parametrize("prefix", [False, True])
@@ -247,12 +303,12 @@ _ODD_TERMS = ["it's", "back\\slash", "new\nline", "tick`tock", "été", "日本"
 
 
 @pytest.mark.parametrize("term", _ODD_TERMS)
-def test_prefix_literals_round_trip(spark, term):
+def test_prefix_literals_round_trip(spark, tmp_path, term):
     """Expansion heads re-enter the plan as SQL literals: quotes,
     backslashes, newlines, backticks, ``${`` and non-ASCII text must read
     back as exactly the dictionary term."""
     terms = sorted(set(_ODD_TERMS) | {term + "z", "zz"})
-    ctx = _expansion_ctx(spark, terms, segments=2)
+    ctx = _expansion_ctx(spark, tmp_path, terms, segments=2)
     node = P.Prefix("text", term)
     assert _matched_terms(ctx, terms, node) == {term, term + "z"}
 
@@ -301,17 +357,17 @@ def lookup_index(spark, tmp_path_factory):
     ids=["term", "prefix", "fuzzy", "fuzzy_prefix"],
 )
 def test_cold_lookups_are_shuffle_free(lookup_index, monkeypatch, make):
-    """Every driver-side lookup of a cold search (dfs, expansion head) is a
-    plan without an Exchange, and no plan of a search whose fuzzy expansion
-    fits the cap runs Python."""
+    """A cold search collects no lookup of a term's df or a prefix head
+    (the driver reads both from the dict files); a fuzzy head is one
+    collected plan without an Exchange, and no plan of a search whose
+    fuzzy expansion fits the cap runs Python."""
     idx = lookup_index.reload()
-    idx.ctx._df_cache.clear()
-    idx.ctx._expansion_cache.clear()
     plans = _collect_plans(monkeypatch, type(idx.ctx.dictionary))
-    hits = idx.search(make(idx), limit=500)
+    node = make(idx)
+    hits = idx.search(node, limit=500)
     assert hits
     lookups = plans[:-1]  # the last collect is the search result itself
-    assert lookups
+    assert len(lookups) == (1 if isinstance(node, P.FuzzyTerm) else 0)
     for plan in lookups:
         assert "Exchange" not in plan, plan
     for plan in plans:

@@ -221,7 +221,7 @@ def test_lookups_sum_segments_with_tombstones(spark, tmp_path):
     """term_dfs sums a term's per-segment dict rows and field_stats the
     segments' manifest totals over 3 segments; tombstoned docs keep counting
     in both until a merge rewrites them (Tantivy's freshness tradeoff).
-    field_stats is a driver-side lookup that starts no Spark job."""
+    Both are driver-side lookups that start no Spark job."""
     schema = IndexSchema()
     schema.text("text")
     idx = Index(spark, str(tmp_path / "idx"), schema)
@@ -241,9 +241,14 @@ def test_lookups_sum_segments_with_tombstones(spark, tmp_path):
     )
     assert stats == (30, 3.0)
     assert jobs == []
-    # the same probe sees the job of an uncached dictionary lookup
+    # a df lookup reads the dict files on the driver: no job either, while
+    # the same probe sees the job of a search
     _, jobs = _jobs_in_group(
         spark, "term-dfs", lambda: idx.ctx.term_dfs("text", ["seg2"])
+    )
+    assert jobs == []
+    _, jobs = _jobs_in_group(
+        spark, "search", lambda: idx.search(P.Term("text", "seg2"))
     )
     assert len(jobs) >= 1
     assert idx.ctx.field_stats("nosuch") == (0, 1.0)
@@ -304,27 +309,36 @@ def test_entries_without_totals_refuse_to_score_until_merged(spark, tmp_path):
     assert legacy.search_with_scores(query, limit=ALL) == want
 
 
-def test_snapshot_caches_two_per_reload(spark, tmp_path):
-    """A reload plus one scoring search materializes exactly the two
-    snapshot reader caches, the (doc_id, id) map and the dictionary, and
-    the next reload releases both."""
+def test_no_persisted_rdd_survives_an_operation(spark, tmp_path):
+    """A snapshot caches nothing: the session's persisted RDDs are the
+    same before and after a reload, a search, a search_many and an
+    aggregation, with and without tombstones."""
 
     def persisted() -> set:
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     schema = IndexSchema()
     schema.text("text")
+    schema.string("tag")
     idx = Index(spark, str(tmp_path / "idx"), schema)
     for seg in range(2):
-        rows = [(f"s{seg}d{i}", f"common seg{seg}") for i in range(5)]
-        idx.add_dataframe(spark.createDataFrame(rows, "id string, text string"))
+        rows = [
+            (f"s{seg}d{i}", f"common seg{seg}", f"t{i % 2}") for i in range(5)
+        ]
+        idx.add_dataframe(
+            spark.createDataFrame(rows, "id string, text string, tag string")
+        )
     start = persisted()
-
-    idx = idx.reload()
-    assert len(idx.search(P.Term("text", "common"), limit=ALL)) == 10
-    searched = persisted()
-    assert start <= searched
-    assert len(searched - start) == 2
-
-    idx = idx.reload()
-    assert persisted() == start
+    # the second round runs after s1d4 (tag t0) is deleted
+    for n_live, tags in ((10, {"t0": 6, "t1": 4}), (9, {"t0": 5, "t1": 4})):
+        idx = idx.reload()
+        assert persisted() == start
+        assert len(idx.search(P.Term("text", "common"), limit=ALL)) == n_live
+        assert persisted() == start
+        got = idx.search_many({"a": P.Term("text", "seg0"), "b": "seg1"})
+        assert sorted(got["a"]) == [f"s0d{i}" for i in range(5)]
+        assert persisted() == start
+        out = idx.aggregate({"tags": {"terms": {"field": "tag"}}}).collect()
+        assert {r["tags"]: r["doc_count"] for r in out} == tags
+        assert persisted() == start
+        idx.delete("s1d4")
