@@ -58,17 +58,23 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-def bm25_totals(schema: IndexSchema, docs: DataFrame) -> dict:
+def bm25_totals(
+    schema: IndexSchema, docs: DataFrame, doc_ids: tuple | None = None
+) -> dict:
     """The BM25 totals of a set of per-doc rows carrying ``id`` and each
     text/json field's ``<field>__len``, in a segment's manifest-entry form
-    ``{"num_docs": n, "tokens": {field: total_tokens}, "id_range": [min
-    id, max id]}``: ONE aggregation job for the doc count, every field's
-    token total and the id range (None when an id is null). String and
-    facet fields count one token per doc."""
-    agg_cols = [
-        F.count("*").alias("__n"), F.count("id").alias("__n_id"),
-        F.min("id").alias("__min_id"), F.max("id").alias("__max_id"),
-    ]
+    ``{"num_docs": n, "tokens": {field: total_tokens}}``: ONE aggregation
+    job for the doc count and every field's token total. String and facet
+    fields count one token per doc. With ``doc_ids``, the (first, last)
+    doc id of rows whose ``doc_id`` order is their ``id`` order (a
+    build's), the same job also gives the entry's one id run, ``"id_runs":
+    [[first, last, min id, max id]]`` (None when an id is null)."""
+    agg_cols = [F.count("*").alias("__n")]
+    if doc_ids is not None:
+        agg_cols += [
+            F.count("id").alias("__n_id"),
+            F.min("id").alias("__min_id"), F.max("id").alias("__max_id"),
+        ]
     for f in schema.text_fields + schema.json_fields:
         agg_cols.append(F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}"))
     agg_row = docs.agg(*agg_cols).collect()[0]
@@ -76,11 +82,13 @@ def bm25_totals(schema: IndexSchema, docs: DataFrame) -> dict:
     tokens = dict.fromkeys(schema.string_fields + schema.facet_fields, n_docs)
     for f in schema.text_fields + schema.json_fields:
         tokens[f] = int(agg_row[f"__tot_{f}"] or 0)
-    id_range = (
-        [agg_row["__min_id"], agg_row["__max_id"]]
-        if n_docs and agg_row["__n_id"] == n_docs else None
-    )
-    return {"num_docs": n_docs, "tokens": tokens, "id_range": id_range}
+    out = {"num_docs": n_docs, "tokens": tokens}
+    if doc_ids is not None:
+        out["id_runs"] = (
+            [[*doc_ids, agg_row["__min_id"], agg_row["__max_id"]]]
+            if n_docs and agg_row["__n_id"] == n_docs else None
+        )
+    return out
 
 
 _ROW_PICKING_NODE = re.compile(
@@ -620,9 +628,9 @@ def build_segment(
     ).sortWithinPartitions("field", "term", "doc_id")
 
     # stats: one aggregation job for every field's token totals, the doc
-    # count and the id range, for the segment's manifest entry, which also
-    # records that doc_id order is id order (assign_doc_ids stamps
-    # doc_id = base + rank(id)) — DEFERRED (0-arg callable) so
+    # count and the segment's one id run (assign_doc_ids stamps doc_id =
+    # base + rank(id), so doc_id order is id order), for the segment's
+    # manifest entry — DEFERRED (0-arg callable) so
     # storage.write_segment runs it concurrently with the docs/postings
     # writes instead of as a serial barrier between staging and the table
     # writes. The doc count itself is n_input (the analyzer emits exactly
@@ -635,7 +643,9 @@ def build_segment(
         # deterministic that is not) makes the broadcast doc-id join drop
         # rows, and the write must fail before the commit, not record
         # n_input
-        totals = bm25_totals(schema, doc_rows)
+        totals = bm25_totals(
+            schema, doc_rows, (doc_id_base, doc_id_base + n_input - 1)
+        )
         n_stamped = totals["num_docs"]
         if n_stamped != n_input:
             raise TantinyError(
@@ -643,7 +653,7 @@ def build_segment(
                 "rows: the id column must be deterministic (the doc-id "
                 "assignment reads the input more than once)"
             )
-        return {**totals, "id_ordered": True}
+        return totals
 
     return {
         "docs": docs,

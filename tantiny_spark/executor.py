@@ -18,18 +18,24 @@ Every scan is pruned before it leaves Parquet: term lookups filter on
 (field, term) — pushed down onto the sorted postings layout — and only the
 columns a query type needs are read (no positions for term queries).
 
-A cold term search is ONE Spark job on an id-ordered snapshot:
+A cold term search is ONE Spark job on a snapshot whose id runs are
+disjoint (every append-only snapshot and its merge, deletes included):
 - term dfs and prefix heads are read on the driver from the live
   segments' dict files (storage.SegmentFiles: pyarrow, pruned by row-group
   min/max), so planning starts no job; field stats come from the manifest;
-- the hits rank by (score desc, doc_id asc) in one TakeOrderedAndProject
-  (top_doc_ids), and the driver reads the k hits' ids from the docs files.
-Any other snapshot, ``search_after`` and the other reads join the
-(doc_id, id) map before ranking (top_k). Regex, fuzzy and JSON-range heads
-need Java regex or the JVM ``levenshtein`` prefilter, so each stays ONE
-shuffle-free Spark job: raw per-segment rows collected and deduplicated on
-the driver. Every literal list (a term IN list, a term → df or weight map)
-is ONE SQL expression, so one JVM call, not several per literal.
+- the scan reads each table once over every live segment, deletes applied
+  as one filter (storage.Snapshot.context);
+- the hits rank by (score desc, run rank, doc_id asc) in one
+  TakeOrderedAndProject (top_doc_ids), and the driver reads the k hits'
+  ids from the docs files.
+A snapshot whose id ranges overlap (an upsert re-adding an id, interleaved
+ids), ``search_after`` and the other reads (search_df, rescore,
+search_many) join the (doc_id, id) map before ranking (top_k). Regex,
+fuzzy and JSON-range heads need Java regex or the JVM ``levenshtein``
+prefilter, so each stays ONE shuffle-free Spark job: raw per-segment rows
+collected and deduplicated on the driver. Every literal list (a term IN
+list, a term → df or weight map) is ONE SQL expression, so one JVM call,
+not several per literal.
 Fuzzy expansion usually needs no Python worker: a JVM Levenshtein
 prefilter bounds the candidates and the exact OSA test runs on the driver
 over the collected head; the OSA pandas UDF runs only when the candidates
@@ -111,9 +117,9 @@ def _by_term(values: dict) -> Column:
 
 @dataclass
 class SearchContext:
-    """The live snapshot a query runs against: unioned segment tables with
-    tombstones already applied (see storage.Snapshot.context). Nothing in
-    it is cached by Spark."""
+    """The live snapshot a query runs against: each table read once over
+    every live segment, deletes already applied (see
+    storage.Snapshot.context). Nothing in it is cached by Spark."""
 
     docs: DataFrame
     postings: DataFrame
@@ -130,9 +136,10 @@ class SearchContext:
     segments: int
     # a live segment whose manifest entry predates BM25 totals
     untallied: str | None = None
-    # doc_id order is id order over the live docs (storage.id_ordered), so
-    # (score desc, doc_id asc) ranks as (score desc, id asc) (top_doc_ids)
-    id_ordered: bool = False
+    # the live docs' id runs in doc id order when their id ranges are
+    # disjoint (storage.rank_runs), else None: then (score desc, run rank,
+    # doc_id asc) ranks as (score desc, id asc) (top_doc_ids)
+    id_runs: list | None = None
 
     def __post_init__(self):
         # memoized doc-freq lookups: the rest of the "Weight" phase. One
@@ -475,16 +482,20 @@ def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
     n, avgdl = ctx.field_stats(node.field)
     dfs = ctx.term_dfs(node.field, sorted(set(terms)))
+    # per-query doubles (a df, the summed idf) enter through a map keyed by
+    # the first term's ``term`` column, kept for it: an inlined double
+    # literal would compile a new class per query (see _term_or)
     if len(terms) == 1:
         # single-term phrase behaves as a term query with true tf
         p = ctx.postings.where(
             (F.col("field") == node.field) & (F.col("term") == terms[0])
-        ).select("doc_id", "tf", "norm_id")
+        ).select("doc_id", "term", "tf", "norm_id")
         return p.select(
             "doc_id",
             _bm25_expr(
                 F.col("tf").cast("double"), _decode_norm(F.col("norm_id")),
-                F.lit(float(avgdl)), F.lit(float(dfs[terms[0]])), F.lit(float(n)),
+                F.lit(float(avgdl)), _by_term({terms[0]: dfs[terms[0]]}),
+                F.lit(float(n)),
             ).alias("score"),
         )
 
@@ -499,7 +510,7 @@ def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
             .select(
                 "doc_id",
                 F.transform(F.col("positions"), lambda x: x - F.lit(shift)).alias(f"pos_{i}"),
-                *( [F.col("norm_id")] if i == 0 else [] ),
+                *(["term", "norm_id"] if i == 0 else []),
             )
         )
         parts.append(part)
@@ -508,7 +519,7 @@ def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
         joined = joined.join(parts[i], "doc_id")
     if slop:
         joined = joined.select(
-            "doc_id", "norm_id",
+            "doc_id", "term", "norm_id",
             _slop_phrase_tf(len(terms), slop).alias("phrase_tf"),
         ).where(F.col("phrase_tf") > 0)
     else:
@@ -516,7 +527,7 @@ def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
         for i in range(1, len(terms)):
             inter = F.array_intersect(inter, F.col(f"pos_{i}"))
         joined = joined.select(
-            "doc_id", "norm_id", F.size(inter).alias("phrase_tf")
+            "doc_id", "term", "norm_id", F.size(inter).alias("phrase_tf")
         ).where(F.col("phrase_tf") > 0)
 
     # summed idf over ALL phrase terms INCLUDING repeats (Tantivy's
@@ -528,7 +539,8 @@ def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
     )
     return joined.select(
         "doc_id",
-        (F.lit(idf_sum) * (scoring.K1 + 1.0) * tf / (tf + norm)).alias("score"),
+        (_by_term({terms[0]: idf_sum}) * (scoring.K1 + 1.0) * tf / (tf + norm))
+        .alias("score"),
     )
 
 
@@ -881,23 +893,40 @@ def _osa_prefix(a: str, b: str) -> int:
 
 def _facet(node: P.Facet, ctx: SearchContext) -> DataFrame:
     """Facet = term query on the facet field's ancestor postings with
-    tf=1, dl=avgdl=1 ⇒ score = idf(df, N) (SURVEY.md §2.5 note on Basic)."""
+    tf=1, dl=avgdl=1 ⇒ score = idf(df, N) (SURVEY.md §2.5 note on Basic),
+    a map literal keyed by ``term`` (no new class per idf, see _term_or)."""
     n, _ = ctx.field_stats(node.field)
     df = ctx.term_dfs(node.field, [node.path])[node.path]
     p = ctx.postings.where(
         (F.col("field") == node.field) & (F.col("term") == node.path)
-    ).select("doc_id")
-    return p.select("doc_id", F.lit(scoring.idf(df, n)).alias("score"))
+    )
+    return p.select(
+        "doc_id", _by_term({node.path: scoring.idf(df, n)}).alias("score")
+    )
 
 
-def top_doc_ids(result: DataFrame, limit: int = 10, offset: int = 0) -> DataFrame:
-    """top_k on an id-ordered snapshot (SearchContext.id_ordered): there
-    (score desc, doc_id asc) is (score desc, id asc), so the hits rank
-    without the (doc_id, id) join, in ONE TakeOrderedAndProject job over
-    the scored rows, like Tantivy's TopDocs ranks DocAddresses. The caller
-    reads the ``limit`` ids on the driver (SegmentFiles.ids).
-    Returns DataFrame[doc_id, score]."""
-    out = result.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+def top_doc_ids(
+    result: DataFrame, runs: list, limit: int = 10, offset: int = 0
+) -> DataFrame:
+    """top_k on a snapshot with id runs (SearchContext.id_runs): there
+    (score desc, rank of the doc's run by id, doc_id asc) is (score desc,
+    id asc), so the hits rank without the (doc_id, id) join, in ONE
+    TakeOrderedAndProject job over the scored rows, like Tantivy's TopDocs
+    ranks DocAddresses. The run rank is a CASE over the runs' doc ranges,
+    left out when the runs' doc order is their id order (one run, or ids
+    appended in order). The caller reads the ``limit`` ids on the driver
+    (SegmentFiles.ids). Returns DataFrame[doc_id, score]."""
+    by_id = sorted(range(len(runs)), key=lambda k: runs[k][2])
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    if by_id != sorted(by_id):
+        rank = {k: r for r, k in enumerate(by_id)}
+        cases = " ".join(
+            f"WHEN doc_id <= {runs[k][1]} THEN {rank[k]}"
+            for k in range(len(runs) - 1)
+        )
+        last = rank[len(runs) - 1]
+        order.insert(1, F.expr(f"CASE {cases} ELSE {last} END"))
+    out = result.orderBy(*order)
     if offset:
         out = out.offset(offset)
     return out.limit(limit).select("doc_id", "score")

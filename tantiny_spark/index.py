@@ -411,28 +411,31 @@ class Index:
         rows, touched = self._replay_ops()
         if not touched:
             return
-        # every touched id is tombstoned in older segments; survivors are
-        # re-indexed in the new segment
+        # every touched id is deleted from the older segments; survivors
+        # are re-indexed in the new segment
         self._commit_segment(self._rows_to_df(rows), touched)
 
     def _commit_segment(
         self, df: DataFrame | None, deletes: list | DataFrame | None
     ) -> int:
         """One segment commit. ``deletes`` may be an id list (the bounded
-        transaction/delete_by_query path, inlined in the manifest) or a
-        DataFrame (the streaming upsert path — persisted as a parquet
-        tombstone side-table so a 100 TB ``availableNow`` batch never
-        materializes its ids on the driver or in the manifest JSON).
+        transaction/delete_by_query path) or a DataFrame (the streaming
+        upsert path, so a 100 TB ``availableNow`` batch never materializes
+        its ids on the driver or in the manifest JSON); either is resolved
+        here, once, to the doc ids it hits (storage.resolve_deletes), so no
+        query re-resolves it.
 
         The whole manifest read-modify-write runs under the writer lock
         (no-op when the caller already holds it via transaction() /
         exclusive_writer) — without it a concurrent merge or writer could
         commit between our read and our commit and be silently dropped."""
         with self._writer_lock():
-            manifest = self.storage.read_manifest(self.storage.current_version())
+            version = self.storage.current_version()
+            manifest = self.storage.read_manifest(version)
             base = int(manifest.get("next_doc_id", 0))
             segments = list(manifest["segments"])
             next_doc_id = base
+            entry = None
             if df is not None:
                 import shutil
                 import uuid as uuid_mod
@@ -447,18 +450,20 @@ class Index:
                     )
                     n = tables["n_docs"]
                     if n > 0:
-                        entry = self.storage.write_segment(
-                            tables, tombstones=deletes
-                        )
-                        segments.append(entry)
+                        entry = self.storage.write_segment(tables)
                         next_doc_id = base + n
-                    elif isinstance(deletes, DataFrame) or deletes:
-                        segments.append(self._pure_delete_entry(deletes))
                 finally:
                     shutil.rmtree(staging, ignore_errors=True)
-            elif isinstance(deletes, DataFrame) or deletes:
-                # pure-delete commit: tombstones on an empty segment entry
-                segments.append(self._pure_delete_entry(deletes))
+            if isinstance(deletes, DataFrame) or deletes:
+                # resolved against the live docs this commit stacks on; an
+                # entry without a segment is a pure-delete commit
+                older = Snapshot(self.spark, self.storage, version).context()
+                entry = {
+                    **(entry or {"name": None}),
+                    **self.storage.resolve_deletes(older.docs, deletes),
+                }
+            if entry:
+                segments.append(entry)
             version = self.storage.commit(
                 {
                     "segments": segments,
@@ -468,23 +473,17 @@ class Index:
             )
             return version
 
-    def _pure_delete_entry(self, deletes: list | DataFrame) -> dict:
-        if isinstance(deletes, DataFrame):
-            return {
-                "name": None, "tombstones": [],
-                "tombstone_table": self.storage.write_tombstone_table(deletes),
-            }
-        return {"name": None, "tombstones": sorted(deletes)}
-
     # --- segment merge / compaction ------------------------------------------
     def merge_segments(self) -> int:
-        """Compact all live segments into one: tombstones are physically
+        """Compact all live segments into one: deletes are physically
         applied, dict and BM25 totals rebuilt from the surviving docs and
         postings — the background-merge analog of Tantivy's segment merging
         (surfaced via commit/reload, src/index.rs:229-242). After a merge,
         deleted docs no longer affect BM25 stats, and queries stop paying
-        the per-segment tombstone anti-joins. It also rewrites a segment
-        whose manifest entry predates BM25 totals."""
+        the delete filter. Doc ids are kept, so the merged entry keeps the
+        snapshot's id runs (storage.rank_runs: none when their id ranges
+        overlap). It also rewrites a segment whose manifest entry predates
+        BM25 totals or whose deletes are still keyed by id."""
         # a merge rewrites the whole manifest, so it is a WRITE: take the
         # writer lock (like transaction()) — a merge racing another writer
         # would silently drop that writer's commit from the new manifest
@@ -501,16 +500,16 @@ class Index:
         ).context()
         # exact per-field totals recounted from the stored per-doc lengths,
         # so no segment's old totals are needed; doc ids are kept, so the
-        # merged entry is id-ordered iff the merged snapshot was
+        # merged entry keeps the merged snapshot's id runs (none when their
+        # id ranges overlap)
         tables = {
             "docs": ctx.docs, "postings": ctx.postings,
             "stats": lambda: {
-                **bm25_totals(self.schema, ctx.docs),
-                "id_ordered": ctx.id_ordered,
+                **bm25_totals(self.schema, ctx.docs), "id_runs": ctx.id_runs,
             },
         }
         manifest = self.storage.read_manifest(self.storage.current_version())
-        entry = self.storage.write_segment(tables, tombstones=[])
+        entry = self.storage.write_segment(tables)
         version = self.storage.commit(
             {
                 "segments": [entry],
@@ -704,12 +703,12 @@ class Index:
         search_after: tuple | None = None, **smart_opts,
     ) -> list:
         """search() with each hit's score: ``[(id, score), ...]``, the rows
-        of search_df. On an id-ordered snapshot (SearchContext.id_ordered)
-        without a cursor, the hits rank by doc id in ONE Spark job
-        (executor.top_doc_ids) and the driver then reads their ids from
+        of search_df. On a snapshot with id runs (SearchContext.id_runs)
+        and without a cursor, the hits rank by (run, doc id) in ONE Spark
+        job (executor.top_doc_ids) and the driver then reads their ids from
         the docs files, as Tantivy's TopDocs ranks DocAddresses and reads
         the k stored ids; otherwise search_df's join-then-rank runs."""
-        if search_after is not None or not self.ctx.id_ordered:
+        if search_after is not None or self.ctx.id_runs is None:
             rows = self.search_df(
                 query, limit, offset, search_after, **smart_opts
             ).collect()
@@ -720,7 +719,8 @@ class Index:
             lambda: ("__doc_ids__", query, tuple(sorted(smart_opts.items())),
                      limit, offset),
             lambda: top_doc_ids(
-                self._compile(query, smart_opts), limit, offset
+                self._compile(query, smart_opts), self.ctx.id_runs, limit,
+                offset,
             ),
         ).collect()
         ids = self.ctx.files.ids([r["doc_id"] for r in rows])

@@ -110,7 +110,7 @@ def resumable_build(
             import shutil
 
             shutil.rmtree(staging, ignore_errors=True)
-        stored = storage.load_segment(spark, entry, schema)
+        stored = storage.read_tables(spark, [entry["name"]], schema)
         metrics = _lineage_checksums(stored["docs"], stored["postings"])
         record = {
             "shard": k,

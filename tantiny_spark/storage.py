@@ -4,15 +4,16 @@ The Spark-native analog of Tantivy's segment directory + meta.json
 (/root/reference/src/index.rs:35-121, commit at :229-236, reload at :238-242):
 
 - each commit writes one immutable *segment* directory holding the three
-  index tables (docs/postings/dict) as Parquet, plus an optional tombstone
-  list of deleted doc ``id``s applying to all OLDER segments;
+  index tables (docs/postings/dict) as Parquet;
 - a JSON *manifest* lists the live segments of a version, each entry with
   its BM25 totals ``"num_docs": n, "tokens": {field: total_tokens}`` (what
-  Tantivy keeps in segment metadata), summed by readers on the driver, and
-  its ``"id_range": [min id, max id]`` with ``"id_ordered"``: whether its
-  ``doc_id`` order is its ``id`` order (a build stamps ``doc_id = base +
-  rank(id)``; a merge keeps doc ids, so a merged entry is id-ordered only
-  if the snapshot it merged was);
+  Tantivy keeps in segment metadata), summed by readers on the driver, its
+  ``"id_runs"`` (``rank_runs``) and the doc ids its commit deleted;
+- deletes are resolved to ``doc_id``s at commit (``resolve_deletes``), as
+  Tantivy fixes a delete bitset at commit (src/index.rs:182-185): a doc id
+  is unique across a snapshot (``next_doc_id`` only grows, a merge keeps
+  doc ids), so a snapshot reads each table ONCE over every live segment
+  and applies every delete as one filter (``Snapshot.context``);
 - every table is zstd Parquet with v2 pages (``WRITE_OPTIONS``): ``doc_id``
   in docs and postings is DELTA_BINARY_PACKED (the d-gaps of a posting
   list, coded by Parquet itself), ``docs.id`` and ``dict.term`` fall back
@@ -25,7 +26,7 @@ The Spark-native analog of Tantivy's segment directory + meta.json
   a term's df, a prefix's first terms and the hits' ids straight from the
   files with pyarrow (``SegmentFiles``), pruned by those statistics, with
   no Spark job and no cached relation;
-- every table is read with its fixed schema (``load_segment``), so loading
+- every table is read with its fixed schema (``read_tables``), so loading
   a snapshot starts no schema-inference job;
 - ``HEAD`` names the current manifest and is swapped atomically
   (write-tmp + os.replace), giving reader snapshot isolation: an open
@@ -50,15 +51,15 @@ import uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from tantiny_spark.build import POSTINGS_SCHEMA, docs_schema
-from tantiny_spark.executor import SearchContext
+from tantiny_spark.executor import SearchContext, _sql_str
 from tantiny_spark.schema import IndexSchema
 
 TABLES = ("docs", "postings", "dict")
 DICT_SCHEMA = "field string, term string, df long"
-TOMBSTONE_SCHEMA = "id string"
+TOMBSTONE_SCHEMA = "id string, doc_id long"
 
 #: Parquet writer options of every segment and tombstone table (encodings
 #: in the module docstring), passed per write so the session conf is
@@ -97,6 +98,12 @@ def _parquet_files(table_dir: str) -> list:
         os.path.join(table_dir, n) for n in names
         if n.endswith(".parquet") and not n.startswith((".", "_"))
     ]
+
+
+def _id_in(ids) -> Column:
+    """``id IN (...)`` over literal ids, built in one JVM call (like
+    executor._term_in) and pushed down to the docs scan."""
+    return F.expr(f"id IN ({', '.join(map(_sql_str, sorted(ids)))})")
 
 
 def _any_within(values: list, lo, hi) -> bool:
@@ -221,23 +228,36 @@ class SegmentFiles:
         return out
 
 
-def id_ordered(entries: list) -> bool:
-    """Whether ``doc_id`` order is ``id`` order over the live entries: each
-    entry is id-ordered and its smallest id sorts after the previous
-    entry's largest. An entry without these fields (written by an older
-    version) is not id-ordered. Tombstones keep the order: deleting docs
-    removes both orders' rows alike."""
-    last = None
+def rank_runs(entries: list) -> list | None:
+    """The live entries' ``"id_runs": [[doc_lo, doc_hi, id_lo, id_hi],
+    ...]``, doc id ranges whose ``doc_id`` order is their ``id`` order, in
+    doc id order, when their id ranges are pairwise disjoint (else None):
+    then ``id`` order is (run rank by id, ``doc_id``) order and hits rank
+    without the (doc_id, id) join (executor.top_doc_ids). A run that
+    follows the previous one in both orders is folded into it. A build
+    writes one run (``doc_id = base + rank(id)``), a merge these runs (it
+    keeps doc ids). An entry without runs (a null id, an older version)
+    or overlapping ranges (an upsert re-adding an id, interleaved ids)
+    leave none; deletes remove both orders' rows alike."""
+    runs: list = []
     for e in entries:
         if not e.get("name"):  # pure-delete commit
             continue
-        if not e.get("id_ordered") or not e.get("id_range"):
-            return False
-        low, high = e["id_range"]
-        if last is not None and low <= last:
-            return False
-        last = high
-    return True
+        if not e.get("id_runs"):
+            return None
+        runs.extend(e["id_runs"])
+    by_id = sorted(runs, key=lambda r: r[2])
+    if any(a[3] >= b[2] for a, b in zip(by_id, by_id[1:])):
+        return None
+    succ = {tuple(a): b for a, b in zip(by_id, by_id[1:])}
+    out: list = []
+    for r in sorted(runs):
+        if out and succ.get(tuple(prev)) == r:
+            out[-1] = [out[-1][0], r[1], out[-1][2], r[3]]
+        else:
+            out.append(list(r))
+        prev = r
+    return out
 
 
 class IndexStorage:
@@ -278,22 +298,37 @@ class IndexStorage:
         os.replace(htmp, self._head_path())
         return version
 
-    # --- tombstone side-tables ------------------------------------------------
-    def write_tombstone_table(self, ids_df) -> str:
-        """Persist a (possibly huge) delete set as a parquet side-table and
-        return its name. The manifest then references the table by name
-        instead of inlining the ids — a 100 TB ``availableNow`` backfill
-        batch can tombstone billions of ids without the manifest JSON (or
-        the driver's Python heap) ever materializing them; the read path
-        (Snapshot.context) anti-joins the table exactly like the inline
-        list it replaces."""
-        name = f"ts-{uuid.uuid4().hex[:12]}"
-        write_table(
-            ids_df.select(F.col(ids_df.columns[0]).cast("string").alias("id"))
-            .distinct(),
-            os.path.join(self.path, "tombstones", name),
-        )
-        return name
+    # --- deletes -------------------------------------------------------------
+    def resolve_deletes(self, docs: DataFrame, deletes) -> dict:
+        """A commit's deleted ids as manifest-entry fields, keyed by the
+        ``doc_id``s they hit among ``docs``, the live docs of the segments
+        the commit stacks on: one job per commit instead of a semi-join in
+        every query. An id list (a transaction, delete_by_query: bounded)
+        becomes an inline ``"tombstones"`` doc id list, read by one ``id
+        IN (...)`` scan of the docs. A DataFrame (a streaming batch,
+        possibly huge) is written as a Parquet ``"tombstone_table"`` of
+        each id with the doc id it hit (null when none), so its ids reach
+        neither the driver nor the manifest JSON."""
+        if isinstance(deletes, DataFrame):
+            ids = deletes.select(
+                F.col(deletes.columns[0]).cast("string").alias("id")
+            ).distinct()
+            name = f"ts-{uuid.uuid4().hex[:12]}"
+            write_table(
+                ids.join(docs.select("id", "doc_id"), "id", "left"),
+                os.path.join(self.path, "tombstones", name),
+            )
+            return {"tombstones": [], "tombstone_table": name}
+        if not deletes:
+            return {"tombstones": []}
+        hit = docs.where(_id_in(deletes)).select("doc_id")
+        return {"tombstones": sorted(r[0] for r in hit.collect())}
+
+    def holds_doc_ids(self, table: str) -> bool:
+        """Whether a tombstone table was resolved at commit: its footer
+        (read on the driver, no job) names a ``doc_id`` column."""
+        files = _parquet_files(os.path.join(self.path, "tombstones", table))
+        return bool(files) and "doc_id" in pq.read_schema(files[0]).names
 
     def read_tombstone_table(self, spark: SparkSession, name: str):
         return spark.read.schema(TOMBSTONE_SCHEMA).parquet(
@@ -301,9 +336,7 @@ class IndexStorage:
         )
 
     # --- segment IO ---------------------------------------------------------
-    def write_segment(
-        self, tables: dict, tombstones=None, name: str | None = None
-    ) -> dict:
+    def write_segment(self, tables: dict, name: str | None = None) -> dict:
         """Persist one segment's tables; returns its manifest entry. Does NOT
         commit — a crash here leaves an unreferenced directory, never a
         corrupt index (the resumability contract).
@@ -311,7 +344,7 @@ class IndexStorage:
         ``tables`` holds the ``docs`` and ``postings`` DataFrames and
         ``stats``, a 0-arg callable returning what else goes into the
         entry: the BM25 totals (``{"num_docs": n, "tokens": {field:
-        total_tokens}}``), ``id_range`` and ``id_ordered``.
+        total_tokens}}``) and ``id_runs``.
         The two writes and that aggregation are independent reads of the
         same input, so they are submitted from a small thread pool: the
         later jobs' tasks back-fill executors idling in the earlier jobs'
@@ -342,28 +375,23 @@ class IndexStorage:
             dict_table(stored).orderBy("field", "term"),
             os.path.join(seg_dir, "dict"),
         )
-        if isinstance(tombstones, DataFrame):
-            entry = {
-                "name": name, "tombstones": [],
-                "tombstone_table": self.write_tombstone_table(tombstones),
-            }
-        else:
-            entry = {"name": name, "tombstones": sorted(tombstones or [])}
-        return {**entry, **totals}
+        return {"name": name, **totals}
 
-    def load_segment(
-        self, spark: SparkSession, entry: dict, schema: IndexSchema
+    def read_tables(
+        self, spark: SparkSession, names: list, schema: IndexSchema
     ) -> dict:
-        """The segment's tables, read with their fixed schemas: no Spark job
-        infers one from the files. A docs column the schema does not name
-        (an older segment's ``<facet>__ancestors``) is not read."""
-        seg_dir = os.path.join(self.path, "segments", entry["name"])
-        schemas = {
-            "docs": docs_schema(schema), "postings": POSTINGS_SCHEMA,
-            "dict": DICT_SCHEMA,
+        """The named segments' docs, postings and dict, each read ONCE over
+        every segment directory with its fixed schema: no Spark job infers
+        one from the files. A docs column the schema does not name (an
+        older segment's ``<facet>__ancestors``) is not read."""
+        schemas = {  # an empty index's manifest holds no schema yet
+            "docs": docs_schema(schema) if schema else "doc_id long, id string",
+            "postings": POSTINGS_SCHEMA, "dict": DICT_SCHEMA,
         }
         return {
-            t: spark.read.schema(schemas[t]).parquet(os.path.join(seg_dir, t))
+            t: spark.read.schema(schemas[t]).parquet(*(
+                os.path.join(self.path, "segments", n, t) for n in names
+            ))
             for t in TABLES
         }
 
@@ -387,107 +415,76 @@ class Snapshot:
         return int(self.manifest.get("next_doc_id", 0))
 
     def context(self) -> SearchContext:
-        """Union the live segments, applying each segment's tombstones to all
-        segments that precede it (delete-then-add upsert semantics,
-        src/index.rs:182-185)."""
+        """Every table read once over the live segments, with every entry's
+        deletes applied as one filter: the inline doc ids as a ``doc_id NOT
+        IN (...)`` literal (no job), the tombstone tables' doc ids as one
+        anti-join. An entry written before deletes were resolved at commit
+        holds ids (strings, or a table without ``doc_id``): they hit the
+        docs of the segments before it, a semi-join added to the anti-join
+        until a merge drops the entry."""
         entries = self.manifest["segments"]
-        schema = self.schema
-        loaded = [
-            self.storage.load_segment(self.spark, e, schema)
-            if e.get("name") else None
-            for e in entries
-        ]
-        # ids deleted by any LATER segment apply to this one
-        docs_parts, post_parts, dict_parts = [], [], []
+        names = [e["name"] for e in entries if e.get("name")]
+        tables = self.storage.read_tables(self.spark, names, self.schema)
+        docs, postings = tables["docs"], tables["postings"]
+        dead: list = []  # inline doc ids
+        frames: list = []  # DataFrame[doc_id]
+        older = 0  # live segments before the entry
+        for e in entries:
+            ids, table = e.get("tombstones") or [], e.get("tombstone_table")
+            if table and self.storage.holds_doc_ids(table):
+                frames.append(
+                    self.storage.read_tombstone_table(self.spark, table)
+                    .select("doc_id")
+                )
+            elif table or (ids and isinstance(ids[0], str)):  # keyed by id
+                before = self.storage.read_tables(
+                    self.spark, names[:older], self.schema
+                )["docs"]
+                hit = before.join(
+                    self.storage.read_tombstone_table(self.spark, table)
+                    .select("id"), "id", "left_semi",
+                ) if table else before.where(_id_in(ids))
+                frames.append(hit.select("doc_id"))
+            else:
+                dead.extend(ids)
+            older += bool(e.get("name"))
+        if dead:
+            listed = ", ".join(map(str, sorted(set(dead))))
+            keep = F.expr(f"doc_id NOT IN ({listed})")
+            docs, postings = docs.where(keep), postings.where(keep)
+        if frames:
+            gone = frames[0]
+            for f in frames[1:]:
+                gone = gone.unionByName(f)
+            docs = docs.join(gone, "doc_id", "left_anti")
+            postings = postings.join(gone, "doc_id", "left_anti")
+
         totals: dict = {}  # field -> (num_docs, total_tokens)
         untallied = None
-        for i, (entry, seg) in enumerate(zip(entries, loaded)):
-            if seg is None:  # pure-delete commit: tombstones only
+        for e in entries:
+            if not e.get("name"):
                 continue
-            dead: set = set()
-            dead_tables: list = []
-            for later in entries[i + 1 :]:
-                dead.update(later.get("tombstones", []))
-                if later.get("tombstone_table"):
-                    dead_tables.append(later["tombstone_table"])
-            docs, postings = seg["docs"], seg["postings"]
-            if dead or dead_tables:
-                import pandas as pd
-
-                parts = []
-                if dead:
-                    parts.append(
-                        self.spark.createDataFrame(
-                            pd.DataFrame({"id": sorted(dead)}),
-                            schema=TOMBSTONE_SCHEMA,
-                        )
-                    )
-                parts.extend(
-                    self.storage.read_tombstone_table(self.spark, t)
-                    for t in dead_tables
-                )
-                dead_df = parts[0]
-                for p in parts[1:]:
-                    dead_df = dead_df.unionByName(p)
-                # resolve tombstoned ids to this segment's doc_ids ONCE: the
-                # dead set (bounded by deletes since the last merge) sits on
-                # the build side — broadcasting the live docs would ship
-                # nearly the whole segment. Inline lists (delete_by_query's
-                # max_deletes-bounded path) are always broadcastable; a
-                # parquet tombstone table from a giant streaming upsert
-                # batch may not be, so there AQE picks the strategy from
-                # the table's actual size instead of a forced hint.
-                if not dead_tables:
-                    dead_df = F.broadcast(dead_df)
-                seg_dead_docs = (
-                    seg["docs"].join(dead_df, "id", "left_semi").select("doc_id")
-                )
-                docs = docs.join(dead_df, "id", "left_anti")
-                if not dead_tables:
-                    seg_dead_docs = F.broadcast(seg_dead_docs)
-                postings = postings.join(seg_dead_docs, "doc_id", "left_anti")
-            docs_parts.append(docs)
-            post_parts.append(postings)
-            dict_parts.append(seg["dict"])
-            if "tokens" not in entry:
-                untallied = untallied or entry["name"]
-            for f, tot in entry.get("tokens", {}).items():
+            if "tokens" not in e:
+                untallied = untallied or e["name"]
+            for f, tot in e.get("tokens", {}).items():
                 n0, tot0 = totals.get(f, (0, 0))
-                totals[f] = (n0 + entry["num_docs"], tot0 + tot)
+                totals[f] = (n0 + e["num_docs"], tot0 + tot)
 
-        def union_all(parts):
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        seg_dirs = [
-            os.path.join(self.storage.path, "segments", e["name"])
-            for e in entries if e.get("name")
-        ]
-        if not docs_parts:
-            return SearchContext(
-                docs=self.spark.createDataFrame([], "doc_id long, id string"),
-                postings=self.spark.createDataFrame([], POSTINGS_SCHEMA),
-                dictionary=self.spark.createDataFrame([], DICT_SCHEMA),
-                files=SegmentFiles(seg_dirs),
-                totals={},
-                segments=0,
-            )
-
-        # NOTE: dict df / BM25 totals still include tombstoned docs until the
+        # NOTE: dict df / BM25 totals still include deleted docs until the
         # next merge/compaction — the same freshness tradeoff Tantivy makes
         # (deleted docs affect BM25 stats until segments merge).
         # Nothing is cached: the driver reads dfs, prefix heads and the hits'
         # ids from the files (SegmentFiles), and every scan reads Parquet
         # with its pushdown.
         return SearchContext(
-            docs=union_all(docs_parts),
-            postings=union_all(post_parts),
-            dictionary=union_all(dict_parts),
-            files=SegmentFiles(seg_dirs),
+            docs=docs,
+            postings=postings,
+            dictionary=tables["dict"],
+            files=SegmentFiles([
+                os.path.join(self.storage.path, "segments", n) for n in names
+            ]),
             totals=totals,
-            segments=len(dict_parts),
+            segments=len(names),
             untallied=untallied,
-            id_ordered=id_ordered(entries),
+            id_runs=rank_runs(entries),
         )
