@@ -17,14 +17,16 @@ totals:
 - BM25 totals  ``{"num_docs": n, "tokens": {field: total_tokens}}`` — a few
                 numbers the storage layer keeps in the segment's manifest
                 entry, not in a table (Tantivy's segment metadata), with
-                the segment's id range and that its doc_id order is its
-                id order
+                the segment's one ``id_runs`` run: its doc-id range, over
+                which doc_id order is id order, and its id range
 
 Scale notes (the 100 TB story):
 - doc_id assignment is a deterministic global rank of ``id`` computed with
   repartitionByRange + per-partition offsets — never
   monotonically_increasing_id (which is partition-layout-dependent and would
-  break resume + rank identity).
+  break resume + rank identity). The analyzer runs on the same partitions,
+  one doc-id range each, so ``docs`` is written in doc-id ranges and its
+  row groups' doc_id min/max prune id lookups.
 - the tf/positions aggregation keys on (field, term, doc_id) — high
   cardinality, so Zipfian head terms do NOT concentrate on one reducer; the
   dictionary count uses map-side partial aggregation.
@@ -35,7 +37,6 @@ Scale notes (the 100 TB story):
 from __future__ import annotations
 
 import os
-import re
 from typing import Optional
 
 import pandas as pd
@@ -91,106 +92,41 @@ def bm25_totals(
     return out
 
 
-_ROW_PICKING_NODE = re.compile(
-    r"^[\s:|+-]*(?:GlobalLimit|LocalLimit|Offset|Tail|Sample)\b", re.M
-)
-
-
-def _reads_alike_twice(df: DataFrame) -> bool:
-    """Whether two evaluations of ``df`` yield the same rows, as far as its
-    plan shows: no nondeterministic expression (uuid(), a nondeterministic
-    UDF, ...) and no limit/offset/tail/sample, which pick whichever rows
-    arrive first from an unordered input. Conservative: a False only
-    costs the broadcast fast path."""
-    plan = df._jdf.queryExecution().analyzed()
-    return plan.deterministic() and not _ROW_PICKING_NODE.search(plan.toString())
-
-
 def assign_doc_ids(
     df: DataFrame, order_col: str = "id", doc_id_base: int = 0,
     num_partitions: Optional[int] = None, cleanup: Optional[list] = None,
-    info: Optional[dict] = None,
 ) -> DataFrame:
     """Deterministic, parallelism-invariant doc_id = doc_id_base + global rank
-    of ``order_col``.
+    of ``order_col``; duplicate keys get distinct consecutive ids.
 
     Two-pass pattern that scales to arbitrarily many partitions: range-
-    repartition + sort by the key, count rows per partition (small driver
-    collect: one long per partition), then stamp ids inside mapInPandas with
-    the per-partition offset. The global order — hence every doc_id — depends
-    only on the key ordering, not on partition boundaries, so local[8] and
-    local[32] (or 1000 executors) produce identical ids.
+    repartition + sort by the key into a cache (the input's only read),
+    count rows per partition (small driver collect: one long per
+    partition), then stamp ids inside mapInPandas with the per-partition
+    offset. The global order — hence every doc_id — depends only on the key
+    ordering, not on partition boundaries, so local[8] and local[32] (or
+    1000 executors) produce identical ids, and output partition p holds
+    the p-th doc-id range. One partition starts no range-sampling job.
     """
     spark = df.sparkSession
     if num_partitions is None:
-        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    if num_partitions == 1:
-        # small-input fast path (guide-§8 shape: decide with small rows,
-        # never move the big rows): the global rank depends ONLY on the key
-        # column, so collect just the pruned keys (bounded by the caller's
-        # ≤DOCS_PER_PARTITION gate — ~a few MB), rank them on the driver,
-        # and re-attach doc_id with a broadcast join. The full rows are
-        # never shuffled at all — the earlier funnel variants moved every
-        # row (including the large text payload) through a single sort
-        # task (coalesce(1): 3.4-4.3 s; repartition(1): 0.9-1.1 s at 50k
-        # docs / local[32]; this path: the pruned key scan + a broadcast
-        # hash join inside the consumer's own pass).
-        # Python str sort == Spark string asc sort (both are code-point
-        # lexicographic; UTF-8 binary order preserves code-point order).
-        # the join below reads the input a second time, so the path needs
-        # an input that reads the same rows twice
-        keys = (
-            [r[0] for r in df.select(order_col).collect()]
-            if _reads_alike_twice(df) else None
-        )
-        if keys and all(k is not None for k in keys) and len(set(keys)) == len(keys):
-            if info is not None:
-                info["path"] = "broadcast"  # source partitioning preserved
-            ranked = pd.DataFrame(
-                {order_col: sorted(keys)}
-            )
-            ranked.insert(
-                0, "doc_id",
-                range(doc_id_base, doc_id_base + len(ranked)),
-            )
-            rank_df = spark.createDataFrame(
-                ranked,
-                schema=T.StructType(
-                    [
-                        T.StructField("doc_id", T.LongType(), False),
-                        df.schema[order_col],
-                    ]
-                ),
-            )
-            return df.join(F.broadcast(rank_df), order_col).select(
-                "doc_id", *df.columns
-            )
-        # duplicate or null keys: rank-by-key is ambiguous per row — take
-        # the positional funnel (identical to the historical behavior:
-        # duplicates get distinct consecutive ids in sorted order); it reads
-        # the input once, so it also serves inputs that may not read alike
-        # twice
-        if info is not None:
-            info["path"] = "funnel"  # output lands on a single partition
-        arranged = df.repartition(1).sortWithinPartitions(order_col)
-        offsets = {0: doc_id_base}
-    else:
-        arranged = df.repartitionByRange(
-            num_partitions, F.col(order_col)
-        ).sortWithinPartitions(order_col)
-        arranged = arranged.cache()
-        if cleanup is not None:
-            # caller unpersists once the stamped output has been fully
-            # consumed (long-running writers must not accumulate caches)
-            cleanup.append(arranged)
-        counts = (
-            arranged.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-        )
-        offsets = {}
-        acc = doc_id_base
-        for row in sorted(counts, key=lambda r: r["pid"]):
-            offsets[row["pid"]] = acc
-            acc += row["count"]
+        num_partitions = spark.sparkContext.defaultParallelism
+    arranged = df.repartitionByRange(
+        num_partitions, F.col(order_col)
+    ).sortWithinPartitions(order_col)
+    arranged = arranged.cache()
+    if cleanup is not None:
+        # caller unpersists once the stamped output has been fully
+        # consumed (long-running writers must not accumulate caches)
+        cleanup.append(arranged)
+    counts = (
+        arranged.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    )
+    offsets = {}
+    acc = doc_id_base
+    for row in sorted(counts, key=lambda r: r["pid"]):
+        offsets[row["pid"]] = acc
+        acc += row["count"]
     offsets_b = spark.sparkContext.broadcast(offsets)
 
     out_schema = T.StructType(
@@ -220,9 +156,9 @@ POSTINGS_BYTES_PER_PARTITION = 64 << 20
 # lower bounds, applied as a CEILING on partition counts for small inputs:
 # a 5k-doc build sliced 32 ways pays 32 Python-worker forks in the analyzer
 # and writes 32-file tables that every downstream phase re-reads — pure
-# scheduling overhead. Keep at least ~500 docs per analyzer partition and
-# ~2 MB of staged parquet per postings partition; large builds are
-# unaffected (their data-based counts exceed the core count anyway).
+# scheduling overhead. Keep at least ~500 docs per doc-id (= analyzer)
+# partition and ~2 MB of staged parquet per postings partition; large
+# builds are unaffected (their data-based counts exceed the core count).
 ANALYZER_MIN_DOCS_PER_PARTITION = 500
 POSTINGS_MIN_BYTES_PER_PARTITION = 2 << 20
 
@@ -531,15 +467,17 @@ def build_segment(
     # 139s at 1.5M before this fix). One cheap count scan prices the doc-id
     # exchange; the postings exchange is priced from the staged file bytes.
     n_input = projected.count()
-    if n_input <= DOCS_PER_PARTITION:
-        # the whole input fits one doc-id-sort partition: take the fast
-        # path in assign_doc_ids (no sampling / counting jobs)
-        num_partitions = 1
-    else:
-        num_partitions = max(
+    # one doc-id range per partition, and the analyzer runs on the same
+    # partitions: ~DOCS_PER_PARTITION docs each and at least one partition
+    # per core, but at least ~ANALYZER_MIN_DOCS_PER_PARTITION docs each, so
+    # a build under that many docs is one partition (no range-sampling job)
+    num_partitions = min(
+        max(
             spark.sparkContext.defaultParallelism,
-            (n_input // DOCS_PER_PARTITION) + 1,
-        )
+            n_input // DOCS_PER_PARTITION + 1,
+        ),
+        n_input // ANALYZER_MIN_DOCS_PER_PARTITION + 1,
+    )
     # Guard against an under-partitioned source (one giant file, a narrow
     # explode, a fresh createDataFrame): the doc-id range exchange runs a
     # sampling pass AND a shuffle-map pass over the FULL input lineage, and
@@ -548,42 +486,27 @@ def build_segment(
     # corpus-side compute (measured: 2×~30 s single-task stages on a 500k-doc
     # bench input). One round-robin shuffle here makes every downstream pass
     # data-parallel; real 100 TB inputs have thousands of splits and skip it.
-    if num_partitions > 1 and projected.rdd.getNumPartitions() < min(
+    if n_input > DOCS_PER_PARTITION and projected.rdd.getNumPartitions() < min(
         num_partitions, spark.sparkContext.defaultParallelism
     ):
         projected = projected.repartition(num_partitions)
-    n_src_parts = projected.rdd.getNumPartitions()
     cached: list = []
-    id_info: dict = {}
-    with_ids = assign_doc_ids(
-        projected, "id", doc_id_base, num_partitions, cleanup=cached,
-        info=id_info,
-    )
-    if num_partitions == 1:
-        # target analyzer width: data-parallel, but never wider than
-        # ~500 docs/partition, so tiny builds don't fork a full worker pool
-        analyzer_parts = max(
-            2,
-            min(
-                spark.sparkContext.defaultParallelism,
-                (n_input // ANALYZER_MIN_DOCS_PER_PARTITION) + 1,
-            ),
-        )
-        # the broadcast-join fast path in assign_doc_ids preserves the
-        # source partitioning — when the source is already at least that
-        # wide the repartition would be a pure full-row shuffle for
-        # nothing. The funnel fallback (dup/null ids) lands everything on
-        # one partition and must always be re-spread.
-        if id_info.get("path") != "broadcast" or n_src_parts < analyzer_parts:
-            with_ids = with_ids.repartition(analyzer_parts)
-    stream_df = with_ids.mapInPandas(_flat_analyzer(schema), _flat_stream_schema(schema))
     staged_path = os.path.join(work_dir, "analyzed")
-    stream_df.write.mode("overwrite").parquet(staged_path)
+    try:
+        with_ids = assign_doc_ids(
+            projected, "id", doc_id_base, num_partitions, cleanup=cached
+        )
+        stream_df = with_ids.mapInPandas(
+            _flat_analyzer(schema), _flat_stream_schema(schema)
+        )
+        stream_df.write.mode("overwrite").parquet(staged_path)
+    finally:
+        # the staging write was the single pass over the tokenizer; the
+        # doc-id-ordered input cache has no further consumers, and a failed
+        # write must not leave it behind either
+        for c in cached:
+            c.unpersist()
     staged = spark.read.parquet(staged_path)
-    # the staging write was the single pass over the tokenizer; the
-    # doc-id-ordered input cache has no further consumers — release it
-    for c in cached:
-        c.unpersist()
 
     doc_rows = staged.where(F.col("field") == DOC_SENTINEL)
 
@@ -638,11 +561,11 @@ def build_segment(
     # job.
     def stats():
         # the job counts the stamped doc rows anyway, so checking them
-        # against n_input costs nothing: an input that reads differently
-        # twice in a way its plan does not show (a UDF declared
-        # deterministic that is not) makes the broadcast doc-id join drop
-        # rows, and the write must fail before the commit, not record
-        # n_input
+        # against n_input costs nothing: the count and the doc-id
+        # assignment read the input separately, and an input that yields
+        # another row count on each read (a source whose files changed in
+        # between, a filter on a nondeterministic UDF) must fail the write
+        # before the commit, not record n_input
         totals = bm25_totals(
             schema, doc_rows, (doc_id_base, doc_id_base + n_input - 1)
         )
@@ -650,8 +573,8 @@ def build_segment(
         if n_stamped != n_input:
             raise TantinyError(
                 f"build stamped {n_stamped} documents for {n_input} input "
-                "rows: the id column must be deterministic (the doc-id "
-                "assignment reads the input more than once)"
+                "rows: the input must yield the same rows each time it is "
+                "read (the build counts it before it assigns doc ids)"
             )
         return totals
 

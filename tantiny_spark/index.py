@@ -549,9 +549,10 @@ class Index:
 
         Call after a batch of commits (e.g. each streaming
         foreachBatch epoch): read amplification grows with segment count
-        (every query unions all live segments), while a merge is one
-        corpus-scale job — this knob bounds the former without paying the
-        latter per-commit."""
+        (each table is read once, but over every live segment's files,
+        and every deleted doc id is filtered out at each read), while a
+        merge is one corpus-scale job — this knob bounds the former
+        without paying the latter per-commit."""
         if max_segments < 1:
             raise ValueError("max_segments must be >= 1")
         if self.segment_count() <= max_segments:

@@ -221,9 +221,7 @@ def test_deterministic_doc_ids(spark, tmp_path):
     b = assign_doc_ids(df.repartition(7), "id", 100, num_partitions=5)
     rows_a = {r["id"]: r["doc_id"] for r in a.collect()}
     rows_b = {r["id"]: r["doc_id"] for r in b.collect()}
-    assert rows_a == {f"id{i:03d}": i - 0 for i in range(98)} or sorted(
-        rows_a.values()
-    ) == list(range(98))
+    assert rows_a == {f"id{i:03d}": i for i in range(98)}
     # rank order identical regardless of layout; base offsets apply
     assert {k: v + 100 for k, v in rows_a.items()} == rows_b
 
@@ -308,11 +306,9 @@ def test_search_many_cache_semantics(spark, tmp_path):
     assert ix.search_many(batch, limit=1)["a"] == ["1"]
 
 
-def test_assign_doc_ids_broadcast_path_matches_funnel(spark):
-    """The small-build fast path attaches doc ids via a broadcast join of
-    driver-ranked keys; it must stamp exactly the ids the positional funnel
-    stamps (global rank of id), and duplicate/null ids must fall back to the
-    funnel with distinct consecutive ids."""
+def test_assign_doc_ids_rank_is_partition_invariant(spark):
+    """One partition and three stamp the same doc ids, base + global rank
+    of id, and duplicate ids get distinct consecutive ids."""
     import pandas as pd
 
     from tantiny_spark.build import assign_doc_ids
@@ -321,38 +317,36 @@ def test_assign_doc_ids_broadcast_path_matches_funnel(spark):
         {"id": [f"k{i:03d}" for i in (5, 1, 9, 3, 7)], "v": list(range(5))}
     )
     df = spark.createDataFrame(pdf).repartition(3)
-    info = {}
-    fast = {
-        r["id"]: r["doc_id"]
-        for r in assign_doc_ids(df, "id", 100, num_partitions=1, info=info).collect()
+    stamped = [
+        {
+            r["id"]: r["doc_id"]
+            for r in assign_doc_ids(df, "id", 100, num_partitions=k).collect()
+        }
+        for k in (1, 3)
+    ]
+    assert stamped[0] == stamped[1] == {
+        "k001": 100, "k003": 101, "k005": 102, "k007": 103, "k009": 104
     }
-    assert info.get("path") == "broadcast"
-    general = {
-        r["id"]: r["doc_id"]
-        for r in assign_doc_ids(df, "id", 100, num_partitions=3).collect()
-    }
-    assert fast == general
-    assert fast["k001"] == 100 and fast["k009"] == 104
 
     dup = spark.createDataFrame(
-        pd.DataFrame({"id": ["a", "a", "b"], "v": [1, 2, 3]})
+        pd.DataFrame({"id": ["b", "a", "a"], "v": [1, 2, 3]})
     )
-    info = {}
-    rows = assign_doc_ids(dup, "id", 0, num_partitions=1, info=info).collect()
-    assert info.get("path") == "funnel"
-    assert sorted(r["doc_id"] for r in rows) == [0, 1, 2]
-    assert sorted(r["id"] for r in rows) == ["a", "a", "b"]
+    for k in (1, 3):
+        rows = assign_doc_ids(dup, "id", 0, num_partitions=k).collect()
+        assert sorted((r["doc_id"], r["id"]) for r in rows) == [
+            (0, "a"), (1, "a"), (2, "b")
+        ]
 
 
 def test_inputs_that_read_differently_twice_keep_every_doc(spark, tmp_path):
-    """The broadcast doc-id path reads the input twice (the keys, then the
-    join). A limit over shuffled rows, or a nondeterministic id, can read
-    different rows the second time, and the join silently dropped them
-    (a 0-doc segment that claimed 64 docs); such inputs take the funnel,
-    which reads them once."""
-    from pyspark.sql import functions as F
+    """Inputs that may yield other rows on a second read: a limit over
+    shuffled rows, an id the plan marks nondeterministic, and a UDF
+    declared deterministic that is not. The doc-id assignment reads each
+    once, into its cache, so every input row becomes one doc with its own
+    doc id."""
+    import uuid
 
-    from tantiny_spark.build import assign_doc_ids
+    from pyspark.sql import functions as F
 
     s = IndexSchema()
     s.text("t")
@@ -363,42 +357,20 @@ def test_inputs_that_read_differently_twice_keep_every_doc(spark, tmp_path):
         F.expr("reflect('java.util.UUID', 'randomUUID')").alias("id"),
         F.lit("alpha beta").alias("t"),
     )
-    for name, src, n in (("limit", shuffled.limit(64), 64), ("uuid", random_ids, 20)):
-        info: dict = {}
-        assign_doc_ids(src, "id", 0, num_partitions=1, info=info)
-        assert info["path"] == "funnel"
+    fresh_id = F.udf(lambda _: uuid.uuid4().hex, "string")
+    unflagged = spark.range(21).select(
+        fresh_id("id").alias("id"), F.lit("alpha beta").alias("t")
+    )
+    for name, src, n in (
+        ("limit", shuffled.limit(64), 64), ("uuid", random_ids, 20),
+        ("unflagged", unflagged, 21),
+    ):
         idx = Index(spark, str(tmp_path / name), s)
         idx.add_dataframe(src)
         idx.reload()
         assert idx.ctx.docs.count() == n == idx.snapshot.next_doc_id
+        assert idx.ctx.docs.select("doc_id").distinct().count() == n
         assert len(idx.search("alpha", limit=100)) == n
-
-
-def test_unflagged_nondeterministic_ids_fail_before_commit(spark, tmp_path):
-    """A UDF declared deterministic that is not reads different ids on the
-    join's second read, which the plan cannot show. The build's stats job
-    counts the stamped docs, and a count short of the input rows fails the
-    write before anything is committed."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from tantiny_spark.errors import TantinyError
-
-    s = IndexSchema()
-    s.text("t")
-    idx = Index(spark, str(tmp_path / "idx"), s)
-    idx.add({"id": "keep", "t": "alpha"})
-    version = idx.storage.current_version()
-    fresh_id = F.udf(lambda _: uuid.uuid4().hex, "string")
-    src = spark.range(20).select(
-        fresh_id("id").alias("id"), F.lit("alpha beta").alias("t")
-    )
-    with pytest.raises(TantinyError, match="deterministic"):
-        idx.add_dataframe(src)
-    assert idx.storage.current_version() == version
-    idx.reload()
-    assert idx.search("alpha") == ["keep"]
 
 
 def test_dict_table_matches_postings_recount(spark, tmp_path):

@@ -200,3 +200,52 @@ def test_reload_starts_no_job(spark, tmp_path):
         ),
     )
     assert len(started) >= 1
+
+
+def test_docs_files_hold_disjoint_doc_id_ranges(spark, tmp_path):
+    """A build writes ``docs`` partition by partition in doc-id ranges, so
+    the files' ``doc_id`` min/max ranges are pairwise disjoint and a
+    driver-side id lookup opens only the row groups of the file whose
+    range holds the doc ids, however the input's ids arrive."""
+    import random
+
+    from tantiny_spark.storage import SegmentFiles
+
+    rows = _rows("a", 3000)
+    random.Random(7).shuffle(rows)
+    idx = Index(spark, str(tmp_path / "idx"), _schema())
+    idx.add_dataframe(
+        spark.createDataFrame(rows, "id string, t string, cat string, n long")
+    )
+    (seg, _), docs_dir = next(
+        item for item in _live_tables(idx).items() if item[0][1] == "docs"
+    )
+    ranges = {}
+    for f in sorted(glob.glob(os.path.join(docs_dir, "*.parquet"))):
+        md = pq.ParquetFile(f).metadata
+        col = md.schema.names.index("doc_id")
+        stats = [
+            md.row_group(g).column(col).statistics
+            for g in range(md.num_row_groups)
+        ]
+        ranges[f] = (min(s.min for s in stats), max(s.max for s in stats))
+    assert len(ranges) >= 2
+    spans = sorted(ranges.values())
+    assert spans[0][0] == 0 and spans[-1][1] == 2999
+    for (_, hi), (lo, _) in zip(spans, spans[1:]):
+        assert hi < lo, spans
+
+    files = SegmentFiles([os.path.join(idx.storage.path, "segments", seg)])
+    read = []
+    plain_read = files._read
+
+    def recording_read(group, columns):
+        read.append(group[0])
+        return plain_read(group, columns)
+
+    files._read = recording_read
+    for path, (lo, hi) in ranges.items():
+        read.clear()
+        want = [lo, (lo + hi) // 2, hi]
+        assert files.ids(want) == {d: f"a{d:04d}" for d in want}
+        assert read and set(read) == {path}

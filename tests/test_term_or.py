@@ -310,13 +310,15 @@ def test_entries_without_totals_refuse_to_score_until_merged(spark, tmp_path):
 
 
 def test_no_persisted_rdd_survives_an_operation(spark, tmp_path):
-    """A snapshot caches nothing: the session's persisted RDDs are the
-    same before and after a reload, a search, a search_many and an
-    aggregation, with and without tombstones."""
+    """Neither a build nor a snapshot leaves a cache behind: the session's
+    persisted RDDs are the same before and after an add_dataframe, a
+    transaction commit, a failed build, a reload, a search, a search_many
+    and an aggregation, with and without tombstones."""
 
     def persisted() -> set:
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
+    start = persisted()
     schema = IndexSchema()
     schema.text("text")
     schema.string("tag")
@@ -328,7 +330,19 @@ def test_no_persisted_rdd_survives_an_operation(spark, tmp_path):
         idx.add_dataframe(
             spark.createDataFrame(rows, "id string, text string, tag string")
         )
-    start = persisted()
+        assert persisted() == start
+    other = Index(spark, str(tmp_path / "txn"), schema)
+    with other.transaction():
+        other.add({"id": "x", "text": "common", "tag": "t0"})
+    assert persisted() == start
+    # a build whose analyzer fails (a malformed json value)
+    json_schema = IndexSchema()
+    json_schema.json("attrs")
+    bad = Index(spark, str(tmp_path / "bad"), json_schema)
+    with pytest.raises(Exception, match="malformed"):
+        with bad.transaction():
+            bad.add({"id": "x", "attrs": "{broken"})
+    assert persisted() == start
     # the second round runs after s1d4 (tag t0) is deleted
     for n_live, tags in ((10, {"t0": 6, "t1": 4}), (9, {"t0": 5, "t1": 4})):
         idx = idx.reload()
