@@ -21,12 +21,15 @@ totals:
                 which doc_id order is id order, and its id range
 
 Scale notes (the 100 TB story):
-- doc_id assignment is a deterministic global rank of ``id`` computed with
-  repartitionByRange + per-partition offsets — never
-  monotonically_increasing_id (which is partition-layout-dependent and would
-  break resume + rank identity). The analyzer runs on the same partitions,
-  one doc-id range each, so ``docs`` is written in doc-id ranges and its
-  row groups' doc_id min/max prune id lookups.
+- doc_id is a deterministic global rank of ``id``, assigned in the one
+  Python pass over the input: the input is range-partitioned and sorted by
+  ``id``, the analyzer numbers each partition's docs as it reads them, and
+  one aggregation of the staged doc rows per partition gives each
+  partition's offset — never monotonically_increasing_id (which is
+  partition-layout-dependent and would break resume + rank identity).
+  Nothing is cached. Each analyzer partition is one doc-id range, so
+  ``docs`` is written in doc-id ranges and its row groups' doc_id min/max
+  prune id lookups.
 - the tf/positions aggregation keys on (field, term, doc_id) — high
   cardinality, so Zipfian head terms do NOT concentrate on one reducer; the
   dictionary count uses map-side partial aggregation.
@@ -37,7 +40,6 @@ Scale notes (the 100 TB story):
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 import pandas as pd
 from pyspark import TaskContext
@@ -59,91 +61,31 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-def bm25_totals(
-    schema: IndexSchema, docs: DataFrame, doc_ids: tuple | None = None
-) -> dict:
-    """The BM25 totals of a set of per-doc rows carrying ``id`` and each
-    text/json field's ``<field>__len``, in a segment's manifest-entry form
-    ``{"num_docs": n, "tokens": {field: total_tokens}}``: ONE aggregation
-    job for the doc count and every field's token total. String and facet
-    fields count one token per doc. With ``doc_ids``, the (first, last)
-    doc id of rows whose ``doc_id`` order is their ``id`` order (a
-    build's), the same job also gives the entry's one id run, ``"id_runs":
-    [[first, last, min id, max id]]`` (None when an id is null)."""
-    agg_cols = [F.count("*").alias("__n")]
-    if doc_ids is not None:
-        agg_cols += [
-            F.count("id").alias("__n_id"),
-            F.min("id").alias("__min_id"), F.max("id").alias("__max_id"),
-        ]
-    for f in schema.text_fields + schema.json_fields:
-        agg_cols.append(F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}"))
-    agg_row = docs.agg(*agg_cols).collect()[0]
-    n_docs = int(agg_row["__n"])
+def doc_aggregates(schema: IndexSchema, docs: DataFrame, *by: str) -> list:
+    """ONE aggregation job over per-doc rows carrying ``id`` and each
+    text/json field's ``<field>__len``, grouped by ``by`` (no column: one
+    row for all of them): the doc count ``__n``, the non-null id count
+    ``__n_id``, the id range ``__min_id``/``__max_id`` and each field's
+    token total ``__tot_<field>``."""
+    return docs.groupBy(*by).agg(
+        F.count("*").alias("__n"), F.count("id").alias("__n_id"),
+        F.min("id").alias("__min_id"), F.max("id").alias("__max_id"),
+        *(
+            F.sum(F.col(f"{f}__len")).alias(f"__tot_{f}")
+            for f in schema.text_fields + schema.json_fields
+        ),
+    ).collect()
+
+
+def bm25_totals(schema: IndexSchema, rows: list) -> dict:
+    """The BM25 totals of ``doc_aggregates`` rows, summed, in a segment's
+    manifest-entry form ``{"num_docs": n, "tokens": {field:
+    total_tokens}}``. String and facet fields count one token per doc."""
+    n_docs = sum(r["__n"] for r in rows)
     tokens = dict.fromkeys(schema.string_fields + schema.facet_fields, n_docs)
     for f in schema.text_fields + schema.json_fields:
-        tokens[f] = int(agg_row[f"__tot_{f}"] or 0)
-    out = {"num_docs": n_docs, "tokens": tokens}
-    if doc_ids is not None:
-        out["id_runs"] = (
-            [[*doc_ids, agg_row["__min_id"], agg_row["__max_id"]]]
-            if n_docs and agg_row["__n_id"] == n_docs else None
-        )
-    return out
-
-
-def assign_doc_ids(
-    df: DataFrame, order_col: str = "id", doc_id_base: int = 0,
-    num_partitions: Optional[int] = None, cleanup: Optional[list] = None,
-) -> DataFrame:
-    """Deterministic, parallelism-invariant doc_id = doc_id_base + global rank
-    of ``order_col``; duplicate keys get distinct consecutive ids.
-
-    Two-pass pattern that scales to arbitrarily many partitions: range-
-    repartition + sort by the key into a cache (the input's only read),
-    count rows per partition (small driver collect: one long per
-    partition), then stamp ids inside mapInPandas with the per-partition
-    offset. The global order — hence every doc_id — depends only on the key
-    ordering, not on partition boundaries, so local[8] and local[32] (or
-    1000 executors) produce identical ids, and output partition p holds
-    the p-th doc-id range. One partition starts no range-sampling job.
-    """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    arranged = df.repartitionByRange(
-        num_partitions, F.col(order_col)
-    ).sortWithinPartitions(order_col)
-    arranged = arranged.cache()
-    if cleanup is not None:
-        # caller unpersists once the stamped output has been fully
-        # consumed (long-running writers must not accumulate caches)
-        cleanup.append(arranged)
-    counts = (
-        arranged.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-    )
-    offsets = {}
-    acc = doc_id_base
-    for row in sorted(counts, key=lambda r: r["pid"]):
-        offsets[row["pid"]] = acc
-        acc += row["count"]
-    offsets_b = spark.sparkContext.broadcast(offsets)
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType(), False)] + list(df.schema.fields)
-    )
-
-    def _stamp(batches):
-        pid = TaskContext.get().partitionId()
-        base = offsets_b.value.get(pid, 0)
-        seen = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf.insert(0, "doc_id", range(base + seen, base + seen + len(pdf)))
-            seen += len(pdf)
-            yield pdf
-
-    return arranged.mapInPandas(_stamp, out_schema)
+        tokens[f] = sum(int(r[f"__tot_{f}"] or 0) for r in rows)
+    return {"num_docs": n_docs, "tokens": tokens}
 
 
 DOC_SENTINEL = "__doc__"
@@ -166,9 +108,11 @@ POSTINGS_MIN_BYTES_PER_PARTITION = 2 << 20
 def _flat_stream_schema(schema: IndexSchema) -> T.StructType:
     """Union row schema for the single-pass analyzer stream: one 'doc' row
     per document (id + fast fields + per-text-field len/norm) and one 'post'
-    row per (text field, term, doc)."""
+    row per (text field, term, doc). ``doc_id`` is the doc's number inside
+    its analyzer partition ``__part``."""
     fields = [
         T.StructField("doc_id", T.LongType(), False),
+        T.StructField("__part", T.IntegerType(), False),
         T.StructField("field", T.StringType(), False),
         T.StructField("term", T.StringType(), True),
         T.StructField("tf", T.IntegerType(), True),
@@ -217,7 +161,9 @@ def _flat_analyzer(schema: IndexSchema):
     """mapInPandas kernel: tokenize + doc-local posting construction with
     FLAT list building (no per-term dicts-of-dicts — ~2.5× less Python time
     than nested struct assembly, measured) emitting doc rows + post rows in
-    one stream."""
+    one stream. It numbers the docs as it reads them, as Tantivy's writer
+    does: ``doc_id`` counts the partition's rows across its batches from
+    0, and every row carries the partition id in ``__part``."""
     import numpy as np
 
     from tantiny_spark import scoring
@@ -251,9 +197,12 @@ def _flat_analyzer(schema: IndexSchema):
         nonlocal norm_table
         if norm_table is None:
             norm_table = np.asarray(scoring.FIELDNORM_TABLE, dtype=np.int64)
+        part = TaskContext.get().partitionId()
+        seen = 0
 
         def finish_post(post: dict) -> pd.DataFrame:
             # fill the union-schema columns every post row leaves null
+            post["__part"] = part
             post["id"] = None
             for c in fast_cols:
                 post[c] = None
@@ -267,9 +216,11 @@ def _flat_analyzer(schema: IndexSchema):
 
         for pdf in batches:
             n = len(pdf)
-            doc_ids = pdf["doc_id"].to_numpy()
+            doc_ids = np.arange(seen, seen + n, dtype=np.int64)
+            seen += n
             doc_out = {
                 "doc_id": doc_ids,
+                "__part": part,
                 "field": [DOC_SENTINEL] * n,
                 "term": [None] * n,
                 "tf": [None] * n,
@@ -428,13 +379,20 @@ def build_segment(
     work_dir: str,
 ) -> dict:
     """Run the full build pipeline over ``source`` (one column per schema
-    field, id column named per schema.id_field). Returns the segment tables.
-    Pure transformation — the caller (storage layer) commits.
+    field, id column named per schema.id_field). Returns the segment tables,
+    with ``stats`` returning the manifest-entry totals and id run, and
+    ``n_docs``. Pure transformation — the caller (storage layer) commits.
 
-    ``work_dir``: staging directory for the materialize-then-derive pattern —
-    the analyzed rows land in Parquet once (the tokenizer's single pass) and
-    every derived table reads the columnar files back (column-pruned,
-    JVM-only). The caller deletes it once the tables are written. The
+    The input is read by one Python pass: range-partitioned and sorted by
+    ``id``, then analyzed, the analyzer numbering each partition's docs from
+    0. ``work_dir`` is the staging directory for the materialize-then-derive
+    pattern — the analyzed rows land in Parquet once and every derived
+    table reads the columnar files back (column-pruned, JVM-only). One
+    aggregation of the staged doc rows per partition gives the partition
+    offsets, the BM25 totals and the id run, and fails the build before any
+    table is written when the input yielded another row count than its
+    first read; docs and postings add the offsets by one broadcast join.
+    The caller deletes ``work_dir`` once the tables are written. The
     ``dict`` is not built here: the storage layer derives it from the
     written postings files (see storage.write_segment)."""
     sid = schema.id_field
@@ -490,28 +448,61 @@ def build_segment(
         num_partitions, spark.sparkContext.defaultParallelism
     ):
         projected = projected.repartition(num_partitions)
-    cached: list = []
+    # the input's one Python pass: the analyzer numbers each range
+    # partition's docs from 0, straight into the staging write
     staged_path = os.path.join(work_dir, "analyzed")
-    try:
-        with_ids = assign_doc_ids(
-            projected, "id", doc_id_base, num_partitions, cleanup=cached
-        )
-        stream_df = with_ids.mapInPandas(
-            _flat_analyzer(schema), _flat_stream_schema(schema)
-        )
-        stream_df.write.mode("overwrite").parquet(staged_path)
-    finally:
-        # the staging write was the single pass over the tokenizer; the
-        # doc-id-ordered input cache has no further consumers, and a failed
-        # write must not leave it behind either
-        for c in cached:
-            c.unpersist()
+    projected.repartitionByRange(num_partitions, "id").sortWithinPartitions(
+        "id"
+    ).mapInPandas(
+        _flat_analyzer(schema), _flat_stream_schema(schema)
+    ).write.mode("overwrite").parquet(staged_path)
     staged = spark.read.parquet(staged_path)
 
-    doc_rows = staged.where(F.col("field") == DOC_SENTINEL)
+    # one aggregation job over the staged doc rows per analyzer partition
+    # gives every partition's offset, the BM25 totals and the segment's one
+    # id run (doc_id = base + rank(id), so doc_id order is id order)
+    parts = {
+        r["__part"]: r for r in doc_aggregates(
+            schema, staged.where(F.col("field") == DOC_SENTINEL), "__part"
+        )
+    }
+    totals = bm25_totals(schema, list(parts.values()))
+    if totals["num_docs"] != n_input:
+        # an input that yields another row count on each read (a source
+        # whose files changed in between, a filter on a nondeterministic
+        # UDF) must fail the build before any table is written, not record
+        # n_input
+        raise TantinyError(
+            f"build stamped {totals['num_docs']} documents for {n_input} "
+            "input rows: the input must yield the same rows each time it is "
+            "read (the build counts it before it assigns doc ids)"
+        )
+    totals["id_runs"] = (
+        [[
+            doc_id_base, doc_id_base + n_input - 1,
+            min(r["__min_id"] for r in parts.values()),
+            max(r["__max_id"] for r in parts.values()),
+        ]]
+        if n_input and all(r["__n_id"] == r["__n"] for r in parts.values())
+        else None
+    )
+    # the offsets are a local relation, one SQL text (one JVM call), added
+    # to every staged row by one broadcast join
+    values, offset = [], doc_id_base
+    for p in range(num_partitions):
+        values.append(f"({p}, {offset}L)")
+        offset += parts[p]["__n"] if p in parts else 0
+    offsets = spark.sql(
+        f"SELECT * FROM VALUES {', '.join(values)} AS t(__part, __base)"
+    )
+    staged = staged.join(F.broadcast(offsets), "__part").withColumn(
+        "doc_id", F.col("doc_id") + F.col("__base")
+    )
 
     # --- docs table -------------------------------------------------------
-    docs = doc_rows.select(*docs_schema(schema).fieldNames())
+    docs = staged.where(F.col("field") == DOC_SENTINEL).select(
+        *docs_schema(schema).fieldNames()
+    )
 
     # --- postings ----------------------------------------------------------
     # string/facet postings are emitted by the analyzer itself (tf=1,
@@ -550,37 +541,9 @@ def build_segment(
         n_post_parts, "field", "term", "doc_id"
     ).sortWithinPartitions("field", "term", "doc_id")
 
-    # stats: one aggregation job for every field's token totals, the doc
-    # count and the segment's one id run (assign_doc_ids stamps doc_id =
-    # base + rank(id), so doc_id order is id order), for the segment's
-    # manifest entry — DEFERRED (0-arg callable) so
-    # storage.write_segment runs it concurrently with the docs/postings
-    # writes instead of as a serial barrier between staging and the table
-    # writes. The doc count itself is n_input (the analyzer emits exactly
-    # one doc row per input row), so the commit path never waits on this
-    # job.
-    def stats():
-        # the job counts the stamped doc rows anyway, so checking them
-        # against n_input costs nothing: the count and the doc-id
-        # assignment read the input separately, and an input that yields
-        # another row count on each read (a source whose files changed in
-        # between, a filter on a nondeterministic UDF) must fail the write
-        # before the commit, not record n_input
-        totals = bm25_totals(
-            schema, doc_rows, (doc_id_base, doc_id_base + n_input - 1)
-        )
-        n_stamped = totals["num_docs"]
-        if n_stamped != n_input:
-            raise TantinyError(
-                f"build stamped {n_stamped} documents for {n_input} input "
-                "rows: the input must yield the same rows each time it is "
-                "read (the build counts it before it assigns doc ids)"
-            )
-        return totals
-
     return {
         "docs": docs,
         "postings": postings,
-        "stats": stats,
+        "stats": lambda: totals,
         "n_docs": n_input,  # one doc row per input row, counted up front
     }

@@ -46,7 +46,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 import math
-import weakref
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
@@ -62,24 +61,14 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
-#: per-session cache of the 256-entry SmallFloat decode table Column —
-#: building it costs 256 py4j literal round-trips (~130 ms, measured), which
-#: used to be paid by EVERY scored query; Column expressions are immutable
-#: and session-scoped, so one per live session is exactly right
-_NORM_TABLE_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _decode_norm(col):
-    """fieldnorm byte id → document length, JVM-side (no UDF)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    table = _NORM_TABLE_CACHE.get(spark) if spark is not None else None
-    if table is None:
-        table = F.array(*[F.lit(v) for v in scoring.FIELDNORM_TABLE])
-        if spark is not None:
-            _NORM_TABLE_CACHE[spark] = table
-    return F.element_at(table, col.cast("int") + 1).cast("double")
+def _decode_norm():
+    """``norm_id`` fieldnorm byte id → document length, JVM-side (no UDF):
+    one SQL expression over the 256-entry SmallFloat decode table, so one
+    JVM call builds it."""
+    table = ", ".join(map(str, scoring.FIELDNORM_TABLE))
+    return F.expr(
+        f"CAST(element_at(array({table}), CAST(norm_id AS INT) + 1) AS DOUBLE)"
+    )
 
 
 def _sql_str(s: str) -> str:
@@ -466,7 +455,7 @@ def _term_or(field: str, weights: dict, ctx: SearchContext) -> DataFrame:
     terms = sorted(weights)
     dfs = ctx.term_dfs(field, terms)
     score = _bm25_expr(
-        F.lit(1.0), _decode_norm(F.col("norm_id")),
+        F.lit(1.0), _decode_norm(),
         F.lit(float(avgdl)), _by_term(dfs), F.lit(float(n)),
     )
     if any(w != 1.0 for w in weights.values()):
@@ -493,7 +482,7 @@ def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
         return p.select(
             "doc_id",
             _bm25_expr(
-                F.col("tf").cast("double"), _decode_norm(F.col("norm_id")),
+                F.col("tf").cast("double"), _decode_norm(),
                 F.lit(float(avgdl)), _by_term({terms[0]: dfs[terms[0]]}),
                 F.lit(float(n)),
             ).alias("score"),
@@ -535,7 +524,7 @@ def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
     idf_sum = sum(scoring.idf(dfs[t], n) for t in terms)
     tf = F.col("phrase_tf").cast("double")
     norm = scoring.K1 * (
-        1.0 - scoring.B + scoring.B * _decode_norm(F.col("norm_id")) / F.lit(float(avgdl))
+        1.0 - scoring.B + scoring.B * _decode_norm() / F.lit(float(avgdl))
     )
     return joined.select(
         "doc_id",

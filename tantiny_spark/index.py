@@ -23,7 +23,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from tantiny_spark import plan as P
-from tantiny_spark.build import bm25_totals, build_segment
+from tantiny_spark.build import bm25_totals, build_segment, doc_aggregates
 from tantiny_spark.errors import (
     IndexWriterBusyError, UnexpectedNone, UnsupportedField,
 )
@@ -505,7 +505,10 @@ class Index:
         tables = {
             "docs": ctx.docs, "postings": ctx.postings,
             "stats": lambda: {
-                **bm25_totals(self.schema, ctx.docs), "id_runs": ctx.id_runs,
+                **bm25_totals(
+                    self.schema, doc_aggregates(self.schema, ctx.docs)
+                ),
+                "id_runs": ctx.id_runs,
             },
         }
         manifest = self.storage.read_manifest(self.storage.current_version())

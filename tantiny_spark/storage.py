@@ -42,6 +42,7 @@ and pushdown are identical.
 from __future__ import annotations
 
 import bisect
+import functools
 import heapq
 import json
 import os
@@ -383,17 +384,28 @@ class IndexStorage:
         """The named segments' docs, postings and dict, each read ONCE over
         every segment directory with its fixed schema: no Spark job infers
         one from the files. A docs column the schema does not name (an
-        older segment's ``<facet>__ancestors``) is not read."""
+        older segment's ``<facet>__ancestors``) is not read. Spark lists
+        more paths than ``spark.sql.sources.parallelPartitionDiscovery.
+        threshold`` in a Spark job, so the directories are read in groups
+        of at most that many, unioned: the driver lists them, with no job."""
         schemas = {  # an empty index's manifest holds no schema yet
             "docs": docs_schema(schema) if schema else "doc_id long, id string",
             "postings": POSTINGS_SCHEMA, "dict": DICT_SCHEMA,
         }
-        return {
-            t: spark.read.schema(schemas[t]).parquet(*(
-                os.path.join(self.path, "segments", n, t) for n in names
-            ))
-            for t in TABLES
-        }
+        cap = max(1, int(spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        )))
+        # an empty name list still reads one (empty) group
+        starts = range(0, max(len(names), 1), cap)
+        tables = {}
+        for t in TABLES:
+            dirs = [os.path.join(self.path, "segments", n, t) for n in names]
+            groups = [
+                spark.read.schema(schemas[t]).parquet(*dirs[i:i + cap])
+                for i in starts
+            ]
+            tables[t] = functools.reduce(DataFrame.union, groups)
+        return tables
 
 
 class Snapshot:

@@ -211,19 +211,38 @@ def test_merge_segments(spark, tmp_path):
     assert after[0][0] == before[0][0] == "1"
 
 
-def test_deterministic_doc_ids(spark, tmp_path):
-    # doc_id = global rank of id: stable across partition counts
-    from tantiny_spark.build import assign_doc_ids
+def _built_doc_ids(spark, path, monkeypatch, df, base, min_docs) -> tuple:
+    """``build_segment``'s sorted (doc_id, id) rows over ``df`` (columns
+    id, t) with ``ANALYZER_MIN_DOCS_PER_PARTITION = min_docs``, and the
+    number of analyzer partitions that held docs."""
+    import os
 
+    from tantiny_spark import build
+
+    monkeypatch.setattr(build, "ANALYZER_MIN_DOCS_PER_PARTITION", min_docs)
+    s = IndexSchema()
+    s.text("t")
+    tables = build.build_segment(
+        spark, df, s, doc_id_base=base, work_dir=str(path)
+    )
+    docs = tables["docs"].select("doc_id", "id").collect()
+    rows = sorted((r["doc_id"], r["id"]) for r in docs)
+    staged = spark.read.parquet(os.path.join(str(path), "analyzed"))
+    return rows, staged.select("__part").distinct().count()
+
+
+def test_deterministic_doc_ids(spark, tmp_path, monkeypatch):
+    # doc_id = base + global rank of id: stable across partition counts
     data = [(f"id{i:03d}", f"payload {i}") for i in range(97, -1, -1)]
-    df = spark.createDataFrame(data, "id string, t string")
-    a = assign_doc_ids(df.repartition(2), "id", 0, num_partitions=3)
-    b = assign_doc_ids(df.repartition(7), "id", 100, num_partitions=5)
-    rows_a = {r["id"]: r["doc_id"] for r in a.collect()}
-    rows_b = {r["id"]: r["doc_id"] for r in b.collect()}
-    assert rows_a == {f"id{i:03d}": i for i in range(98)}
-    # rank order identical regardless of layout; base offsets apply
-    assert {k: v + 100 for k, v in rows_a.items()} == rows_b
+    df = spark.createDataFrame(data, "id string, t string").repartition(3)
+    for min_docs, n_parts, base in ((500, 1, 0), (25, 4, 100)):
+        rows, parts = _built_doc_ids(
+            spark, tmp_path / f"w{min_docs}", monkeypatch, df, base, min_docs
+        )
+        assert parts == n_parts
+        assert dict((i, d) for d, i in rows) == {
+            f"id{i:03d}": base + i for i in range(98)
+        }
 
 
 def test_maybe_merge_policy(spark, tmp_path):
@@ -306,44 +325,42 @@ def test_search_many_cache_semantics(spark, tmp_path):
     assert ix.search_many(batch, limit=1)["a"] == ["1"]
 
 
-def test_assign_doc_ids_rank_is_partition_invariant(spark):
-    """One partition and three stamp the same doc ids, base + global rank
-    of id, and duplicate ids get distinct consecutive ids."""
+def test_assign_doc_ids_rank_is_partition_invariant(
+    spark, tmp_path, monkeypatch
+):
+    """One analyzer partition and three number the docs the same, base +
+    global rank of id, and duplicate ids get distinct consecutive ids."""
     import pandas as pd
 
-    from tantiny_spark.build import assign_doc_ids
-
-    pdf = pd.DataFrame(
-        {"id": [f"k{i:03d}" for i in (5, 1, 9, 3, 7)], "v": list(range(5))}
-    )
-    df = spark.createDataFrame(pdf).repartition(3)
-    stamped = [
-        {
-            r["id"]: r["doc_id"]
-            for r in assign_doc_ids(df, "id", 100, num_partitions=k).collect()
-        }
-        for k in (1, 3)
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": [f"k{i:03d}" for i in (5, 1, 9, 3, 7)], "t": "x"})
+    ).repartition(3)
+    built = [
+        _built_doc_ids(spark, tmp_path / f"w{m}", monkeypatch, df, 100, m)
+        for m in (500, 2)
     ]
-    assert stamped[0] == stamped[1] == {
-        "k001": 100, "k003": 101, "k005": 102, "k007": 103, "k009": 104
-    }
+    assert [parts for _, parts in built] == [1, 3]
+    assert built[0][0] == built[1][0] == [
+        (100, "k001"), (101, "k003"), (102, "k005"), (103, "k007"),
+        (104, "k009"),
+    ]
 
     dup = spark.createDataFrame(
-        pd.DataFrame({"id": ["b", "a", "a"], "v": [1, 2, 3]})
+        pd.DataFrame({"id": ["b", "a", "a"], "t": "x"})
     )
-    for k in (1, 3):
-        rows = assign_doc_ids(dup, "id", 0, num_partitions=k).collect()
-        assert sorted((r["doc_id"], r["id"]) for r in rows) == [
-            (0, "a"), (1, "a"), (2, "b")
-        ]
+    for m in (500, 1):
+        rows, _ = _built_doc_ids(
+            spark, tmp_path / f"d{m}", monkeypatch, dup, 0, m
+        )
+        assert rows == [(0, "a"), (1, "a"), (2, "b")]
 
 
 def test_inputs_that_read_differently_twice_keep_every_doc(spark, tmp_path):
     """Inputs that may yield other rows on a second read: a limit over
     shuffled rows, an id the plan marks nondeterministic, and a UDF
-    declared deterministic that is not. The doc-id assignment reads each
-    once, into its cache, so every input row becomes one doc with its own
-    doc id."""
+    declared deterministic that is not. The analyzer reads each once and
+    numbers the rows it reads, so every input row becomes one doc with its
+    own doc id."""
     import uuid
 
     from pyspark.sql import functions as F

@@ -275,3 +275,47 @@ def test_significant_terms_single_corpus_pass(plan_index):
     # dictionary, never the corpus
     assert plan.count("Exchange hashpartitioning(term") <= 2
     assert "TakeOrderedAndProject" in plan
+
+
+def test_build_reads_its_input_in_one_python_pass(
+    spark, tmp_path, monkeypatch
+):
+    """A build's staging write is the input's one Python pass: its optimized
+    plan holds exactly one MapInPandas (the analyzer, which numbers the
+    docs) over the range-sorted input, and no cached relation; the build
+    leaves no RDD persisted."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tantiny_spark import build
+
+    staged_plans = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if os.path.basename(path) == "analyzed":
+            staged_plans.append(
+                self._df._jdf.queryExecution().optimizedPlan().toString()
+            )
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    # several analyzer partitions, so the input is range-partitioned
+    monkeypatch.setattr(build, "ANALYZER_MIN_DOCS_PER_PARTITION", 20)
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = persisted()
+    s = IndexSchema()
+    s.text("t")
+    ix = Index(spark, str(tmp_path / "idx"), s)
+    ix.add_dataframe(spark.createDataFrame(
+        [(f"d{i:03d}", f"w{i % 5} common") for i in range(99, -1, -1)],
+        "id string, t string",
+    ))
+    assert persisted() == before
+    assert len(staged_plans) == 1
+    plan = staged_plans[0]
+    assert plan.count("MapInPandas") == 1, plan
+    assert "RepartitionByExpression" in plan, plan
+    assert "InMemoryRelation" not in plan, plan
+    assert len(ix.reload().search("common", limit=200)) == 100

@@ -202,6 +202,35 @@ def test_reload_starts_no_job(spark, tmp_path):
     assert len(started) >= 1
 
 
+def test_reload_past_the_listing_threshold_starts_no_job(spark, tmp_path):
+    """Spark lists more paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` in a Spark
+    job; the segment directories are read in groups of at most that many,
+    so with the threshold at 2 a 3-segment reload still starts no job and
+    answers a search as with the default threshold."""
+    cols = "id string, t string, cat string, n long"
+    idx = Index(spark, str(tmp_path / "idx"), _schema())
+    for prefix in "abc":
+        idx.add_dataframe(spark.createDataFrame(_rows(prefix, 10), cols))
+    expected = idx.reload().search_with_scores("w1", limit=100)
+    assert len(expected) > 10
+    sc = spark.sparkContext
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(key, "2")
+    try:
+        sc.setJobGroup("reload-grouped", "reload-grouped")
+        try:
+            ctx = idx.reload().ctx
+        finally:
+            sc._jsc.clearJobGroup()
+        started = sc.statusTracker().getJobIdsForGroup("reload-grouped")
+        assert list(started) == []
+        assert ctx.segments == 3
+        assert idx.search_with_scores("w1", limit=100) == expected
+    finally:
+        spark.conf.unset(key)
+
+
 def test_docs_files_hold_disjoint_doc_id_ranges(spark, tmp_path):
     """A build writes ``docs`` partition by partition in doc-id ranges, so
     the files' ``doc_id`` min/max ranges are pairwise disjoint and a
