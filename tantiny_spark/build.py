@@ -456,7 +456,7 @@ def build_segment(
     ).mapInPandas(
         _flat_analyzer(schema), _flat_stream_schema(schema)
     ).write.mode("overwrite").parquet(staged_path)
-    staged = spark.read.parquet(staged_path)
+    staged = spark.read.schema(_flat_stream_schema(schema)).parquet(staged_path)
 
     # one aggregation job over the staged doc rows per analyzer partition
     # gives every partition's offset, the BM25 totals and the segment's one

@@ -1,12 +1,28 @@
-"""Query execution: compile a plan tree to a DataFrame[doc_id, score].
+"""Query execution: compile a plan tree to ONE SQL text, run as
+DataFrame[doc_id, score].
 
 The read-path equivalent of the reference's __search
 (/root/reference/src/index.rs:244-274): Query → Weight (global stats) →
 scorer over postings → top-k. Here the "weight" is the manifest's BM25
 totals plus driver-side lookups of the (tiny) dictionary rows the query
-needs, baked into the plan as literals; the "scorer" is a JVM-side BM25
+needs, baked into the text as literals; the "scorer" is a JVM-side BM25
 expression over a term-pruned postings scan, and top-k compiles to
 TakeOrderedAndProject.
+
+compile_plan is pure Python: every plan node has one builder that returns
+a SQL query text over the snapshot's tables, named ``{postings}`` and
+``{docs}``, and the whole tree runs as ONE
+``spark.sql(text, postings=..., docs=...)`` call, which
+binds each named table as a temporary view for the one call and drops it
+after. Building the plan costs a handful of py4j calls whatever its size,
+where one PySpark Column per expression cost one round trip each, and
+Catalyst analyzes the plan once instead of once per DataFrame
+transformation. Every literal is exact: a string reads back through
+_sql_str, a double through _sql_double, and the text rebuilds each score
+expression operand for operand, so the doubles are the ones a Column
+build would compute. The only frame the text cannot name is an expansion
+that overflows its cap: its dictionary slice (the head's predicate, which
+for fuzzy holds the OSA pandas UDF) is bound as one more named frame.
 
 Score semantics per SURVEY.md §2.5: term/facet tf=1 (IndexRecordOption::Basic,
 src/query.rs:53,190), phrase scores with phrase frequency and the summed idf
@@ -18,24 +34,23 @@ Every scan is pruned before it leaves Parquet: term lookups filter on
 (field, term) — pushed down onto the sorted postings layout — and only the
 columns a query type needs are read (no positions for term queries).
 
-A cold term search is ONE Spark job on a snapshot whose id runs are
-disjoint (every append-only snapshot and its merge, deletes included):
+A cold term search is ONE spark.sql call and ONE Spark job on a snapshot
+whose id runs are disjoint (every append-only snapshot and its merge,
+deletes included):
 - term dfs and prefix heads are read on the driver from the live
   segments' dict files (storage.SegmentFiles: pyarrow, pruned by row-group
   min/max), so planning starts no job; field stats come from the manifest;
 - the scan reads each table once over every live segment, deletes applied
   as one filter (storage.Snapshot.context);
-- the hits rank by (score desc, run rank, doc_id asc) in one
-  TakeOrderedAndProject (top_doc_ids), and the driver reads the k hits'
-  ids from the docs files.
+- the text ranks the hits by (score desc, run rank, doc_id asc) in one
+  TakeOrderedAndProject (compile_plan's ``top``), and the driver reads the
+  k hits' ids from the docs files.
 A snapshot whose id ranges overlap (an upsert re-adding an id, interleaved
 ids), ``search_after`` and the other reads (search_df, rescore,
 search_many) join the (doc_id, id) map before ranking (top_k). Regex,
 fuzzy and JSON-range heads need Java regex or the JVM ``levenshtein``
 prefilter, so each stays ONE shuffle-free Spark job: raw per-segment rows
-collected and deduplicated on the driver. Every literal list (a term IN
-list, a term → df or weight map) is ONE SQL expression, so one JVM call,
-not several per literal.
+collected and deduplicated on the driver.
 Fuzzy expansion usually needs no Python worker: a JVM Levenshtein
 prefilter bounds the candidates and the exact OSA test runs on the driver
 over the collected head; the OSA pandas UDF runs only when the candidates
@@ -54,30 +69,30 @@ from tantiny_spark import plan as P
 from tantiny_spark import scoring
 from tantiny_spark.errors import TantinyError
 
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
+# the snapshot's tables in a query text (bound by _run)
+_POSTINGS, _DOCS = "{postings}", "{docs}"
 
-def _decode_norm():
-    """``norm_id`` fieldnorm byte id → document length, JVM-side (no UDF):
-    one SQL expression over the 256-entry SmallFloat decode table, so one
-    JVM call builds it."""
-    table = ", ".join(map(str, scoring.FIELDNORM_TABLE))
-    return F.expr(
-        f"CAST(element_at(array({table}), CAST(norm_id AS INT) + 1) AS DOUBLE)"
-    )
+#: no rows, with the result's columns; Spark folds it to an empty local
+#: relation, so a plan holding only it starts no job
+_EMPTY = "SELECT doc_id, score FROM VALUES (0L, 0.0D) AS e(doc_id, score) WHERE false"
+
+_N = "CAST(norm_id AS INT)"
+#: ``norm_id`` fieldnorm byte id → document length (scoring.FIELDNORM_TABLE):
+#: the SmallFloat byte4 decode in integer arithmetic, JVM-side (no UDF)
+_DECODE_NORM = (
+    f"CAST(CASE WHEN {_N} < 32 THEN {_N} ELSE 24 + shiftleft((({_N} - 24)"
+    f" & 7) | 8, shiftright({_N} - 24, 3) - 1) END AS DOUBLE)"
+)
 
 
 def _sql_str(s: str) -> str:
     """A SQL expression that reads back as exactly the string ``s``. Plain
     quoted text when ``s`` holds no quote, backslash, ``$`` (variable
-    substitution) or non-printable character, so the parsed literal does
-    not depend on spark.sql.parser.escapedStringLiterals; otherwise the
-    UTF-8 bytes in hex, which constant-fold to the same literal."""
-    if s.isprintable() and not any(c in "'\\$" for c in s):
+    substitution), brace (spark.sql formats its text with str.format) or
+    non-printable character, so the parsed literal does not depend on
+    spark.sql.parser.escapedStringLiterals; otherwise the UTF-8 bytes in
+    hex, which constant-fold to the same literal."""
+    if s.isprintable() and not any(c in "'\\${}" for c in s):
         return f"'{s}'"
     return f"decode(unhex('{s.encode('utf-8').hex()}'), 'UTF-8')"
 
@@ -87,21 +102,42 @@ def _sql_double(v) -> str:
     return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
 
 
-def _term_in(terms) -> Column:
-    """``term IN (...)`` over literal terms, built in ONE JVM call (an
-    ``isin`` of Python values costs a py4j round trip per literal). Spark
-    plans it exactly as ``isin``: an In (one term: EqualTo) over literals,
-    pushed down to the Parquet reader."""
-    return F.expr(f"term IN ({', '.join(_sql_str(t) for t in terms)})")
+def _sql_name(name: str) -> str:
+    """A column name, backtick-quoted (braces doubled for str.format)."""
+    name = name.replace("`", "``").replace("{", "{{").replace("}", "}}")
+    return f"`{name}`"
 
 
-def _by_term(values: dict) -> Column:
+def _sql_value(v) -> str:
+    """A range bound as the literal F.lit would build: a timestamp by its
+    internal microseconds (never a formatted string, which the session
+    time zone would re-read), a float as a double, an int as a bigint."""
+    if isinstance(v, int):
+        return f"{v}L"
+    if isinstance(v, float):
+        return _sql_double(v)
+    return f"timestamp_micros({T.TimestampType().toInternal(v)})"
+
+
+def _field_is(field: str) -> str:
+    return f"field = {_sql_str(field)}"
+
+
+def _term_in(terms) -> str:
+    """``term IN (...)`` over literal terms: Spark plans it as an In (one
+    term: EqualTo) over literals, pushed down to the Parquet reader."""
+    return f"term IN ({', '.join(_sql_str(t) for t in terms)})"
+
+
+def _by_term(values: dict) -> str:
     """The double ``values[term]`` of each row: ``element_at`` over one
-    literal term → value map, built in ONE JVM call."""
+    literal term → value map. Spark inlines a double literal into the
+    generated code but keeps a map literal as a reference, so a query with
+    other values reuses the compiled class instead of compiling a new one."""
     pairs = ", ".join(
         f"{_sql_str(t)}, {_sql_double(v)}" for t, v in values.items()
     )
-    return F.expr(f"element_at(map({pairs}), term)")
+    return f"element_at(map({pairs}), term)"
 
 
 @dataclass
@@ -127,7 +163,7 @@ class SearchContext:
     untallied: str | None = None
     # the live docs' id runs in doc id order when their id ranges are
     # disjoint (storage.rank_runs), else None: then (score desc, run rank,
-    # doc_id asc) ranks as (score desc, id asc) (top_doc_ids)
+    # doc_id asc) ranks as (score desc, id asc) (_top_doc_ids)
     id_runs: list | None = None
 
     def __post_init__(self):
@@ -168,13 +204,19 @@ class SearchContext:
         return {t: self._df_cache[(field, t)] for t in terms}
 
 
-def _idf_expr(df_col, n_col):
-    return F.log(1.0 + (n_col - df_col + 0.5) / (df_col + 0.5))
+def _idf(df: str, n) -> str:
+    return f"ln(((({_sql_double(n)} - {df}) + 0.5D) / ({df} + 0.5D)) + 1.0D)"
 
 
-def _bm25_expr(tf_col, dl_col, avgdl_col, df_col, n_col):
-    norm = scoring.K1 * (1.0 - scoring.B + scoring.B * dl_col / avgdl_col)
-    return _idf_expr(df_col, n_col) * (scoring.K1 + 1.0) * tf_col / (tf_col + norm)
+def _bm25(tf: str, idf: str, avgdl) -> str:
+    """scoring.bm25 over the ``norm_id`` column, operand for operand as
+    ``idf * (K1 + 1) * tf / (tf + K1 * (1 - B + B * dl / avgdl))``."""
+    B, K1 = scoring.B, scoring.K1
+    norm = (
+        f"((({_DECODE_NORM} * {_sql_double(B)}) / {_sql_double(avgdl)})"
+        f" + {_sql_double(1.0 - B)}) * {_sql_double(K1)}"
+    )
+    return f"(({idf} * {_sql_double(K1 + 1.0)}) * {tf}) / ({tf} + ({norm}))"
 
 
 def prime_stats_many(nodes: list, ctx: SearchContext) -> None:
@@ -218,12 +260,35 @@ def _collect_stat_keys(node: P.Query, per_field: dict) -> None:
     walk(node)
 
 
-def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
-    """Recursively compile to DataFrame[doc_id: long, score: double]."""
+def compile_plan(
+    node: P.Query, ctx: SearchContext, top: tuple | None = None
+) -> DataFrame:
+    """Compile ``node`` to one SQL text and run it: DataFrame[doc_id: long,
+    score: double]. ``top`` is ``(id runs, limit, offset)`` on a snapshot
+    with id runs: the same text then also ranks the hits (_top_doc_ids),
+    so a search is this one spark.sql call and its collect."""
+    frames: dict = {}
+    text = _sql(node, ctx, frames)
+    if top is not None:
+        text = _top_doc_ids(text, *top)
+    return _run(ctx, text, frames)
+
+
+def _run(ctx: SearchContext, text: str, frames: dict) -> DataFrame:
+    """ONE spark.sql call: the snapshot's tables and ``frames`` are bound
+    by name, each as a temporary view dropped when the call returns."""
+    return ctx.docs.sparkSession.sql(
+        text, postings=ctx.postings, docs=ctx.docs, **frames
+    )
+
+
+def _sql(node: P.Query, ctx: SearchContext, frames: dict) -> str:
+    """The SQL text of ``node``: a query with columns (doc_id, score), one
+    row per matching doc. ``frames`` collects the extra named frames."""
     if isinstance(node, P.All):
-        return ctx.docs.select("doc_id", F.lit(1.0).alias("score"))
+        return f"SELECT doc_id, 1.0D AS score FROM {_DOCS}"
     if isinstance(node, P.Empty):
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        return _EMPTY
     if isinstance(node, P.Term):
         return _term_or(node.field, {node.term: 1.0}, ctx)
     if isinstance(node, P.Phrase):
@@ -233,123 +298,93 @@ def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
     if isinstance(node, P.RegexPhrase):
         return _regex_phrase(node, ctx)
     if isinstance(node, P.FuzzyTerm):
-        return _fuzzy(node, ctx)
+        return _fuzzy(node, ctx, frames)
     if isinstance(node, P.Regex):
-        return _dict_expansion(
-            ctx, node.field,
-            F.col("term").rlike("^(?:" + node.pattern + ")$"),
-            cache_key=node,
+        return _expansion(
+            ctx, frames, node.field,
+            F.col("term").rlike("^(?:" + node.pattern + ")$"), cache_key=node,
         )
     if isinstance(node, P.Prefix):
-        return _dict_expansion(ctx, node.field, node.prefix, cache_key=node)
+        return _expansion(ctx, frames, node.field, node.prefix, cache_key=node)
     if isinstance(node, P.JsonRange):
-        from tantiny_spark.analysis.jsonpath import (
-            JSON_SEP, MARK_DATE, MARK_FLOAT, MARK_INT,
-        )
-
-        # the path's typed terms are contiguous dictionary slices
-        # (path SEP marker value); parse the value suffix and range-test it.
-        # startswith gates the substr/cast, so foreign terms never parse.
-        # date terms are epoch micros (< 2^53, exact in double).
-        if node.kind == "date":
-            prefixes = [f"{node.path}{JSON_SEP}{MARK_DATE}"]
-        else:
-            prefixes = [
-                f"{node.path}{JSON_SEP}{MARK_INT}",
-                f"{node.path}{JSON_SEP}{MARK_FLOAT}",
-            ]
-        num = F.col("term").substr(
-            F.lit(len(prefixes[0]) + 1), F.lit(64)
-        ).cast("double")
-        starts = F.col("term").startswith(prefixes[0])
-        for p in prefixes[1:]:
-            starts = starts | F.col("term").startswith(p)
-        pred = (
-            starts
-            & num.isNotNull()
-            & (num >= F.lit(node.low)) & (num <= F.lit(node.high))
-        )
-        return _dict_expansion(ctx, node.field, pred, cache_key=node)
+        return _json_range(node, ctx, frames)
     if isinstance(node, P.Range):
-        col = F.col(node.field)
-        return ctx.docs.where(col.isNotNull() & col.between(F.lit(node.low), F.lit(node.high))).select(
-            "doc_id", F.lit(1.0).alias("score")
+        col = _sql_name(node.field)
+        return (
+            f"SELECT doc_id, 1.0D AS score FROM {_DOCS} WHERE {col} IS NOT NULL"
+            f" AND {col} BETWEEN {_sql_value(node.low)} AND {_sql_value(node.high)}"
         )
     if isinstance(node, P.Facet):
         return _facet(node, ctx)
     if isinstance(node, P.TermSet):
         # literal IN predicate on the (field, term)-sorted postings layout:
         # pushes to the scan exactly like a dictionary range; constant 1.0,
-        # distinct because several set members can hit the same doc
-        return (
-            ctx.postings.where(
-                (F.col("field") == node.field) & _term_in(node.terms)
-            )
-            .select("doc_id")
-            .distinct()
-            .select("doc_id", F.lit(1.0).alias("score"))
-        )
+        # grouped because several set members can hit the same doc
+        return _matching(f"{_field_is(node.field)} AND {_term_in(node.terms)}")
     if isinstance(node, P.BooleanOccur):
-        return _boolean_occur(node, ctx)
+        return _boolean_occur(node, ctx, frames)
     if isinstance(node, P.Conjunction):
-        children = [compile_plan(c, ctx) for c in node.children]
-        out = children[0]
-        for i, child in enumerate(children[1:], start=1):
-            right = child.withColumnRenamed("score", f"score_{i}")
-            out = out.join(right, "doc_id").select(
-                "doc_id", (F.col("score") + F.col(f"score_{i}")).alias("score")
-            )
-        return out
+        children = [_sql(c, ctx, frames) for c in node.children]
+        total = " + ".join(f"c{i}.score" for i in range(len(children)))
+        return f"SELECT doc_id, {total} AS score FROM {_joined(children)}"
     if isinstance(node, P.Disjunction):
-        return _disjunction(node, ctx)
+        return _disjunction(node, ctx, frames)
     if isinstance(node, P.Negation):
-        matched = compile_plan(node.child, ctx)
-        return ctx.docs.join(matched, "doc_id", "left_anti").select(
-            "doc_id", F.lit(1.0).alias("score")
+        matched = _sql(node.child, ctx, frames)
+        return (
+            f"SELECT doc_id, 1.0D AS score FROM {_DOCS}"
+            f" LEFT ANTI JOIN ({matched}) m USING (doc_id)"
         )
     if isinstance(node, P.Boost):
-        child = compile_plan(node.child, ctx)
-        return child.select("doc_id", (F.col("score") * F.lit(node.factor)).alias("score"))
+        child = _sql(node.child, ctx, frames)
+        return (
+            f"SELECT doc_id, score * {_sql_double(node.factor)} AS score"
+            f" FROM ({child}) c"
+        )
     if isinstance(node, P.DisjunctionMax):
         # same single partial-aggregatable groupBy shape as Disjunction —
         # max and sum ride the one shuffle, then the tie-breaker combine is
         # a codegen'd Project (Lucene DisMax: max + tie * (sum - max))
-        children = [compile_plan(c, ctx) for c in node.children]
-        unioned = children[0]
-        for child in children[1:]:
-            unioned = unioned.unionByName(child)
+        union = _union([_sql(c, ctx, frames) for c in node.children])
+        tie = _sql_double(node.tie_breaker)
         return (
-            unioned.groupBy("doc_id")
-            .agg(F.max("score").alias("__mx"), F.sum("score").alias("__sm"))
-            .select(
-                "doc_id",
-                (
-                    F.col("__mx")
-                    + F.lit(node.tie_breaker) * (F.col("__sm") - F.col("__mx"))
-                ).alias("score"),
-            )
+            f"SELECT doc_id, max(score) + {tie} * (sum(score) - max(score))"
+            f" AS score FROM ({union}) u GROUP BY doc_id"
         )
     if isinstance(node, P.ConstScore):
-        child = compile_plan(node.child, ctx)
-        return child.select("doc_id", F.lit(node.score).alias("score"))
+        child = _sql(node.child, ctx, frames)
+        return f"SELECT doc_id, {_sql_double(node.score)} AS score FROM ({child}) c"
     if isinstance(node, P.Exists):
         if node.via_postings:
-            # ≥1 posting on the field proves existence; distinct is a
+            # ≥1 posting on the field proves existence; the grouping is a
             # partial-aggregatable groupBy on the (field)-pruned scan
-            return (
-                ctx.postings.where(F.col("field") == node.field)
-                .select("doc_id")
-                .distinct()
-                .select("doc_id", F.lit(1.0).alias("score"))
-            )
-        col = F.col(node.field)
-        return ctx.docs.where(col.isNotNull()).select(
-            "doc_id", F.lit(1.0).alias("score")
+            return _matching(_field_is(node.field))
+        return (
+            f"SELECT doc_id, 1.0D AS score FROM {_DOCS}"
+            f" WHERE {_sql_name(node.field)} IS NOT NULL"
         )
     raise TantinyError(f"Unknown plan node {type(node).__name__}")
 
 
-def _boolean_occur(node: P.BooleanOccur, ctx: SearchContext) -> DataFrame:
+def _matching(where: str) -> str:
+    """Constant 1.0 for each doc with a posting matching ``where``."""
+    return (
+        f"SELECT doc_id, 1.0D AS score FROM {_POSTINGS} WHERE {where}"
+        " GROUP BY doc_id"
+    )
+
+
+def _joined(texts: list) -> str:
+    """``texts`` as relations c0, c1, ... inner-joined on doc_id."""
+    joins = [f"({t}) c{i}" for i, t in enumerate(texts)]
+    return " JOIN ".join(joins[:1] + [f"{j} USING (doc_id)" for j in joins[1:]])
+
+
+def _union(texts: list) -> str:
+    return " UNION ALL ".join(f"({t})" for t in texts)
+
+
+def _boolean_occur(node: P.BooleanOccur, ctx: SearchContext, frames: dict) -> str:
     """Lucene BooleanQuery semantics (plan.BooleanOccur docstring). Plan
     shape: musts compose as score-summing inner joins (identical to
     Conjunction); shoulds as ONE union + partial-aggregatable sum groupBy
@@ -366,53 +401,43 @@ def _boolean_occur(node: P.BooleanOccur, ctx: SearchContext) -> DataFrame:
     base = None
     msm = node.minimum_should_match
     if node.must:
-        base = compile_plan(P.conjunction(*node.must), ctx)
+        base = _sql(P.conjunction(*node.must), ctx, frames)
     if node.should:
         if msm <= (1 if base is None else 0):
-            shoulds = compile_plan(P.disjunction(*node.should), ctx)
-            if base is None:
+            shoulds = _sql(P.disjunction(*node.should), ctx, frames)
+            if base is not None:
+                base = (
+                    "SELECT doc_id, b.score + coalesce(s.score, 0.0D) AS score"
+                    f" FROM ({base}) b LEFT JOIN ({shoulds}) s USING (doc_id)"
+                )
+            else:
                 base = shoulds
-            else:
-                extra = shoulds.withColumnRenamed("score", "__should")
-                base = base.join(extra, "doc_id", "left").select(
-                    "doc_id",
-                    (F.col("score")
-                     + F.coalesce(F.col("__should"), F.lit(0.0))
-                     ).alias("score"),
-                )
         else:
-            children = [compile_plan(c, ctx) for c in node.should]
-            unioned = children[0]
-            for child in children[1:]:
-                unioned = unioned.unionByName(child)
+            union = _union([_sql(c, ctx, frames) for c in node.should])
             hits = (
-                unioned.groupBy("doc_id")
-                .agg(
-                    F.sum("score").alias("__should"),
-                    F.count(F.lit(1)).alias("__n_should"),
-                )
-                .where(F.col("__n_should") >= F.lit(msm))
-                .select("doc_id", "__should")
+                f"SELECT doc_id, sum(score) AS score FROM ({union}) u"
+                f" GROUP BY doc_id HAVING count(1) >= {int(msm)}"
             )
-            if base is None:
-                base = hits.select(
-                    "doc_id", F.col("__should").alias("score")
+            if base is not None:
+                base = (
+                    "SELECT doc_id, b.score + s.score AS score"
+                    f" FROM ({base}) b JOIN ({hits}) s USING (doc_id)"
                 )
             else:
-                base = base.join(hits, "doc_id").select(
-                    "doc_id",
-                    (F.col("score") + F.col("__should")).alias("score"),
-                )
+                base = hits
     if base is None:
         # must_not only: pure negation over their disjunction
-        base = ctx.docs.select("doc_id", F.lit(1.0).alias("score"))
+        base = _sql(P.All(), ctx, frames)
     if node.must_not:
-        excluded = compile_plan(P.disjunction(*node.must_not), ctx)
-        base = base.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        excluded = _sql(P.disjunction(*node.must_not), ctx, frames)
+        base = (
+            f"SELECT doc_id, score FROM ({base}) b"
+            f" LEFT ANTI JOIN ({excluded}) x USING (doc_id)"
+        )
     return base
 
 
-def _disjunction(node: P.Disjunction, ctx: SearchContext) -> DataFrame:
+def _disjunction(node: P.Disjunction, ctx: SearchContext, frames: dict) -> str:
     """Sum of the matching children's scores: one union + partial-
     aggregatable sum groupBy. The (possibly boosted) Term children are
     gathered by field first; each field compiles to ONE pruned postings
@@ -429,111 +454,103 @@ def _disjunction(node: P.Disjunction, ctx: SearchContext) -> DataFrame:
             by_field.setdefault(inner.field, []).append((inner.term, factor))
         else:
             others.append(child)
-    parts = [compile_plan(c, ctx) for c in others]
+    parts = [_sql(c, ctx, frames) for c in others]
     for field, terms in by_field.items():
         weights: dict = {}
         for term, factor in terms:
             weights[term] = weights.get(term, 0.0) + factor
         parts.append(_term_or(field, weights, ctx))
-    unioned = parts[0]
-    for part in parts[1:]:
-        unioned = unioned.unionByName(part)
-    return unioned.groupBy("doc_id").agg(F.sum("score").alias("score"))
+    return (
+        f"SELECT doc_id, sum(score) AS score FROM ({_union(parts)}) u"
+        " GROUP BY doc_id"
+    )
 
 
-def _term_or(field: str, weights: dict, ctx: SearchContext) -> DataFrame:
+def _term_or(field: str, weights: dict, ctx: SearchContext) -> str:
     """One ``field = f AND term IN (...)`` postings scan; a single term is a
     plain term query (Spark plans a one-element IN as ``EqualTo``). Each row
     scores with tf = 1 (reference term queries read postings without freqs)
     and its term's df, times the term's weight: the sum of its boosts over
     its occurrences in the OR, so a duplicated term adds up exactly as
     separate children do. Dfs and weights enter as map literals (_by_term),
-    a lone term's too: Spark inlines a double literal into the generated
-    code but keeps a map literal as a reference, so a term query with
-    another df reuses the compiled class instead of compiling a new one."""
+    a lone term's too, so a term query with another df compiles no new
+    class."""
     n, avgdl = ctx.field_stats(field)
     terms = sorted(weights)
-    dfs = ctx.term_dfs(field, terms)
-    score = _bm25_expr(
-        F.lit(1.0), _decode_norm(),
-        F.lit(float(avgdl)), _by_term(dfs), F.lit(float(n)),
-    )
+    score = _bm25("1.0D", _idf(_by_term(ctx.term_dfs(field, terms)), n), avgdl)
     if any(w != 1.0 for w in weights.values()):
-        score = score * _by_term(weights)
-    return ctx.postings.where(
-        (F.col("field") == field) & _term_in(terms)
-    ).select("doc_id", score.alias("score"))
+        score = f"({score}) * {_by_term(weights)}"
+    return (
+        f"SELECT doc_id, {score} AS score FROM {_POSTINGS}"
+        f" WHERE {_field_is(field)} AND {_term_in(terms)}"
+    )
 
 
-def _phrase(node: P.Phrase, ctx: SearchContext) -> DataFrame:
+def _positions(field: str, terms: list, shift: int, i: int, per_doc=False) -> str:
+    """``pos_i``: the positions of ``field``'s postings of ``terms``,
+    shifted back by ``shift``, one row per posting (with its term and
+    norm_id), or ``per_doc`` flattened into one list per doc (one agg)."""
+    pos = f"transform(positions, x -> x - {int(shift)})"
+    scan = f"FROM {_POSTINGS} WHERE {_field_is(field)} AND {_term_in(terms)}"
+    if per_doc:
+        return (
+            f"SELECT doc_id, flatten(collect_list({pos})) AS pos_{i} {scan}"
+            " GROUP BY doc_id"
+        )
+    return f"SELECT doc_id, {pos} AS pos_{i}, term, norm_id {scan}"
+
+
+def _intersect(k: int) -> str:
+    """Positions present in every one of ``pos_0 .. pos_{k-1}``."""
+    inter = "pos_0"
+    for i in range(1, k):
+        inter = f"array_intersect({inter}, pos_{i})"
+    return inter
+
+
+def _phrase(node: P.Phrase, ctx: SearchContext) -> str:
     terms = list(node.terms)
     if not terms:
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        return _EMPTY
     n, avgdl = ctx.field_stats(node.field)
     dfs = ctx.term_dfs(node.field, sorted(set(terms)))
     # per-query doubles (a df, the summed idf) enter through a map keyed by
     # the first term's ``term`` column, kept for it: an inlined double
-    # literal would compile a new class per query (see _term_or)
+    # literal would compile a new class per query (see _by_term)
     if len(terms) == 1:
         # single-term phrase behaves as a term query with true tf
-        p = ctx.postings.where(
-            (F.col("field") == node.field) & (F.col("term") == terms[0])
-        ).select("doc_id", "term", "tf", "norm_id")
-        return p.select(
-            "doc_id",
-            _bm25_expr(
-                F.col("tf").cast("double"), _decode_norm(),
-                F.lit(float(avgdl)), _by_term({terms[0]: dfs[terms[0]]}),
-                F.lit(float(n)),
-            ).alias("score"),
+        idf = _idf(_by_term({terms[0]: dfs[terms[0]]}), n)
+        return (
+            f"SELECT doc_id, {_bm25('CAST(tf AS DOUBLE)', idf, avgdl)} AS score"
+            f" FROM {_POSTINGS} WHERE {_field_is(node.field)}"
+            f" AND {_term_in(terms[:1])}"
         )
 
     # k-way positional intersection: shift each term's positions back by its
     # offset; a phrase occurrence is a position present in every shifted list.
     slop = getattr(node, "slop", 0)
-    parts = []
-    for i, t in enumerate(terms):
-        shift = 0 if slop else i
-        part = (
-            ctx.postings.where((F.col("field") == node.field) & (F.col("term") == t))
-            .select(
-                "doc_id",
-                F.transform(F.col("positions"), lambda x: x - F.lit(shift)).alias(f"pos_{i}"),
-                *(["term", "norm_id"] if i == 0 else []),
-            )
-        )
-        parts.append(part)
-    joined = parts[0]
-    for i in range(1, len(parts)):
-        joined = joined.join(parts[i], "doc_id")
-    if slop:
-        joined = joined.select(
-            "doc_id", "term", "norm_id",
-            _slop_phrase_tf(len(terms), slop).alias("phrase_tf"),
-        ).where(F.col("phrase_tf") > 0)
-    else:
-        inter = F.col("pos_0")
-        for i in range(1, len(terms)):
-            inter = F.array_intersect(inter, F.col(f"pos_{i}"))
-        joined = joined.select(
-            "doc_id", "term", "norm_id", F.size(inter).alias("phrase_tf")
-        ).where(F.col("phrase_tf") > 0)
-
+    parts = [
+        _positions(node.field, [t], 0 if slop else i, i)
+        for i, t in enumerate(terms)
+    ]
+    tf = (
+        _slop_phrase_tf(len(terms), slop) if slop
+        else f"size({_intersect(len(terms))})"
+    )
     # summed idf over ALL phrase terms INCLUDING repeats (Tantivy's
     # Bm25Weight::for_terms sums per occurrence), phrase frequency as tf
     idf_sum = sum(scoring.idf(dfs[t], n) for t in terms)
-    tf = F.col("phrase_tf").cast("double")
-    norm = scoring.K1 * (
-        1.0 - scoring.B + scoring.B * _decode_norm() / F.lit(float(avgdl))
+    score = _bm25(
+        "CAST(phrase_tf AS DOUBLE)", _by_term({terms[0]: idf_sum}), avgdl
     )
-    return joined.select(
-        "doc_id",
-        (_by_term({terms[0]: idf_sum}) * (scoring.K1 + 1.0) * tf / (tf + norm))
-        .alias("score"),
+    return (
+        f"SELECT doc_id, {score} AS score FROM (SELECT doc_id, c0.term,"
+        f" c0.norm_id, {tf} AS phrase_tf FROM {_joined(parts)}) j"
+        " WHERE phrase_tf > 0"
     )
 
 
-def _slop_phrase_tf(n_terms: int, slop: int):
+def _slop_phrase_tf(n_terms: int, slop: int) -> str:
     """Ordered-gap slop over ``pos_0 .. pos_{n-1}`` array columns: a start
     s in pos_0 is a phrase occurrence when SOME chain completes — each
     next position falls in the window (prev, prev + 1 + slop] after ANY
@@ -551,28 +568,19 @@ def _slop_phrase_tf(n_terms: int, slop: int):
     a JVM array expression — no UDF, no explode. Returns the phrase-tf
     (count of starts with a completed chain)."""
 
-    def _window(p):
-        # single-arg lambda (a 2-arg callable would get (element, INDEX))
-        return lambda x: (x > p) & (x <= p + 1 + slop)
+    def window(p):
+        return f"x > {p} AND x <= {p} + 1 + {int(slop)}"
 
-    reach = F.transform(
-        F.col("pos_0"), lambda s: F.filter(F.col("pos_1"), _window(s))
-    )
+    reach = f"transform(pos_0, s -> filter(pos_1, x -> {window('s')}))"
     for i in range(2, n_terms):
-        pos_i = F.col(f"pos_{i}")
-        reach = F.transform(
-            reach,
-            lambda prev: F.filter(
-                pos_i,
-                lambda x: F.exists(
-                    prev, lambda p: (x > p) & (x <= p + 1 + slop)
-                ),
-            ),
+        reach = (
+            f"transform({reach}, prev -> filter(pos_{i},"
+            f" x -> exists(prev, p -> {window('p')})))"
         )
-    return F.size(F.filter(reach, lambda r: F.size(r) > 0))
+    return f"size(filter({reach}, r -> size(r) > 0))"
 
 
-def _regex_phrase(node: P.RegexPhrase, ctx: SearchContext) -> DataFrame:
+def _regex_phrase(node: P.RegexPhrase, ctx: SearchContext) -> str:
     """Tantivy RegexPhraseQuery (plan.RegexPhrase docstring): per position,
     the matching dictionary slice expands (capped, term-ordered — the
     fst-seek shape _phrase_prefix uses for its one expanding position,
@@ -581,7 +589,7 @@ def _regex_phrase(node: P.RegexPhrase, ctx: SearchContext) -> DataFrame:
     reachable-set slop DP runs over the unioned lists. Constant 1.0."""
     k = len(node.patterns)
     if k == 0:
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        return _EMPTY
     parts = []
     for i, pat in enumerate(node.patterns):
         exp = _first_terms(
@@ -589,35 +597,20 @@ def _regex_phrase(node: P.RegexPhrase, ctx: SearchContext) -> DataFrame:
             node.max_expansions,
         )
         if not exp:
-            return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-        shift = 0 if node.slop else i
+            return _EMPTY
         parts.append(
-            ctx.postings.where((F.col("field") == node.field) & _term_in(exp))
-            .select(
-                "doc_id",
-                F.transform(
-                    F.col("positions"), lambda x: x - F.lit(shift)
-                ).alias("__pe"),
-            )
-            .groupBy("doc_id")
-            .agg(F.flatten(F.collect_list("__pe")).alias(f"pos_{i}"))
+            _positions(node.field, exp, 0 if node.slop else i, i, per_doc=True)
         )
-    joined = parts[0]
-    for p in parts[1:]:
-        joined = joined.join(p, "doc_id")
     if k == 1:
-        cond = F.size("pos_0") > 0
+        cond = "size(pos_0) > 0"
     elif node.slop:
-        cond = _slop_phrase_tf(k, node.slop) > 0
+        cond = f"{_slop_phrase_tf(k, node.slop)} > 0"
     else:
-        inter = F.col("pos_0")
-        for i in range(1, k):
-            inter = F.array_intersect(inter, F.col(f"pos_{i}"))
-        cond = F.size(inter) > 0
-    return joined.where(cond).select("doc_id", F.lit(1.0).alias("score"))
+        cond = f"size({_intersect(k)}) > 0"
+    return f"SELECT doc_id, 1.0D AS score FROM {_joined(parts)} WHERE {cond}"
 
 
-def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
+def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> str:
     """Search-as-you-type: fixed terms adjacent, then ANY of the first
     ``max_expansions`` dictionary terms (term order) with the prefix at the
     next position. Constant score 1.0 like the other expansion queries.
@@ -629,36 +622,12 @@ def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
     k = len(node.terms)
     exp = _first_terms(ctx, node.field, node.prefix, node.max_expansions)
     if not exp:
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    parts = []
-    for i, t in enumerate(node.terms):
-        parts.append(
-            ctx.postings.where(
-                (F.col("field") == node.field) & (F.col("term") == t)
-            ).select(
-                "doc_id",
-                F.transform(F.col("positions"), lambda x: x - F.lit(i)).alias(f"pos_{i}"),
-            )
-        )
-    exp_part = (
-        ctx.postings.where((F.col("field") == node.field) & _term_in(exp))
-        .select(
-            "doc_id",
-            F.transform(F.col("positions"), lambda x: x - F.lit(k)).alias("__pe"),
-        )
-        .groupBy("doc_id")
-        .agg(F.flatten(F.collect_list("__pe")).alias(f"pos_{k}"))
-    )
-    joined = parts[0]
-    for p in parts[1:]:
-        joined = joined.join(p, "doc_id")
-    joined = joined.join(exp_part, "doc_id")
-    inter = F.col("pos_0")
-    for i in range(1, k + 1):
-        inter = F.array_intersect(inter, F.col(f"pos_{i}"))
+        return _EMPTY
+    parts = [_positions(node.field, [t], i, i) for i, t in enumerate(node.terms)]
+    parts.append(_positions(node.field, exp, k, k, per_doc=True))
     return (
-        joined.where(F.size(inter) > 0)
-        .select("doc_id", F.lit(1.0).alias("score"))
+        f"SELECT doc_id, 1.0D AS score FROM {_joined(parts)}"
+        f" WHERE size({_intersect(k + 1)}) > 0"
     )
 
 
@@ -710,6 +679,15 @@ def _capped_terms(ctx: SearchContext, field: str, match):
 def _dict_expansion(
     ctx: SearchContext, field: str, match, cache_key=None, refine=None,
 ) -> DataFrame:
+    """One expansion (_expansion) run on its own as DataFrame[doc_id, score]."""
+    frames: dict = {}
+    return _run(ctx, _expansion(ctx, frames, field, match, cache_key, refine), frames)
+
+
+def _expansion(
+    ctx: SearchContext, frames: dict, field: str, match, cache_key=None,
+    refine=None,
+) -> str:
     """Automaton-style queries (regex/prefix/fuzzy): enumerate matching
     dictionary terms, union their postings, constant score 1.0. ``match``
     is a prefix string, whose head the driver reads from the dict files,
@@ -724,7 +702,8 @@ def _dict_expansion(
     MAX_EXPANSION_LITERALS+1 raw rows detects overflow, and the fallback is
     a semi-join of the postings against the matched dictionary slice —
     fully distributed, no driver materialization (AQE picks broadcast vs
-    shuffle by actual size).
+    shuffle by actual size). The slice is the one frame the text binds
+    besides the snapshot's tables: its predicate is the head's Column.
 
     ``refine`` is ``(keep, column)`` when ``match`` only bounds a
     superset of the matches: the same exact test as a Python predicate,
@@ -750,31 +729,42 @@ def _dict_expansion(
             )
         if cache_key is not None:
             ctx._expansion_cache[cache_key] = matched
+    if not matched:
+        return _EMPTY
     if matched is not _OVERFLOW:
-        if not matched:
-            return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-        return (
-            ctx.postings.where((F.col("field") == field) & _term_in(matched))
-            .select("doc_id")
-            .distinct()
-            .select("doc_id", F.lit(1.0).alias("score"))
-        )
-    matched_df = (
-        ctx.dictionary.where(F.col("field") == field)
-        .where(exact())
-        .select("term")
-        .distinct()
+        return _matching(f"{_field_is(field)} AND {_term_in(matched)}")
+    name = f"slice{len(frames)}"
+    frames[name] = (
+        ctx.dictionary.where(F.col("field") == field).where(exact())
+        .select("term").distinct()
     )
     return (
-        ctx.postings.where(F.col("field") == field)
-        .join(matched_df, "term", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .select("doc_id", F.lit(1.0).alias("score"))
+        f"SELECT doc_id, 1.0D AS score FROM {_POSTINGS} LEFT SEMI JOIN {{{name}}}"
+        f" USING (term) WHERE {_field_is(field)} GROUP BY doc_id"
     )
 
 
-def _fuzzy(node: P.FuzzyTerm, ctx: SearchContext) -> DataFrame:
+def _json_range(node: P.JsonRange, ctx: SearchContext, frames: dict) -> str:
+    """The path's typed terms are contiguous dictionary slices (path SEP
+    marker value); parse the value suffix and range-test it. startswith
+    gates the substr/cast, so foreign terms never parse. Date terms are
+    epoch micros (< 2^53, exact in double)."""
+    from tantiny_spark.analysis.jsonpath import (
+        JSON_SEP, MARK_DATE, MARK_FLOAT, MARK_INT,
+    )
+
+    marks = [MARK_DATE] if node.kind == "date" else [MARK_INT, MARK_FLOAT]
+    prefixes = [f"{node.path}{JSON_SEP}{m}" for m in marks]
+    num = f"CAST(substr(term, {len(prefixes[0]) + 1}, 64) AS DOUBLE)"
+    starts = " OR ".join(f"startswith(term, {_sql_str(p)})" for p in prefixes)
+    pred = (
+        f"({starts}) AND {num} IS NOT NULL AND {num} >= {_sql_double(node.low)}"
+        f" AND {num} <= {_sql_double(node.high)}"
+    )
+    return _expansion(ctx, frames, node.field, F.expr(pred), cache_key=node)
+
+
+def _fuzzy(node: P.FuzzyTerm, ctx: SearchContext, frames: dict) -> str:
     """Levenshtein-with-transpositions (OSA) within ``distance``, matching
     FuzzyTermQuery::new(term, distance, true) (src/query.rs:58-77), with no
     Python worker on the usual path. Spark's builtin levenshtein() lacks
@@ -783,7 +773,7 @@ def _fuzzy(node: P.FuzzyTerm, ctx: SearchContext) -> DataFrame:
     are the length band AND ``levenshtein(term, q, 2d) >= 0`` (the
     thresholded form, -1 beyond 2d), a JVM-side superset of the answer.
     The exact OSA test then runs on the driver over the collected head
-    (_dict_expansion's ``refine``). Only when the candidates overflow the
+    (_expansion's ``refine``). Only when the candidates overflow the
     cap (a loose bound: at distance 2 it admits Levenshtein 4) does the
     OSA run as a vectorized pandas UDF, first in a capped head of the
     exact matches, then inside the semi-join if those overflow too.
@@ -798,8 +788,8 @@ def _fuzzy(node: P.FuzzyTerm, ctx: SearchContext) -> DataFrame:
     is within ``distance`` of the query's."""
     exact = _osa_prefix if node.prefix else _osa
     query, dist = node.term, node.distance
-    return _dict_expansion(
-        ctx, node.field, _fuzzy_candidates(query, dist, node.prefix),
+    return _expansion(
+        ctx, frames, node.field, _fuzzy_candidates(query, dist, node.prefix),
         cache_key=node,
         refine=(
             lambda t: exact(query, t) <= dist,
@@ -880,23 +870,22 @@ def _osa_prefix(a: str, b: str) -> int:
     return min(_osa_final_row(a, b))
 
 
-def _facet(node: P.Facet, ctx: SearchContext) -> DataFrame:
+def _facet(node: P.Facet, ctx: SearchContext) -> str:
     """Facet = term query on the facet field's ancestor postings with
     tf=1, dl=avgdl=1 ⇒ score = idf(df, N) (SURVEY.md §2.5 note on Basic),
-    a map literal keyed by ``term`` (no new class per idf, see _term_or)."""
+    a map literal keyed by ``term`` (no new class per idf, see _by_term)."""
     n, _ = ctx.field_stats(node.field)
     df = ctx.term_dfs(node.field, [node.path])[node.path]
-    p = ctx.postings.where(
-        (F.col("field") == node.field) & (F.col("term") == node.path)
-    )
-    return p.select(
-        "doc_id", _by_term({node.path: scoring.idf(df, n)}).alias("score")
+    return (
+        f"SELECT doc_id, {_by_term({node.path: scoring.idf(df, n)})} AS score"
+        f" FROM {_POSTINGS} WHERE {_field_is(node.field)}"
+        f" AND {_term_in([node.path])}"
     )
 
 
-def top_doc_ids(
-    result: DataFrame, runs: list, limit: int = 10, offset: int = 0
-) -> DataFrame:
+def _top_doc_ids(
+    text: str, runs: list, limit: int = 10, offset: int = 0
+) -> str:
     """top_k on a snapshot with id runs (SearchContext.id_runs): there
     (score desc, rank of the doc's run by id, doc_id asc) is (score desc,
     id asc), so the hits rank without the (doc_id, id) join, in ONE
@@ -904,21 +893,19 @@ def top_doc_ids(
     ranks DocAddresses. The run rank is a CASE over the runs' doc ranges,
     left out when the runs' doc order is their id order (one run, or ids
     appended in order). The caller reads the ``limit`` ids on the driver
-    (SegmentFiles.ids). Returns DataFrame[doc_id, score]."""
+    (SegmentFiles.ids). Wraps ``text``, keeping its (doc_id, score)."""
     by_id = sorted(range(len(runs)), key=lambda k: runs[k][2])
-    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    order = "score DESC, doc_id ASC"
     if by_id != sorted(by_id):
         rank = {k: r for r, k in enumerate(by_id)}
         cases = " ".join(
-            f"WHEN doc_id <= {runs[k][1]} THEN {rank[k]}"
+            f"WHEN doc_id <= {int(runs[k][1])} THEN {rank[k]}"
             for k in range(len(runs) - 1)
         )
         last = rank[len(runs) - 1]
-        order.insert(1, F.expr(f"CASE {cases} ELSE {last} END"))
-    out = result.orderBy(*order)
-    if offset:
-        out = out.offset(offset)
-    return out.limit(limit).select("doc_id", "score")
+        order = f"score DESC, CASE {cases} ELSE {last} END, doc_id ASC"
+    page = f" LIMIT {int(limit)}" + (f" OFFSET {int(offset)}" if offset else "")
+    return f"SELECT doc_id, score FROM ({text}) r ORDER BY {order}{page}"
 
 
 def top_k(

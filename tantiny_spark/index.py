@@ -27,9 +27,7 @@ from tantiny_spark.build import bm25_totals, build_segment, doc_aggregates
 from tantiny_spark.errors import (
     IndexWriterBusyError, UnexpectedNone, UnsupportedField,
 )
-from tantiny_spark.executor import (
-    compile_plan, prime_stats, top_doc_ids, top_k,
-)
+from tantiny_spark.executor import compile_plan, prime_stats, top_k
 from tantiny_spark.schema import SPARK_TYPES, IndexSchema
 from tantiny_spark.storage import IndexStorage, Snapshot
 
@@ -708,10 +706,11 @@ class Index:
     ) -> list:
         """search() with each hit's score: ``[(id, score), ...]``, the rows
         of search_df. On a snapshot with id runs (SearchContext.id_runs)
-        and without a cursor, the hits rank by (run, doc id) in ONE Spark
-        job (executor.top_doc_ids) and the driver then reads their ids from
-        the docs files, as Tantivy's TopDocs ranks DocAddresses and reads
-        the k stored ids; otherwise search_df's join-then-rank runs."""
+        and without a cursor, the query and its ranking by (run, doc id)
+        compile to ONE SQL text (compile_plan's ``top``), run as ONE Spark
+        job, and the driver then reads the hits' ids from the docs files,
+        as Tantivy's TopDocs ranks DocAddresses and reads the k stored
+        ids; otherwise search_df's join-then-rank runs."""
         if search_after is not None or self.ctx.id_runs is None:
             rows = self.search_df(
                 query, limit, offset, search_after, **smart_opts
@@ -722,9 +721,8 @@ class Index:
         rows = self._cached(
             lambda: ("__doc_ids__", query, tuple(sorted(smart_opts.items())),
                      limit, offset),
-            lambda: top_doc_ids(
-                self._compile(query, smart_opts), self.ctx.id_runs, limit,
-                offset,
+            lambda: self._compile(
+                query, smart_opts, top=(self.ctx.id_runs, limit, offset)
             ),
         ).collect()
         ids = self.ctx.files.ids([r["doc_id"] for r in rows])
@@ -1462,15 +1460,18 @@ class Index:
         return out
 
     # --- the compile step of every read --------------------------------------
-    def _compile(self, query, smart_opts: dict | None = None) -> DataFrame:
+    def _compile(
+        self, query, smart_opts: dict | None = None, top: tuple | None = None
+    ) -> DataFrame:
         """The one compile step of every Index read: ``query`` (a plan, or
         a string for a smart query over the text fields) → its plan → the
         global stats it needs, primed in one lookup per field → DataFrame
-        [doc_id, score]. Priming memoizes on the snapshot context, so a
-        plan whose stats are already primed starts no job here."""
+        [doc_id, score], ranked by ``top`` when given (compile_plan).
+        Priming memoizes on the snapshot context, so a plan whose stats
+        are already primed starts no job here."""
         plan = self._as_plan(query, smart_opts or {})
         prime_stats(plan, self.ctx)
-        return compile_plan(plan, self.ctx)
+        return compile_plan(plan, self.ctx, top)
 
     def _compile_many(self, queries: list) -> list:
         """:meth:`_compile` for a batch: the stats of every plan are primed

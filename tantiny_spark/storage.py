@@ -234,7 +234,7 @@ def rank_runs(entries: list) -> list | None:
     ...]``, doc id ranges whose ``doc_id`` order is their ``id`` order, in
     doc id order, when their id ranges are pairwise disjoint (else None):
     then ``id`` order is (run rank by id, ``doc_id``) order and hits rank
-    without the (doc_id, id) join (executor.top_doc_ids). A run that
+    without the (doc_id, id) join (executor._top_doc_ids). A run that
     follows the previous one in both orders is folded into it. A build
     writes one run (``doc_id = base + rank(id)``), a merge these runs (it
     keeps doc ids). An entry without runs (a null id, an older version)
@@ -352,15 +352,21 @@ class IndexStorage:
         stragglers (one job alone rarely fills the cluster, e.g. the
         postings range-sort runs at its data-sized partition count). Spark
         runs concurrent actions FIFO, which is exactly the back-fill
-        wanted; failures propagate out of pool.map. The ``dict`` is then
+        wanted; failures propagate out of pool.map. Each thread runs under
+        the caller's local properties (its job group, so a build's jobs
+        count in the caller's group). The ``dict`` is then
         derived from the freshly-written postings files (dict_table), never
         by re-running the build lineage, and written sorted by (field,
         term) for ``SegmentFiles``."""
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         name = name or f"seg-{uuid.uuid4().hex[:12]}"
         seg_dir = os.path.join(self.path, "segments", name)
+        spark = tables["postings"].sparkSession
 
+        @inheritable_thread_target(spark)
         def _run(tname):
             if tname == "stats":
                 return tables["stats"]()
@@ -368,7 +374,6 @@ class IndexStorage:
 
         with ThreadPoolExecutor(max_workers=3) as pool:
             *_, totals = pool.map(_run, ("docs", "postings", "stats"))
-        spark = tables["postings"].sparkSession
         stored = spark.read.schema(POSTINGS_SCHEMA).parquet(
             os.path.join(seg_dir, "postings")
         )

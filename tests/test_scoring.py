@@ -97,3 +97,16 @@ def test_fieldnorm_exactness_under_41_tokens(idx):
         nid = scoring.fieldnorm_to_id(length)
         assert scoring.id_to_fieldnorm(nid) <= length
         assert scoring.id_to_fieldnorm(min(nid + 1, 255)) >= scoring.id_to_fieldnorm(nid)
+
+
+def test_fieldnorm_decode_expression_matches_table(spark):
+    """The executor's integer SmallFloat decode of ``norm_id`` equals
+    scoring.FIELDNORM_TABLE on all 256 ids, evaluated by Spark."""
+    from tantiny_spark.executor import _DECODE_NORM
+
+    rows = spark.range(256).selectExpr("CAST(id AS INT) AS norm_id").selectExpr(
+        "norm_id", f"{_DECODE_NORM} AS dl"
+    ).collect()
+    assert sorted((r["norm_id"], r["dl"]) for r in rows) == [
+        (i, float(v)) for i, v in enumerate(scoring.FIELDNORM_TABLE)
+    ]
